@@ -20,6 +20,28 @@ DEFAULT_LIMIT = 100  # ref endpoint.py:164
 MAX_LIMIT = 1000  # clamp unless allow_get_all_pages (ref endpoint.py:210-211)
 
 
+class TableConfigError(ValueError):
+    """A table's config cannot serve what was asked of it. Carries the
+    table name (``'*'`` for a wildcard config) so a service can map the
+    failure to the endpoint it belongs to."""
+
+    def __init__(self, table: str, message: str):
+        super().__init__(f"table {table!r}: {message}")
+        self.table = table
+
+
+class WildcardUriError(TableConfigError):
+    """A wildcard table (``name='*'``) whose uri does not end in ``/*``."""
+
+
+class MissingSearchConfigError(TableConfigError):
+    """A search request on a table without a usable search config."""
+
+
+class MissingNearbyConfigError(TableConfigError):
+    """A nearby request on a table without a nearby config."""
+
+
 @dataclass
 class ParamConfig:
     """A declared query parameter (ref core/config.py:96-127)."""

@@ -2,11 +2,33 @@
 
 ``TableRegistry`` is the Spark analogue of the reference's startup route
 registration (core/route.py:16-142): each configured table becomes a
-lazily-read DataFrame (schema cached per table version, ref
-schema_cache.py) with the datasource defaults applied. ``compile_request``
-is the request-time pipeline (endpoint/endpoint.py:160-326): raw query
-params -> operator routing -> partition-pruning filters -> QueryRequest
--> DataFrame.
+lazily-read DataFrame with the datasource defaults applied.
+``compile_request`` is the request-time pipeline
+(endpoint/endpoint.py:160-326): raw query params -> operator routing ->
+partition-pruning filters -> QueryRequest -> DataFrame.
+
+Scan memo. Reading a table (``spark.read.parquet``) lists its files and
+runs a schema-inference job, ~0.1 s per call. The registry therefore
+keeps one resolved scan DataFrame per table, keyed by (name, config
+version, data version), and caches no data: every action still runs
+against the files the scan listed. The data version
+(``sources.fs.data_version``) is a few-ms metadata probe that changes
+whenever the reader's file listing would: newest mtime one level down,
+plus bytes, files and directories at any depth (of ``_delta_log`` for a
+delta table). So a table rewritten underneath the server is re-read by
+the next request — the reference's datamove semantics
+(tests/test_datamove.py:16-42, utils/meta_cache.py:46-58). Where the
+probe cannot stat the source (odbc/jdbc) the key is the config version
+alone, which is safe because those DataFrames re-query the remote side
+on every action; any other source the probe cannot stat (e.g. a glob
+uri) is read fresh per request. A miss evicts the table's stale entry;
+re-registering a table drops it. ``dataframe(name)``, ``schema(name)``
+and the BM25 index key all read the same entry; delta requests with
+log-stats predicates read their own per-request file subset and are
+never memoized.
+
+``create_views`` still freezes the SQL endpoint's temp views at the scan
+of registration time; refreshing them is out of the memo's scope.
 """
 
 from __future__ import annotations
@@ -16,13 +38,26 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from lakeapi_spark.config import TableConfig, clamp_limit, merge_config_from_data
+from lakeapi_spark.artifacts import cached_artifact, evict, versioned_artifact
+from lakeapi_spark.config import (
+    MissingNearbyConfigError,
+    MissingSearchConfigError,
+    TableConfig,
+    WildcardUriError,
+    clamp_limit,
+    merge_config_from_data,
+)
 from lakeapi_spark.operators.filters import split_param_postfix
 from lakeapi_spark.operators.partitioning import apply_partition_pruning
 from lakeapi_spark.operators.pipeline import QueryRequest, apply_query
 from lakeapi_spark.operators.nearby import nearby as nearby_op
 from lakeapi_spark.operators.search import search as search_op
 from lakeapi_spark.sources.readers import expand_wildcard, read_source
+
+#: sources whose DataFrames re-query the remote side on every action, so
+#: the config version alone may key their scan when the probe cannot
+#: stat them
+_REQUERY_TYPES = ("odbc", "jdbc")
 
 
 class UnknownTableError(KeyError):
@@ -44,7 +79,8 @@ class TableRegistry:
         self.accounts = accounts or {}
         self.data_path = data_path
         self._tables: dict[str, TableConfig] = {}
-        self._schema_cache: dict[tuple[str, int, int | None], T.StructType] = {}
+        #: (name, scan version, ()) -> scan DataFrame (module docstring)
+        self._scans: dict[tuple, DataFrame] = {}
 
     def _resolve_uri(self, cfg: TableConfig) -> str:
         """Normalize the configured uri to its Hadoop form and apply any
@@ -68,16 +104,22 @@ class TableRegistry:
             # relative and the carriers are checked with local os.path
             cfg = merge_config_from_data(cfg, resolved_uri=self._resolve_uri(cfg))
         if cfg.name == "*":
-            assert cfg.datasource.uri.endswith("/*")
-            for child_name, child_uri in expand_wildcard(self.spark, self._resolve_uri(cfg)):
-                import copy
+            if not cfg.datasource.uri.endswith("/*"):
+                raise WildcardUriError("*", f"wildcard uri {cfg.datasource.uri!r} must end with /*")
+            import copy
 
+            for child_name, child_uri in expand_wildcard(self.spark, self._resolve_uri(cfg)):
                 child = copy.deepcopy(cfg)
                 child.name = child_name
                 child.datasource.uri = child_uri
-                self._tables[child_name] = child
+                self._add(child)
             return
+        self._add(cfg)
+
+    def _add(self, cfg: TableConfig) -> None:
         self._tables[cfg.name] = cfg
+        # a replaced config may read differently at the same data version
+        evict(self._scans, cfg.name)
 
     def names(self) -> list[str]:
         return sorted(self._tables)
@@ -87,49 +129,74 @@ class TableRegistry:
             raise UnknownTableError(name)
         return self._tables[name]
 
+    def _read(self, cfg: TableConfig, uri: str, delta_predicates=None) -> DataFrame:
+        ds = cfg.datasource
+        return read_source(
+            self.spark, uri, ds.file_type, dict(ds.options), delta_predicates=delta_predicates
+        )
+
+    def _scan_version(self, cfg: TableConfig, uri: str) -> tuple | None:
+        """The memo version of the table's scan: (config version, data
+        version), the config version alone for a re-querying source the
+        probe cannot stat, or None when the scan must not be memoized.
+        A delta table is versioned by its log: data files a writer has
+        staged but not yet committed change nothing a reader sees."""
+        from py4j.protocol import Py4JJavaError
+
+        from lakeapi_spark.sources import fs
+
+        if cfg.datasource.file_type == "delta":
+            uri = f"{uri.rstrip('/')}/_delta_log"
+        try:
+            return (cfg.version, fs.data_version(self.spark, uri))
+        except (OSError, Py4JJavaError):  # missing path, unknown scheme, not a path
+            return (cfg.version,) if cfg.datasource.file_type in _REQUERY_TYPES else None
+
+    def scan(self, name: str) -> tuple[DataFrame, Any]:
+        """The table's unpredicated scan and the version it was read at,
+        from the memo (read once per version; module docstring). The
+        version is also the key of artifacts built from this scan, such
+        as the BM25 index."""
+        cfg = self.config(name)
+        uri = self._resolve_uri(cfg)
+        version = self._scan_version(cfg, uri)
+        if version is None:
+            return self._read(cfg, uri), (cfg.version,)
+        df = versioned_artifact(
+            self._scans, name, version, (), lambda: self._read(cfg, uri), lambda _df: None
+        )
+        return df, version
+
     def dataframe(
         self, name: str, delta_predicates: list[tuple] | None = None
     ) -> DataFrame:
-        """``delta_predicates``: closed-range boxes (from
-        ``predicates_from_filters``) that let a delta fallback table
-        skip whole files by LOG stats before Spark ever lists them —
-        the metadata layer of pruning, on top of Catalyst's
-        row-group/partition pruning. Results never change; only IO."""
-        cfg = self.config(name)
-        df = read_source(
-            self.spark,
-            self._resolve_uri(cfg),
-            cfg.datasource.file_type,
-            dict(cfg.datasource.options),
-            delta_predicates=delta_predicates,
-        )
-        return df
+        """The table's scan: the memoized one, or — given
+        ``delta_predicates``, closed-range boxes (from
+        ``predicates_from_filters``) that let a delta table skip whole
+        files by LOG stats before Spark ever lists them — a fresh read
+        of that file subset (the metadata layer of pruning, on top of
+        Catalyst's row-group/partition pruning). Results never change;
+        only IO."""
+        if delta_predicates:
+            cfg = self.config(name)
+            return self._read(cfg, self._resolve_uri(cfg), delta_predicates)
+        return self.scan(name)[0]
 
     def schema(self, name: str) -> T.StructType:
-        """Cached per (table, config version, DATA modified date). The
-        reference re-checks its cached delta meta incrementally on
-        every access (utils/meta_cache.py:46-58 update_incremental), so
-        a table rewritten underneath the server — its datamove test,
-        tests/test_datamove.py:16-42 — serves the NEW schema without a
-        restart. The modified-date probe is one FS listing per call
-        (the same freshness signal the BM25 index cache keys on);
-        non-filesystem sources (odbc/sqlite) fall back to the config
-        version only."""
-        from lakeapi_spark.sources.fs import latest_modification
-
+        """The schema of the memoized scan, so it follows the same
+        freshness contract: a table rewritten underneath the server with a
+        new column serves the new schema on the next call, without a
+        restart. A hit costs the data-version probe only; ``dataframe()``
+        runs only on a miss, to read the table at its new version."""
         cfg = self.config(name)
-        try:
-            mtime = latest_modification(self.spark, self._resolve_uri(cfg))
-        except Exception:
-            mtime = None
-        key = (name, cfg.version, mtime)
-        if key not in self._schema_cache:
-            for stale in [k for k in self._schema_cache if k[0] == name and k != key]:
-                self._schema_cache.pop(stale)
-            self._schema_cache[key] = self.dataframe(name).schema
-        return self._schema_cache[key]
+        uri = self._resolve_uri(cfg)
+        version = self._scan_version(cfg, uri)
+        df = None if version is None else cached_artifact(self._scans, name, version, ())
+        return (df if df is not None else self.dataframe(name)).schema
 
     def create_views(self) -> None:
+        """Temp views for the SQL endpoint over each table's current scan;
+        they stay at that scan until called again."""
         for name in self._tables:
             self.dataframe(name).createOrReplaceTempView(name)
 
@@ -189,7 +256,14 @@ def compile_request(
         # a bigint column) and date/timestamp stats are isoformat
         # strings — coercion per the table type keeps skipping sound
         delta_preds = predicates_from_filters(filters, registry.schema(name)) or None
-    df = registry.dataframe(name, delta_predicates=delta_preds)
+    full = version = None
+    if delta_preds:
+        df = registry.dataframe(name, delta_predicates=delta_preds)
+    else:
+        # the memoized scan; a BM25 request scores against the index of
+        # this same version, so its rows and scores never straddle a rewrite
+        full, version = registry.scan(name)
+        df = full
 
     # derived partition pruning (§2.12) before the logical filters
     if ds.partition_columns:
@@ -224,7 +298,8 @@ def compile_request(
         # (endpoint.py:295-301, endpoint_search.py:56-59), so scoring and
         # score-ordering apply BEFORE paging. Compile the request without
         # sort/paging, score, then page the scored result.
-        assert cfg.search, f"table {name} has no search config"
+        if not cfg.search:
+            raise MissingSearchConfigError(name, "has no search config")
         req.sortby, req.limit, req.offset = [], None, None
         out = apply_query(df, req)
         sc = cfg.search[0]
@@ -235,19 +310,15 @@ def compile_request(
             # change corpus statistics), scores broadcast-join onto the
             # filtered request. Inner join == the reference's
             # `score IS NOT NULL` drop of non-matching rows.
-            assert sc.id_column, "bm25 search requires SearchConfig.id_column"
+            if not sc.id_column:
+                raise MissingSearchConfigError(name, "bm25 search requires SearchConfig.id_column")
             from pyspark.sql import functions as F
 
             from lakeapi_spark.operators.search import bm25_index_for, bm25_scores
 
-            full = registry.dataframe(name)
+            if full is None:
+                full, version = registry.scan(name)
             text = F.concat_ws(" ", *[F.col(c) for c in sc.columns])
-            try:
-                from lakeapi_spark.sources.fs import latest_modification
-
-                version = latest_modification(registry.spark, ds.uri)
-            except Exception:  # non-file sources: key by config version
-                version = cfg.version
             idx = bm25_index_for(
                 full.select(F.col(sc.id_column), text.alias("__text")),
                 sc.id_column,
@@ -284,7 +355,8 @@ def compile_request(
         # Nearby stays AFTER paging: the reference wraps the already-limited
         # query in a CTE and applies distance filter/order outside it
         # (endpoint_nearby.py:66-79).
-        assert cfg.nearby, f"table {name} has no nearby config"
+        if not cfg.nearby:
+            raise MissingNearbyConfigError(name, "has no nearby config")
         lat, lon, dist = nearby_point
         nb = cfg.nearby[0]
         out = nearby_op(out, nb.lat_col, nb.lon_col, lat, lon, dist, dist_name=nb.name)

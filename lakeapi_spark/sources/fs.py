@@ -70,3 +70,19 @@ def latest_modification(spark: SparkSession, uri: str) -> int:
         for child in fs.listStatus(path):
             newest = max(newest, child.getModificationTime())
     return newest
+
+
+def data_version(spark: SparkSession, uri: str) -> tuple[int, int, int, int]:
+    """A version stamp of the data under ``uri`` that changes whenever a
+    reader's file listing would: ``(newest mtime one level down, bytes,
+    file count, directory count)``, the last three at any depth from
+    ``FileSystem.getContentSummary``. The mtime alone misses a file added
+    two levels down (``a=1/b=2/``), which only bumps its own directory;
+    the summary catches it. A same-size, same-name in-place rewrite
+    deeper than one level is the one change neither sees. Costs a few
+    metadata calls (a few ms locally), against a full listing plus a
+    schema-inference job for re-reading the table."""
+    newest = latest_modification(spark, uri)
+    fs, path = _fs_and_path(spark, uri)
+    summary = fs.getContentSummary(path)
+    return newest, summary.getLength(), summary.getFileCount(), summary.getDirectoryCount()

@@ -186,8 +186,11 @@ def expand_wildcard(spark: SparkSession, uri: str) -> list[tuple[str, str]]:
     FileSystem API (sources/fs.py) so the same config works on local
     disk and object stores — the 100 TB deployment target — not just
     ``os.listdir``. Returns [(table_name, child_uri)]."""
-    assert uri.endswith("/*"), "wildcard uri must end with /*"
+    from lakeapi_spark.config import WildcardUriError
     from lakeapi_spark.sources.fs import list_children
+
+    if not uri.endswith("/*"):
+        raise WildcardUriError("*", f"wildcard uri {uri!r} must end with /*")
 
     out = []
     for path, is_dir, _mtime in list_children(spark, uri[:-2]):

@@ -569,3 +569,22 @@ def test_registry_no_unbounded_global_windows(spark, sf_dir):
         if not _unbounded_global_windows(QUERIES[n].build(spark, sf_dir))
     )
     assert not stale, f"allowlist entries no longer needed: {stale}"
+
+
+def test_request_validation_uses_no_assert():
+    """Request and config validation raises typed errors: ``python -O``
+    strips ``assert`` statements, so a bad request would otherwise fail
+    deep inside Spark. No ``assert`` may appear in the serving core."""
+    import ast
+    import pathlib
+
+    import lakeapi_spark
+
+    root = pathlib.Path(lakeapi_spark.__file__).parent
+    offenders = [
+        f"{rel}:{node.lineno}"
+        for rel in ("registry.py", "sources/readers.py")
+        for node in ast.walk(ast.parse((root / rel).read_text()))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not offenders, f"assert statements validate input: {offenders}"

@@ -422,6 +422,269 @@ def test_schema_refreshes_after_data_rewrite(spark, tmp_path):
     assert [f.name for f in s2.fields] == ["id", "name", "score"]
 
 
+def _ids(payload: bytes, col: str = "id") -> list:
+    import json
+
+    return sorted(json.loads(ln)[col] for ln in payload.decode().splitlines() if ln)
+
+
+def test_memo_serves_new_rows_after_single_file_overwrite(spark, tmp_path):
+    """A single-file parquet table overwritten in place, with one more
+    row and a new column, serves the new rows on the next request."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeapi_spark.registry import serve_request
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    reg = TableRegistry(spark)
+    reg.register(TableConfig(name="one", datasource=DatasourceConfig(uri=path)))
+    assert _ids(serve_request(reg, "one", fmt="ndjson")) == [1, 2]
+    pq.write_table(pa.table({"id": [1, 2, 3], "tag": ["a", "b", "c"]}), path)
+    rows = [json.loads(ln) for ln in serve_request(reg, "one", fmt="ndjson").splitlines()]
+    assert sorted(rows, key=lambda r: r["id"]) == [
+        {"id": 1, "tag": "a"}, {"id": 2, "tag": "b"}, {"id": 3, "tag": "c"}
+    ]
+
+
+def test_memo_serves_file_added_two_partition_levels_down(spark, tmp_path):
+    """A file added inside ``a=1/b=2/`` bumps only that directory's
+    mtime, which the one-level mtime probe does not see; the content
+    summary half of the data version does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeapi_spark.registry import serve_request
+    from lakeapi_spark.sources.fs import latest_modification
+
+    path = str(tmp_path / "parted")
+    spark.createDataFrame([(1, 1, 2)], ["id", "a", "b"]).write.partitionBy("a", "b").parquet(path)
+    reg = TableRegistry(spark)
+    reg.register(TableConfig(name="parted", datasource=DatasourceConfig(uri=path)))
+    assert _ids(serve_request(reg, "parted", fmt="ndjson")) == [1]
+    mtime = latest_modification(spark, path)
+    pq.write_table(pa.table({"id": [7]}), f"{path}/a=1/b=2/extra.parquet")
+    assert latest_modification(spark, path) == mtime
+    assert _ids(serve_request(reg, "parted", fmt="ndjson")) == [1, 7]
+
+
+def test_memo_serves_rows_of_a_delta_append(spark, tmp_path):
+    from lakeapi_spark.registry import serve_request
+    from lakeapi_spark.sources.delta import write_delta
+
+    path = str(tmp_path / "appended")
+    write_delta(spark.createDataFrame([(1,)], ["id"]), path)
+    reg = TableRegistry(spark)
+    reg.register(
+        TableConfig(name="appended", datasource=DatasourceConfig(uri=path, file_type="delta"))
+    )
+    assert _ids(serve_request(reg, "appended", fmt="ndjson")) == [1]
+    write_delta(spark.createDataFrame([(2,)], ["id"]), path, mode="append")
+    assert _ids(serve_request(reg, "appended", fmt="ndjson")) == [1, 2]
+
+
+def test_repeated_request_on_unchanged_table_runs_only_its_action(spark, sf_dir):
+    """The memo skips the re-read: no file listing job, no schema
+    inference job — the request's one Spark job is its action."""
+    import json
+
+    from lakeapi_spark.registry import serve_request
+
+    reg = TableRegistry(spark)
+    reg.register(
+        TableConfig(
+            name="nation",
+            datasource=DatasourceConfig(uri=f"{sf_dir}/nation.parquet"),
+            params=[ParamConfig(name="n_nationkey")],
+        )
+    )
+    serve_request(reg, "nation", {"n_nationkey": 3})  # warms the memo
+    sc = spark.sparkContext
+    group = "memo-one-job"
+    sc.setJobGroup(group, "repeated request")
+    try:
+        out = serve_request(reg, "nation", {"n_nationkey": 4})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["n_nationkey"] for r in json.loads(out)] == [4]
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    listed = jsc.statusStore().jobsList(None)  # a Scala Seq
+    jobs = [j for j in (listed.apply(i) for i in range(listed.size()))
+            if j.jobGroup().isDefined() and j.jobGroup().get() == group]
+    assert len(jobs) == 1
+
+
+def test_bm25_index_refreshes_for_data_path_relative_uri(spark, tmp_path):
+    """The index is keyed by the memo's data version, probed at the
+    RESOLVED uri: a data_path-relative BM25 table rewritten with a new
+    doc finds it on the next search. The rewrite comes from outside the
+    session (pyarrow), as a data move does: a Spark overwrite in the same
+    session would recache the old index's lineage by itself."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.operators.search import _BM25_CACHE
+
+    (tmp_path / "docs").mkdir()
+
+    def write(rows):
+        ids, texts = zip(*rows)
+        pq.write_table(pa.table({"doc_id": list(ids), "text": list(texts)}),
+                       str(tmp_path / "docs" / "part-0.parquet"))
+
+    write([(1, "spark window"), (2, "delta log")])
+    reg = TableRegistry(spark, data_path=str(tmp_path))
+    reg.register(
+        TableConfig(
+            name="rel_docs",
+            datasource=DatasourceConfig(uri="docs"),
+            search=[SearchConfig("text", ["text"], "bm25", "doc_id")],
+        )
+    )
+    try:
+        hits = compile_request(reg, "rel_docs", {}, search_text="spark").collect()
+        assert [r.doc_id for r in hits] == [1]
+        write([(1, "spark window"), (2, "delta log"), (3, "zebra spark")])
+        hits = compile_request(reg, "rel_docs", {}, search_text="zebra").collect()
+        assert [r.doc_id for r in hits] == [3]
+    finally:
+        for k in [k for k in _BM25_CACHE if k[0].startswith("search:rel_docs:")]:
+            _BM25_CACHE.pop(k).unpersist()
+
+
+def test_concurrent_requests_during_rewrite(spark, sf_dir, tmp_path, monkeypatch):
+    """4 clients serve two tables while a fifth thread rewrites one of
+    them: no call raises, every reply is the old or the new version,
+    and the BM25 index is built once per version."""
+    import sys
+    import threading
+
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.operators import search
+    from lakeapi_spark.operators.search import _BM25_CACHE
+    from lakeapi_spark.registry import serve_request
+    from lakeapi_spark.sources.delta import write_delta
+
+    path = str(tmp_path / "live_docs")
+    old = [(1, "alpha one"), (2, "alpha two"), (3, "beta")]
+    new = [(4, "alpha four"), (5, "gamma"), (6, "alpha six"), (7, "alpha seven")]
+    write_delta(spark.createDataFrame(old, ["doc_id", "text"]), path)
+    reg = TableRegistry(spark)
+    reg.register(
+        TableConfig(
+            name="live_docs",
+            datasource=DatasourceConfig(uri=path, file_type="delta"),
+            search=[SearchConfig("text", ["text"], "bm25", "doc_id")],
+        )
+    )
+    reg.register(
+        TableConfig(
+            name="nation",
+            datasource=DatasourceConfig(uri=f"{sf_dir}/nation.parquet"),
+            params=[ParamConfig(name="n_nationkey")],
+        )
+    )
+    builds = []
+    build = search.build_bm25_index
+
+    def counting_build(df, id_col, text_col):
+        builds.append(1)
+        return build(df, id_col, text_col)
+
+    monkeypatch.setattr(search, "build_bm25_index", counting_build)
+    expected = {(1, 2), (4, 6, 7)}
+    nation = serve_request(reg, "nation", {"n_nationkey": 5})
+    replies, errors = [], []
+    start = threading.Barrier(5)
+
+    def client(i):
+        try:
+            start.wait()
+            for j in range(4):
+                if (i + j) % 2:
+                    out = serve_request(reg, "live_docs", search_text="alpha", fmt="ndjson")
+                    replies.append(tuple(_ids(out, "doc_id")))
+                else:
+                    assert serve_request(reg, "nation", {"n_nationkey": 5}) == nation
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    def writer():
+        try:
+            start.wait()
+            write_delta(spark.createDataFrame(new, ["doc_id", "text"]), path, mode="overwrite")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # more thread switches inside the memo
+    try:
+        threads = [threading.Thread(target=client, args=(i,)) for i in range(4)]
+        threads.append(threading.Thread(target=writer))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert replies and set(replies) <= expected
+        last = serve_request(reg, "live_docs", search_text="alpha", fmt="ndjson")
+        assert tuple(_ids(last, "doc_id")) == (4, 6, 7)
+        assert len(builds) == len(set(replies) | {(4, 6, 7)})
+    finally:
+        sys.setswitchinterval(switch)
+        for k in [k for k in _BM25_CACHE if k[0].startswith("search:live_docs:")]:
+            _BM25_CACHE.pop(k).unpersist()
+
+
+def test_typed_config_errors_name_the_table(spark, sf_dir):
+    """Config and request validation raises TableConfigError subclasses
+    (ValueError) carrying the table name, never ``assert`` — which
+    ``python -O`` strips."""
+    from lakeapi_spark.config import (
+        MissingNearbyConfigError,
+        MissingSearchConfigError,
+        NearbyConfig,
+        SearchConfig,
+        TableConfigError,
+        WildcardUriError,
+    )
+    from lakeapi_spark.sources.readers import expand_wildcard
+
+    reg = TableRegistry(spark)
+    with pytest.raises(WildcardUriError) as exc:
+        reg.register(TableConfig(name="*", datasource=DatasourceConfig(uri=sf_dir)))
+    assert exc.value.table == "*" and isinstance(exc.value, ValueError)
+    with pytest.raises(WildcardUriError):
+        expand_wildcard(spark, sf_dir)
+
+    uri = f"{sf_dir}/part.parquet"
+    reg.register(TableConfig(name="plain", datasource=DatasourceConfig(uri=uri)))
+    reg.register(
+        TableConfig(
+            name="no_id",
+            datasource=DatasourceConfig(uri=uri),
+            search=[SearchConfig("name", ["p_name"], "bm25")],
+            nearby=[NearbyConfig("near", "p_size", "p_retailprice")],
+        )
+    )
+    cases = [
+        (MissingSearchConfigError, "plain", {"search_text": "green"}),
+        (MissingSearchConfigError, "no_id", {"search_text": "green"}),
+        (MissingNearbyConfigError, "plain", {"nearby_point": (1.0, 2.0, 3.0)}),
+    ]
+    for err, table, kwargs in cases:
+        with pytest.raises(err) as exc:
+            compile_request(reg, table, {}, **kwargs)
+        assert isinstance(exc.value, TableConfigError) and exc.value.table == table
+        assert repr(table) in str(exc.value)
+
+
 def test_compile_request_delta_log_stats_skipping(spark, tmp_path):
     """A served DELTA table skips whole files by LOG stats derived from
     the request's AND filters — metadata pruning above Catalyst. Same
