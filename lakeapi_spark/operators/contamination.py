@@ -35,30 +35,6 @@ from lakeapi_spark.operators.scale import TEXT_TASK_BYTES, fan_out
 from lakeapi_spark.operators.text import tokens
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Distinct word n-grams of ``text`` (space-joined token windows),
-    empty array when the doc has fewer than ``n`` tokens. Pure
-    whole-stage-codegen expressions — no UDF, no shuffle.
-
-    PERF TRAP: ``text`` here should be an already-projected TOKEN-cheap
-    column. Because the token array is an anonymous subexpression, the
-    per-gram ``slice`` re-evaluates it — handing a raw text column
-    straight in re-runs trim/lower/split per gram per doc (measured 27x
-    slower than the staged shape at sf0.1). The DataFrame-level
-    :func:`_doc_grams` stages the token array in its own projection
-    first; use that for anything hot. (Gram spelling is
-    ``array_join(slice(t, i, n))`` — measured ~10% cheaper than n
-    ``element_at`` concats at sf0.1, byte-identical output.)"""
-    t = tokens(text)
-    grams = F.when(F.size(t) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - n + 1),
-            lambda i: F.array_join(F.slice(t, i, n), " "),
-        )
-    )
-    return F.array_distinct(grams)
-
-
 def _doc_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, g): one row per DISTINCT word n-gram per doc (set
     semantics; sampling.dsir_importance builds its own occurrence-kept

@@ -78,17 +78,6 @@ def exact_dedup_keepers(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def word_bigrams(text: Column) -> Column:
-    """Adjacent-word shingles; [] for texts under 2 tokens."""
-    t = tokens(text)
-    return F.when(F.size(t) < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat_ws(" ", F.element_at(t, i + 1), F.element_at(t, i + 2)),
-        )
-    )
-
-
 def doc_shingles(
     df: DataFrame,
     id_col: str,

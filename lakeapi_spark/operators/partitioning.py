@@ -51,18 +51,6 @@ def plain_prefix(value: Any, n: int) -> str:
 _DERIVERS = {"md5_prefix": md5_prefix, "md5_mod": md5_mod, "prefix": plain_prefix}
 
 
-def derive_partition_values(partition_col: str, values: list[Any]) -> tuple[str, list[str]] | None:
-    """If ``partition_col`` is a derived column (``base_md5_prefix_2`` ...),
-    map logical values to partition values. Returns (base_col, derived_values)
-    or None for a direct partition column."""
-    m = _DERIVED_RE.match(partition_col)
-    if not m:
-        return None
-    fn = _DERIVERS[m.group("kind")]
-    n = int(m.group("n"))
-    return m.group("base"), [fn(v, n) for v in values]
-
-
 def partition_pruning_filters(
     partition_cols: list[str],
     filters: list[tuple[str, str, Any]],

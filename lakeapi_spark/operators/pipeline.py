@@ -310,16 +310,3 @@ def ranked_topk(
         raise ValueError(f"k must be positive: {k}")
     top = df.orderBy(*order).limit(k)
     return top.withColumn(rank_col, F.row_number().over(Window.orderBy(*order)))
-
-
-def row_number_paged(
-    df: DataFrame, order: list[tuple[str, str]], limit: int, offset: int
-) -> DataFrame:
-    """Window-based paging fallback (pre-Spark-3.4 semantics); also the
-    shape to use when paging must be stable across repeated queries."""
-    w = Window.orderBy(*_sort_cols(order))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") > offset) & (F.col("__rn") <= offset + limit))
-        .drop("__rn")
-    )

@@ -377,17 +377,14 @@ def serve_request(
     after compiling a request (core/response.py:87-170,315-352):
     bounded results serialize to whole ``bytes``; an UNBOUNDED request
     (``limit=-1`` on an ``allow_get_all_pages`` table) returns a chunk
-    ITERATOR via :func:`lakeapi_spark.serialize.stream_serialize`, so a
-    full-table export never materializes on the driver — exactly the
-    reference's temp-file chunk streaming, Spark-shaped. Formats that
-    need a seekable whole-file sink (arrow file, xlsx, html, xml) stay
-    whole-bytes in either case."""
+    ITERATOR via :func:`lakeapi_spark.serialize.stream_serialize`, in
+    any format, so a full-table export never materializes on the
+    driver — the reference's temp-file chunk streaming, Spark-shaped."""
     from lakeapi_spark import serialize as ser
 
     df = compile_request(registry, name, params, **kwargs)
     cfg = registry.config(name)
-    unbounded = clamp_limit(kwargs.get("limit"), cfg.allow_get_all_pages) is None
-    if unbounded and fmt not in ("arrow", "xlsx", "html", "xml"):
+    if clamp_limit(kwargs.get("limit"), cfg.allow_get_all_pages) is None:
         return ser.stream_serialize(
             df, fmt, csv_separator=csv_separator, encoding=encoding
         )

@@ -4,13 +4,23 @@ The reference serializes Arrow to ~13 formats (core/response.py:87-170,
 context/df_base.py:120-181): json, ndjson, csv, scsv (';'), csv4excel
 (utf-16-le with a ``sep=,`` preamble), xlsx, html, xml, parquet,
 arrow/feather file, arrow-stream, with custom ``$csv_separator`` and
-``$encoding``. That code is engine-agnostic — here it consumes
-``df.toArrow()`` (small results) or ``df.toLocalIterator``-fed batches
-(large exports) on the driver, exactly where the reference's
-chunk-streaming sat.
+``$encoding``.
+
+Every format has ONE writer, :func:`_encode`, which turns an iterator of
+Arrow record batches into byte chunks. It is fed by two batch sources:
+
+- :func:`serialize` (bounded, already limited/paged results):
+  ``df.toArrow()`` on the driver, encoded and joined into ``bytes``;
+- :func:`stream_serialize` (unbounded exports): :func:`_spilled_batches`,
+  the executors' parquet spill read back one batch at a time, so driver
+  memory stays one batch — the reference's temp-file chunk streaming
+  (core/response.py:315-352).
+
+Both sources yield at least one batch (a zero-row batch carrying the
+schema for an empty result), so headers and schemas survive.
 
 xlsx is a minimal stdlib SpreadsheetML writer (zipfile + escaped XML,
-:func:`_xlsx_bytes`) — no openpyxl/xlsxwriter needed, closing the
+:class:`_XlsxWriter`) — no openpyxl/xlsxwriter needed, closing the
 reference's optional-dependency gate (response.py:118-124).
 """
 
@@ -18,12 +28,11 @@ from __future__ import annotations
 
 import io
 import json
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pyarrow as pa
 import pyarrow.csv as pacsv
-import pyarrow.feather as feather
 import pyarrow.ipc as ipc
 import pyarrow.parquet as papq
 from pyspark.sql import DataFrame
@@ -42,6 +51,10 @@ FORMATS = (
     "xlsx",
 )
 
+#: rows per Arrow batch (the reference's default_chunk_size,
+#: core/config.py:78)
+CHUNK_ROWS = 10000
+
 
 def _json_default(v: Any):
     if hasattr(v, "isoformat"):
@@ -51,89 +64,193 @@ def _json_default(v: Any):
     return str(v)
 
 
-def _arrow_batches(df: DataFrame, chunk_size: int = 10000) -> Iterator[pa.RecordBatch]:
-    """Stream the result as Arrow batches (chunk size mirrors the
-    reference's default_chunk_size=10000, core/config.py:78)."""
-    tab = df.toArrow()
-    yield from tab.to_batches(max_chunksize=chunk_size)
+def _empty_batch(schema: pa.Schema) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pylist([], schema=schema)
 
 
 def serialize(df: DataFrame, fmt: str, *, csv_separator: str = ",", encoding: str | None = None) -> bytes:
-    """Serialize a (already limited/paged) result to bytes."""
+    """Serialize a bounded (already limited/paged) result to bytes."""
     tab = df.toArrow()
+    batches = tab.to_batches(max_chunksize=CHUNK_ROWS) or [_empty_batch(tab.schema)]
+    return b"".join(_encode(batches, fmt, csv_separator, encoding))
+
+
+def stream_serialize(
+    df: DataFrame,
+    fmt: str,
+    *,
+    csv_separator: str = ",",
+    encoding: str | None = None,
+    chunk_size: int = CHUNK_ROWS,
+) -> Iterator[bytes]:
+    """Chunked serialization for unbounded (``limit=-1``) exports: the
+    same writer as :func:`serialize`, fed from the parquet spill, so
+    driver memory is bounded by one Arrow batch of ``chunk_size`` rows
+    plus its encoded chunk."""
+    return _encode(_spilled_batches(df, chunk_size), fmt, csv_separator, encoding)
+
+
+def _spilled_batches(df: DataFrame, chunk_size: int = CHUNK_ROWS) -> Iterator[pa.RecordBatch]:
+    """Memory-bounded Arrow batches for LARGE exports: the executors
+    write the result to a temp parquet spill in parallel (no driver
+    materialization — ``toArrow()`` would buffer the whole result), then
+    the driver streams it back one record batch at a time. This is the
+    Spark analogue of the reference's NamedTemporaryFile spill-stream
+    (core/response.py:315-352); on a real cluster the spill dir would be
+    shared storage and the parallel write is exactly a sink write.
+
+    Each batch is cast to the schema ``toArrow()`` would give, so both
+    batch sources encode identically. Spark writes timestamps as INT96
+    by default; they are read back at µs and the cast restores the UTC
+    zone, leaving the session's parquet conf untouched."""
+    import glob
+    import shutil
+    import tempfile
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
+    tmp = tempfile.mkdtemp(prefix="lakeapi_export_")
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+        yielded = False
+        for f in sorted(glob.glob(f"{tmp}/part-*.parquet")):
+            pf = papq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+            for batch in pf.iter_batches(batch_size=chunk_size):
+                yielded = True
+                yield batch.cast(schema)
+        if not yielded:  # no part files, or 0 row groups
+            yield _empty_batch(schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+class _DrainSink(io.RawIOBase):
+    """Unseekable file-like sink whose written bytes are drained
+    incrementally — lets the sequential writers (ParquetWriter, IPC
+    file/stream, zipfile) feed a chunked byte iterator without buffering
+    the whole output. ``tell()`` is all the IPC file writer and zipfile
+    need to place their footers."""
+
+    def __init__(self) -> None:
+        self._chunks: list[bytes] = []
+        self._pos = 0
+
+    def writable(self) -> bool:  # pragma: no cover - io protocol
+        return True
+
+    def write(self, b) -> int:
+        self._chunks.append(bytes(b))
+        self._pos += len(b)
+        return len(b)
+
+    def tell(self) -> int:
+        return self._pos
+
+    def drain(self) -> bytes:
+        out = b"".join(self._chunks)
+        self._chunks.clear()
+        return out
+
+
+def _encode(
+    batches: Iterable[pa.RecordBatch], fmt: str, csv_separator: str, encoding: str | None
+) -> Iterator[bytes]:
+    """The one writer per format: Arrow batches in, byte chunks out (one
+    per batch, plus any preamble and footer). ``batches`` holds at least
+    one batch, so header-carrying formats always see the schema."""
+    enc = encoding or "utf-8"
     if fmt == "json":
-        rows = tab.to_pylist()
-        return json.dumps(rows, default=_json_default).encode(encoding or "utf-8")
-    if fmt == "ndjson":
-        out = io.StringIO()
-        for row in tab.to_pylist():
-            out.write(json.dumps(row, default=_json_default))
-            out.write("\n")
-        return out.getvalue().encode(encoding or "utf-8")
-    if fmt in ("csv", "scsv", "csv4excel"):
+        # one dumps per batch, its brackets spliced off: the bytes of a
+        # single whole-list dump, at the whole-list dump's speed
+        yield b"["
+        sep = b""
+        for batch in batches:
+            if batch.num_rows:
+                rows = json.dumps(batch.to_pylist(), default=_json_default)
+                yield sep + rows[1:-1].encode(enc)
+                sep = b", "
+        yield b"]"
+    elif fmt == "ndjson":
+        for batch in batches:
+            yield "".join(
+                json.dumps(row, default=_json_default) + "\n" for row in batch.to_pylist()
+            ).encode(enc)
+    elif fmt in ("csv", "scsv", "csv4excel"):
         sep = {"csv": csv_separator, "scsv": ";", "csv4excel": ","}[fmt]
-        buf = io.BytesIO()
-        pacsv.write_csv(
-            tab, buf, write_options=pacsv.WriteOptions(delimiter=sep, include_header=True)
-        )
-        data = buf.getvalue()
         if fmt == "csv4excel":
             # exact reference byte layout (response.py:158-169,
             # test_output_formats.py:22-27): a raw UTF-8 'sep=,\n'
             # preamble so Excel picks the delimiter, then the csv body
-            # re-encoded UTF-16-LE
-            return b"sep=,\n" + data.decode("utf-8").encode("utf-16-le")
-        if encoding and encoding.lower() not in ("utf-8", "utf8"):
-            return data.decode("utf-8").encode(encoding)
-        return data
-    if fmt == "parquet":
-        buf = io.BytesIO()
-        papq.write_table(tab, buf)
-        return buf.getvalue()
-    if fmt == "arrow":  # feather / IPC file
-        buf = io.BytesIO()
-        feather.write_feather(tab, buf)
-        return buf.getvalue()
-    if fmt == "arrow-stream":
-        buf = io.BytesIO()
-        with ipc.new_stream(buf, tab.schema) as writer:
-            for batch in tab.to_batches(max_chunksize=10000):
-                writer.write_batch(batch)
-        return buf.getvalue()
-    if fmt == "html":
+            # encoded UTF-16-LE
+            yield b"sep=,\n"
+            enc = "utf-16-le"
+        header = True
+        for batch in batches:
+            buf = io.BytesIO()
+            pacsv.write_csv(
+                batch, buf, write_options=pacsv.WriteOptions(delimiter=sep, include_header=header)
+            )
+            header = False
+            data = buf.getvalue()
+            yield data if enc.lower() in ("utf-8", "utf8") else data.decode("utf-8").encode(enc)
+    elif fmt == "html":
+        # pandas renders each batch; the <tbody> rows are spliced into
+        # one table. ArrowDtype keeps value rendering independent of the
+        # batch split — plain to_pandas would coerce an int64 column to
+        # float64 only in batches that happen to contain a null
         import pandas as pd
 
-        # ArrowDtype keeps each column's rendering a pure per-value
-        # function of the Arrow type (no null-driven int->float
-        # coercion), so the streamed splice below is byte-identical
-        # for ANY batch split
-        return (
-            tab.to_pandas(types_mapper=pd.ArrowDtype)
-            .to_html(index=False)
-            .encode(encoding or "utf-8")
-        )
-    if fmt == "xml":
-        # stdlib writer (pandas.to_xml requires lxml, not in container);
-        # same shape as the reference's pandas output: <data><row>...</row>
+        for i, batch in enumerate(batches):
+            html = batch.to_pandas(types_mapper=pd.ArrowDtype).to_html(index=False)
+            head, _, rest = html.partition("<tbody>")
+            body, _, tail = rest.partition("</tbody>")
+            rows = body.strip()
+            out = (head + "<tbody>" if i == 0 else "") + ("\n    " + rows if rows else "")
+            yield out.encode(enc, "xmlcharrefreplace")
+        yield ("\n  </tbody>" + tail).encode(enc)
+    elif fmt == "xml":
+        # stdlib ElementTree (pandas.to_xml needs the optional lxml) in
+        # the reference's pandas shape: <data><row>...;
+        # characters the encoding lacks become character references,
+        # as ElementTree.write spells them
         import xml.etree.ElementTree as ET
 
-        root = ET.Element("data")
-        for row in tab.to_pylist():
-            el = ET.SubElement(root, "row")
-            for k, v in row.items():
-                child = ET.SubElement(el, k)
-                if v is not None:
-                    child.text = (
-                        v.isoformat() if hasattr(v, "isoformat") else str(v)
-                    )
-        buf = io.BytesIO()
-        ET.ElementTree(root).write(
-            buf, encoding=encoding or "utf-8", xml_declaration=True
-        )
-        return buf.getvalue()
-    if fmt == "xlsx":
-        return _xlsx_bytes(tab)
-    raise ValueError(f"unsupported format {fmt!r}")
+        yield f"<?xml version='1.0' encoding='{enc}'?>\n<data>".encode(enc)
+        for batch in batches:
+            parts = []
+            for row in batch.to_pylist():
+                el = ET.Element("row")
+                for k, v in row.items():
+                    child = ET.SubElement(el, k)
+                    if v is not None:
+                        child.text = v.isoformat() if hasattr(v, "isoformat") else str(v)
+                parts.append(ET.tostring(el, encoding="unicode"))
+            yield "".join(parts).encode(enc, "xmlcharrefreplace")
+        yield "</data>".encode(enc)
+    elif fmt in ("parquet", "arrow", "arrow-stream", "xlsx"):
+        # feather v2 IS the Arrow IPC file format
+        open_writer = {
+            "parquet": papq.ParquetWriter,
+            "arrow": ipc.new_file,
+            "arrow-stream": ipc.new_stream,
+            "xlsx": _XlsxWriter,
+        }[fmt]
+        sink = _DrainSink()
+        writer = None
+        for batch in batches:
+            if writer is None:
+                writer = open_writer(sink, batch.schema)
+            writer.write_batch(batch)
+            yield sink.drain()
+        writer.close()  # footer
+        yield sink.drain()
+    else:
+        raise ValueError(f"unsupported format {fmt!r}")
 
 
 def _col_ref(idx: int) -> str:
@@ -161,43 +278,9 @@ def _xlsx_cell(ref: str, v: Any) -> str:
     return f'<c r="{ref}" t="inlineStr"><is><t>{escape(text)}</t></is></c>'
 
 
-def _xlsx_write(batches: Iterator[pa.RecordBatch], sink) -> None:
-    """Minimal SpreadsheetML writer over the stdlib zipfile — no
-    openpyxl/xlsxwriter needed (the reference needs polars' xlsxwriter
-    extra, response.py:118-124; this closes that optional-dependency
-    gap). One sheet, header row, numbers/bools typed natively,
-    everything else (strings, timestamps, bytes) as inline strings.
-
-    STREAMING: sheet rows are written into the zip entry one Arrow
-    batch at a time (``ZipFile.open(..., 'w')``), so memory stays one
-    batch no matter the result size — ``sink`` is any writable binary
-    file (BytesIO for small results, a temp file for ``limit=-1``
-    exports). Zip entry timestamps are pinned (1980 epoch) so the same
-    table always serializes to the same bytes."""
-    import zipfile
-
-    cell = _xlsx_cell
-    workbook = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-        '<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets></workbook>'
-    )
-    wb_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" '
-        'Target="worksheets/sheet1.xml"/></Relationships>'
-    )
-    root_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        '<Relationship Id="rId1" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" '
-        'Target="xl/workbook.xml"/></Relationships>'
-    )
-    content_types = (
+_XLSX_PARTS = (
+    (
+        "[Content_Types].xml",
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
         '<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">'
         '<Default Extension="rels" '
@@ -206,288 +289,86 @@ def _xlsx_write(batches: Iterator[pa.RecordBatch], sink) -> None:
         '<Override PartName="/xl/workbook.xml" ContentType="application/vnd.'
         'openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
         '<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/'
-        'vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/></Types>'
-    )
+        'vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/></Types>',
+    ),
+    (
+        "_rels/.rels",
+        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
+        '<Relationship Id="rId1" '
+        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" '
+        'Target="xl/workbook.xml"/></Relationships>',
+    ),
+    (
+        "xl/workbook.xml",
+        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
+        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+        '<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets></workbook>',
+    ),
+    (
+        "xl/_rels/workbook.xml.rels",
+        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
+        '<Relationship Id="rId1" '
+        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" '
+        'Target="worksheets/sheet1.xml"/></Relationships>',
+    ),
+)
 
-    def entry(name: str) -> zipfile.ZipInfo:
-        zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-        zi.compress_type = zipfile.ZIP_DEFLATED
-        return zi
 
-    with zipfile.ZipFile(sink, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr(entry("[Content_Types].xml"), content_types)
-        z.writestr(entry("_rels/.rels"), root_rels)
-        z.writestr(entry("xl/workbook.xml"), workbook)
-        z.writestr(entry("xl/_rels/workbook.xml.rels"), wb_rels)
+class _XlsxWriter:
+    """Minimal SpreadsheetML writer over the stdlib zipfile, with the
+    ``write_batch``/``close`` shape of pyarrow's writers — no
+    openpyxl/xlsxwriter needed (the reference needs polars' xlsxwriter
+    extra, response.py:118-124). One sheet, header row, numbers/bools
+    typed natively, everything else (strings, timestamps, bytes) as
+    inline strings.
+
+    The sheet is written into its zip entry one Arrow batch at a time,
+    and zipfile writes to an unseekable sink (data descriptors after
+    each entry), so memory stays one batch whatever the result size.
+    Zip entry timestamps are pinned (1980 epoch) so the same table
+    always serializes to the same bytes."""
+
+    def __init__(self, sink, schema: pa.Schema) -> None:
+        import zipfile
+
+        def entry(name: str) -> zipfile.ZipInfo:
+            zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            zi.compress_type = zipfile.ZIP_DEFLATED
+            return zi
+
+        self._zip = zipfile.ZipFile(sink, "w", zipfile.ZIP_DEFLATED)
+        for name, xml in _XLSX_PARTS:
+            self._zip.writestr(entry(name), xml)
         # force_zip64: the sheet is streamed without a known size and a
         # limit=-1 export can exceed 4 GiB of XML — without the ZIP64
         # local header the write would die mid-export at the boundary
-        with z.open(entry("xl/worksheets/sheet1.xml"), "w", force_zip64=True) as sheet:
-            sheet.write(
-                b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                b'<worksheet xmlns="http://schemas.openxmlformats.org/'
-                b'spreadsheetml/2006/main"><sheetData>'
+        self._sheet = self._zip.open(entry("xl/worksheets/sheet1.xml"), "w", force_zip64=True)
+        self._names = schema.names
+        self._refs = [_col_ref(c) for c in range(len(self._names))]
+        self._r = 2
+        header = "".join(_xlsx_cell(f"{ref}1", n) for ref, n in zip(self._refs, self._names))
+        self._sheet.write(
+            b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+            b'<worksheet xmlns="http://schemas.openxmlformats.org/'
+            b'spreadsheetml/2006/main"><sheetData>'
+            + f'<row r="1">{header}</row>'.encode()
+        )
+
+    def write_batch(self, batch: pa.RecordBatch) -> None:
+        rows = []
+        for row in batch.to_pylist():
+            r = self._r
+            cells = "".join(
+                _xlsx_cell(f"{ref}{r}", row[n]) for ref, n in zip(self._refs, self._names)
             )
-            r = 2
-            names: list[str] | None = None
-            for batch in batches:
-                if names is None:
-                    names = batch.schema.names
-                    header = "".join(
-                        cell(f"{_col_ref(c)}1", n) for c, n in enumerate(names)
-                    )
-                    sheet.write(f'<row r="1">{header}</row>'.encode())
-                for row in batch.to_pylist():
-                    cells = "".join(
-                        cell(f"{_col_ref(c)}{r}", row[n])
-                        for c, n in enumerate(names)
-                    )
-                    sheet.write(f'<row r="{r}">{cells}</row>'.encode())
-                    r += 1
-            sheet.write(b"</sheetData></worksheet>")
+            rows.append(f'<row r="{r}">{cells}</row>')
+            self._r += 1
+        self._sheet.write("".join(rows).encode())
 
-
-def _xlsx_bytes(tab: pa.Table) -> bytes:
-    batches = tab.to_batches(max_chunksize=10000)
-    if not batches:  # empty result still gets its header row
-        batches = [
-            pa.RecordBatch.from_arrays(
-                [pa.array([], type=f.type) for f in tab.schema], schema=tab.schema
-            )
-        ]
-    buf = io.BytesIO()
-    _xlsx_write(iter(batches), buf)
-    return buf.getvalue()
-
-
-def _spilled_batches(df: DataFrame, chunk_size: int = 10000) -> Iterator[pa.RecordBatch]:
-    """Memory-bounded Arrow batches for LARGE exports: the executors
-    write the result to a temp parquet spill in parallel (no driver
-    materialization — ``toArrow()`` would buffer the whole result), then
-    the driver streams it back one record batch at a time. This is the
-    Spark analogue of the reference's NamedTemporaryFile spill-stream
-    (core/response.py:315-352); on a real cluster the spill dir would be
-    shared storage and the parallel write is exactly a sink write.
-
-    Driver peak memory = one batch (chunk_size rows), regardless of
-    result size."""
-    import glob
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    tmp = tempfile.mkdtemp(prefix="lakeapi_export_")
-    # INT96 is the parquet default for Spark timestamps; force µs so the
-    # spilled schema round-trips identically to toArrow()'s
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        df.write.mode("overwrite").parquet(tmp)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    try:
-        yielded = False
-        for f in sorted(glob.glob(f"{tmp}/part-*.parquet")):
-            pf = papq.ParquetFile(f)
-            for batch in pf.iter_batches(batch_size=chunk_size):
-                yielded = True
-                yield batch
-        if not yielded:  # empty result (no part files, or 0 row groups):
-            tab = df.limit(0).toArrow()  # callers still need the schema
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], type=f.type) for f in tab.schema], schema=tab.schema
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-class _DrainSink(io.RawIOBase):
-    """File-like sink whose written bytes are drained incrementally —
-    lets pyarrow's sequential writers (ParquetWriter, ipc stream) feed a
-    chunked byte iterator without buffering the whole output."""
-
-    def __init__(self) -> None:
-        self._chunks: list[bytes] = []
-
-    def writable(self) -> bool:  # pragma: no cover - io protocol
-        return True
-
-    def write(self, b) -> int:
-        self._chunks.append(bytes(b))
-        return len(b)
-
-    def drain(self) -> bytes:
-        out = b"".join(self._chunks)
-        self._chunks.clear()
-        return out
-
-
-def _ndjson_bytes(rows: list[dict], encoding: str) -> bytes:
-    out = io.StringIO()
-    for row in rows:
-        out.write(json.dumps(row, default=_json_default))
-        out.write("\n")
-    return out.getvalue().encode(encoding)
-
-
-def stream_serialize(
-    df: DataFrame,
-    fmt: str,
-    *,
-    csv_separator: str = ",",
-    encoding: str | None = None,
-    chunk_size: int = 10000,
-) -> Iterator[bytes]:
-    """Chunked serialization for large (``limit=-1``) exports: yields
-    the same bytes ``serialize()`` would produce (same logical content
-    for ``arrow``, whose file-level layout differs), with driver
-    memory bounded by one Arrow batch (see :func:`_spilled_batches`).
-    EVERY format ``serialize()`` supports is covered, matching the
-    reference's temp-file chunk streaming of all its formats
-    (core/response.py:315-352): the append-only formats stream
-    directly; the seekable-sink formats (xlsx, feather/IPC file) spill
-    to a DRIVER TEMP FILE batch-by-batch — disk, never memory — and
-    re-stream it in 64 KiB chunks, exactly the reference's
-    NamedTemporaryFile pattern."""
-    enc = encoding or "utf-8"
-    batches = _spilled_batches(df, chunk_size)
-    if fmt == "ndjson":
-        for batch in batches:
-            yield _ndjson_bytes(batch.to_pylist(), enc)
-        return
-    if fmt == "json":
-        yield b"["
-        first = True
-        for batch in batches:
-            for row in batch.to_pylist():
-                payload = json.dumps(row, default=_json_default).encode(enc)
-                yield payload if first else b", " + payload
-                first = False
-        yield b"]"
-        return
-    if fmt in ("csv", "scsv", "csv4excel"):
-        sep = {"csv": csv_separator, "scsv": ";", "csv4excel": ","}[fmt]
-
-        def _encode(data: bytes) -> bytes:
-            if fmt == "csv4excel":
-                return data.decode("utf-8").encode("utf-16-le")
-            if encoding and encoding.lower() not in ("utf-8", "utf8"):
-                return data.decode("utf-8").encode(encoding)
-            return data
-
-        if fmt == "csv4excel":
-            yield b"sep=,\n"  # raw utf-8 preamble, exactly like serialize()
-        header_done = False
-        for batch in batches:
-            buf = io.BytesIO()
-            pacsv.write_csv(
-                pa.Table.from_batches([batch]),
-                buf,
-                write_options=pacsv.WriteOptions(
-                    delimiter=sep, include_header=not header_done
-                ),
-            )
-            header_done = True
-            yield _encode(buf.getvalue())
-        return
-    if fmt == "arrow-stream":
-        sink = _DrainSink()
-        writer = None
-        for batch in batches:
-            if writer is None:
-                writer = ipc.new_stream(sink, batch.schema)
-            writer.write_batch(batch)
-            yield sink.drain()
-        if writer is not None:
-            writer.close()
-            yield sink.drain()
-        return
-    if fmt == "parquet":
-        sink = _DrainSink()
-        writer = None
-        for batch in batches:
-            if writer is None:
-                writer = papq.ParquetWriter(sink, batch.schema)
-            writer.write_batch(batch)
-            yield sink.drain()
-        if writer is not None:
-            writer.close()  # footer
-            yield sink.drain()
-        return
-    if fmt == "xml":
-        # same element shape as serialize(): declaration + <data> with
-        # one <row> per record, streamed row-group by row-group
-        import xml.etree.ElementTree as ET
-
-        yield f"<?xml version='1.0' encoding='{enc}'?>\n<data>".encode(enc)
-        for batch in batches:
-            parts: list[bytes] = []
-            for row in batch.to_pylist():
-                el = ET.Element("row")
-                for k, v in row.items():
-                    child = ET.SubElement(el, k)
-                    if v is not None:
-                        child.text = (
-                            v.isoformat() if hasattr(v, "isoformat") else str(v)
-                        )
-                parts.append(ET.tostring(el, encoding="unicode").encode(enc))
-            if parts:
-                yield b"".join(parts)
-        yield "</data>".encode(enc)
-        return
-    if fmt == "html":
-        # pandas renders each batch; the <tbody> rows are spliced into
-        # one table. ArrowDtype (here AND in serialize()) keeps value
-        # rendering independent of the batch split — plain to_pandas
-        # would coerce an int64 column to float64 only in batches that
-        # happen to contain a null, diverging between batches
-        import pandas as pd
-
-        tail = "\n</table>"
-        first = True
-        for batch in batches:
-            html = batch.to_pandas(types_mapper=pd.ArrowDtype).to_html(index=False)
-            head, _, rest = html.partition("<tbody>")
-            body, _, tail = rest.partition("</tbody>")
-            if first:
-                yield (head + "<tbody>").encode(enc)
-                first = False
-            rows = body.strip()
-            if rows:
-                yield ("\n    " + rows).encode(enc)
-        yield ("\n  </tbody>" + tail).encode(enc)
-        return
-    if fmt in ("xlsx", "arrow"):
-        # seekable-sink formats: batch-stream into a DRIVER TEMP FILE
-        # (disk-bounded, like the reference's NamedTemporaryFile spill,
-        # response.py:315-352), then re-stream it in 64 KiB chunks
-        import os
-        import tempfile
-
-        fd, path = tempfile.mkstemp(prefix="lakeapi_export_", suffix=f".{fmt}")
-        try:
-            with os.fdopen(fd, "wb") as f:
-                if fmt == "xlsx":
-                    _xlsx_write(batches, f)
-                else:  # feather v2 IS the Arrow IPC file format
-                    writer = None
-                    for batch in batches:
-                        if writer is None:
-                            writer = ipc.new_file(f, batch.schema)
-                        writer.write_batch(batch)
-                    if writer is not None:
-                        writer.close()
-            with open(path, "rb") as f:
-                while chunk := f.read(65536):
-                    yield chunk
-        finally:
-            os.remove(path)
-        return
-    raise ValueError(f"unsupported format {fmt!r}")
-
-
-def stream_ndjson(df: DataFrame, chunk_size: int = 10000) -> Iterator[bytes]:
-    """Chunked NDJSON for large exports (kept as the named entry point;
-    delegates to the general streamer)."""
-    yield from stream_serialize(df, "ndjson", chunk_size=chunk_size)
+    def close(self) -> None:
+        self._sheet.write(b"</sheetData></worksheet>")
+        self._sheet.close()
+        self._zip.close()

@@ -3977,68 +3977,6 @@ def checkpoint_delta(spark: SparkSession, path: str) -> int:
     return snap.version
 
 
-def write_delta_minimal(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """Minimal delta WRITER for small tables and fixtures: one commit with
-    protocol(1,2) + metaData + add actions. Collects through Arrow on the
-    driver — this is a test/fixture utility and a lookup-table tool, not
-    a data path (the reference never writes delta either; its tables are
-    produced upstream). Partitioned layouts emit one file per partition
-    tuple with log-declared partitionValues."""
-    import json
-    import os
-    import uuid
-
-    import pyarrow.parquet as papq
-
-    pcols = partition_by or []
-    tab = df.toArrow()
-    os.makedirs(path, exist_ok=True)
-    adds = []
-    if pcols:
-        import pyarrow.compute as pc
-
-        keys = tab.select(pcols).to_pylist()
-        uniq = sorted({tuple(str(k[c]) for c in pcols) for k in keys})
-        for key in uniq:
-            mask = None
-            for c, v in zip(pcols, key):
-                m = pc.equal(pc.cast(tab.column(c), "string"), v)
-                mask = m if mask is None else pc.and_(mask, m)
-            part = tab.filter(mask).drop_columns(pcols)
-            rel = "/".join(f"{c}={v}" for c, v in zip(pcols, key))
-            os.makedirs(f"{path}/{rel}", exist_ok=True)
-            fname = f"{rel}/part-{uuid.uuid5(uuid.NAMESPACE_URL, rel).hex}.parquet"
-            papq.write_table(part, f"{path}/{fname}")
-            adds.append(
-                {"add": {"path": fname, "partitionValues": dict(zip(pcols, key)),
-                         "size": 1, "modificationTime": 0, "dataChange": True}}
-            )
-    else:
-        fname = f"part-{uuid.uuid5(uuid.NAMESPACE_URL, path).hex}.parquet"
-        papq.write_table(tab, f"{path}/{fname}")
-        adds.append(
-            {"add": {"path": fname, "partitionValues": {}, "size": 1,
-                     "modificationTime": 0, "dataChange": True}}
-        )
-    log = f"{path}/_delta_log"
-    os.makedirs(log, exist_ok=True)
-    with open(f"{log}/{0:020d}.json", "w") as f:
-        f.write(json.dumps({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}) + "\n")
-        f.write(
-            json.dumps(
-                {"metaData": {"id": str(uuid.uuid5(uuid.NAMESPACE_URL, path)),
-                              "schemaString": df.schema.json(),
-                              "partitionColumns": pcols,
-                              "format": {"provider": "parquet"},
-                              "configuration": {}}}
-            ) + "\n"
-        )
-        for a in adds:
-            f.write(json.dumps(a) + "\n")
-
-
 def generate_symlink_manifest(spark: SparkSession, path: str) -> list[str]:
     """GENERATE symlink_format_manifest: write
     ``_symlink_format_manifest/<partition dirs>/manifest`` text files

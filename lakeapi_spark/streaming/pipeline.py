@@ -85,20 +85,6 @@ def tumbling_counts_stream(
     )
 
 
-def sliding_counts_stream(
-    events: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "n_events")
-    )
-
-
 def session_counts_stream(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
 ) -> DataFrame:

@@ -370,7 +370,10 @@ def test_serve_request_streams_unbounded_exports(spark, sf_dir):
     """limit=-1 on an allow_get_all_pages table returns a chunk
     iterator (never a whole-result buffer); bounded requests return
     bytes; contents agree."""
+    import io
     import json as _json
+    import xml.etree.ElementTree as ET
+    import zipfile
     from collections.abc import Iterator
 
     from lakeapi_spark.config import DatasourceConfig, TableConfig
@@ -392,8 +395,12 @@ def test_serve_request_streams_unbounded_exports(spark, sf_dir):
     rows_whole = sorted(_json.loads(ln)["n_name"] for ln in whole.decode().strip().split("\n"))
     rows_stream = sorted(_json.loads(ln)["n_name"] for ln in streamed.decode().strip().split("\n"))
     assert rows_whole == rows_stream and len(rows_stream) == 25
-    # seekable-sink formats stay whole-bytes even unbounded
-    assert isinstance(serve_request(reg, "nation", fmt="xlsx", limit=-1), bytes)
+    # every format streams when unbounded, xlsx included
+    xlsx = serve_request(reg, "nation", fmt="xlsx", limit=-1)
+    assert isinstance(xlsx, Iterator)
+    sheet = ET.fromstring(zipfile.ZipFile(io.BytesIO(b"".join(xlsx))).read("xl/worksheets/sheet1.xml"))
+    ns = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
+    assert len(sheet.findall(".//m:row", ns)) == 25 + 1  # + header
 
 
 def test_schema_refreshes_after_data_rewrite(spark, tmp_path):

@@ -13,7 +13,7 @@ import pyarrow.ipc as ipc
 import pyarrow.parquet as papq
 import pytest
 
-from lakeapi_spark.serialize import FORMATS, serialize, stream_ndjson
+from lakeapi_spark.serialize import FORMATS, serialize, stream_serialize
 
 
 @pytest.fixture(scope="module")
@@ -79,8 +79,8 @@ def test_custom_encoding(small_df):
 
 
 def test_stream_ndjson_chunks(small_df):
-    chunks = list(stream_ndjson(small_df, chunk_size=2))
-    rows = [json.loads(ln) for c in chunks for ln in c.decode().strip().split("\n")]
+    chunks = list(stream_serialize(small_df, "ndjson", chunk_size=2))
+    rows = [json.loads(ln) for c in chunks for ln in c.decode().strip().split("\n") if ln]
     assert len(rows) == 3
     assert len(chunks) >= 2  # chunked at 2 rows per batch
 
@@ -101,19 +101,70 @@ class TestStreamSerialize:
     the limit=-1 export of ref test_app.py:181-203)."""
 
     def test_stream_matches_serialize_small(self, small_df):
+        """One writer per format: the in-memory and the spilled batch
+        source encode to the same bytes (the decoded table for the
+        binary formats, whose row-group/batch layout follows the
+        split), for one batch, one batch per row, and an empty result."""
         from lakeapi_spark.serialize import serialize, stream_serialize
 
-        # every byte-stable format byte-matches the single-shot writer;
-        # html/xml/xlsx included since this round's seekable-sink spill
-        for fmt in ("ndjson", "json", "csv", "scsv", "csv4excel", "html", "xml", "xlsx"):
-            whole = serialize(small_df.orderBy("id"), fmt)
-            streamed = b"".join(stream_serialize(small_df.orderBy("id").coalesce(1), fmt))
-            assert streamed == whole, fmt
+        readers = {
+            "parquet": lambda raw: papq.read_table(io.BytesIO(raw)),
+            "arrow": lambda raw: feather.read_table(io.BytesIO(raw)),
+            "arrow-stream": lambda raw: ipc.open_stream(io.BytesIO(raw)).read_all(),
+        }
+        ordered = small_df.orderBy("id")
+        for df in (ordered, ordered.filter("id < 0")):
+            for fmt in FORMATS:
+                whole = serialize(df, fmt)
+                for chunk_size in (10000, 1):
+                    streamed = b"".join(
+                        stream_serialize(df.coalesce(1), fmt, chunk_size=chunk_size)
+                    )
+                    if fmt in readers:
+                        got, want = readers[fmt](streamed), readers[fmt](whole)
+                        assert got.equals(want) and got.schema == want.schema, fmt
+                    else:
+                        assert streamed == whole, (fmt, chunk_size)
+
+    def test_xml_same_in_both_paths(self, small_df):
+        """Characters the requested encoding lacks become character
+        references (html too), whether the result is serialized whole
+        or streamed (an empty result is covered above)."""
+        from lakeapi_spark.serialize import serialize, stream_serialize
+
+        euro = small_df.sparkSession.createDataFrame([(1, "5 \u20ac")], ["id", "s"])
+        for fmt in ("xml", "html"):
+            whole = serialize(euro, fmt, encoding="latin-1")
+            assert b"5 &#8364;</" in whole, fmt
+            assert b"".join(stream_serialize(euro, fmt, encoding="latin-1")) == whole, fmt
+
+    def test_export_leaves_parquet_timestamp_conf(self, spark):
+        """An export reads Spark's default INT96 timestamps back without
+        touching the session conf, and a timestamp serializes the same
+        through both paths."""
+        from lakeapi_spark.serialize import serialize, stream_serialize
+
+        key = "spark.sql.parquet.outputTimestampType"
+        df = spark.sql(
+            "select 1 as id, timestamp'2024-03-01 12:34:56.789123' as ts "
+            "union all select 2, timestamp'1900-01-01 00:00:00'"
+        ).orderBy("id")
+        spark.conf.unset(key)
+        before = spark.conf.get(key, None)
+        streamed = b"".join(stream_serialize(df.coalesce(1), "json"))
+        assert spark.conf.get(key, None) == before
+        assert streamed == serialize(df, "json")
+        assert json.loads(streamed)[0]["ts"] == "2024-03-01T12:34:56.789123+00:00"
+        spark.conf.set(key, "INT96")
+        try:
+            b"".join(stream_serialize(df, "csv"))
+            assert spark.conf.get(key) == "INT96"
+        finally:
+            spark.conf.unset(key)
 
     def test_stream_arrow_file_roundtrip(self, small_df):
-        """The feather/IPC *file* format (seekable footer) streams via
-        the temp-file spill; layout may differ from write_feather's but
-        the table read back is identical."""
+        """The feather/IPC *file* format streams too: its footer needs
+        only the sink's position, not a seek."""
         from lakeapi_spark.serialize import stream_serialize
 
         df = small_df.orderBy("id").coalesce(1)
@@ -151,9 +202,9 @@ class TestStreamSerialize:
 
     def test_stream_xlsx_full_lineitem_memory_bounded(self, spark, sf_dir):
         """limit=-1 xlsx export of the whole lineitem table: the sheet
-        is written batch-by-batch into a DISK temp file and re-streamed
-        in 64 KiB chunks — no whole-result buffer on the driver — and
-        the workbook round-trips with every row."""
+        is deflated into the zip batch-by-batch and each batch's bytes
+        are yielded as they are written — no whole-result buffer on the
+        driver — and the workbook round-trips with every row."""
         import xml.etree.ElementTree as ET
         import zipfile
 
