@@ -26,6 +26,7 @@ reference's optional-dependency gate (response.py:118-124).
 
 from __future__ import annotations
 
+import codecs
 import io
 import json
 from collections.abc import Iterable, Iterator
@@ -162,77 +163,13 @@ def _encode(
 ) -> Iterator[bytes]:
     """The one writer per format: Arrow batches in, byte chunks out (one
     per batch, plus any preamble and footer). ``batches`` holds at least
-    one batch, so header-carrying formats always see the schema."""
-    enc = encoding or "utf-8"
-    if fmt == "json":
-        # one dumps per batch, its brackets spliced off: the bytes of a
-        # single whole-list dump, at the whole-list dump's speed
-        yield b"["
-        sep = b""
-        for batch in batches:
-            if batch.num_rows:
-                rows = json.dumps(batch.to_pylist(), default=_json_default)
-                yield sep + rows[1:-1].encode(enc)
-                sep = b", "
-        yield b"]"
-    elif fmt == "ndjson":
-        for batch in batches:
-            yield "".join(
-                json.dumps(row, default=_json_default) + "\n" for row in batch.to_pylist()
-            ).encode(enc)
-    elif fmt in ("csv", "scsv", "csv4excel"):
-        sep = {"csv": csv_separator, "scsv": ";", "csv4excel": ","}[fmt]
-        if fmt == "csv4excel":
-            # exact reference byte layout (response.py:158-169,
-            # test_output_formats.py:22-27): a raw UTF-8 'sep=,\n'
-            # preamble so Excel picks the delimiter, then the csv body
-            # encoded UTF-16-LE
-            yield b"sep=,\n"
-            enc = "utf-16-le"
-        header = True
-        for batch in batches:
-            buf = io.BytesIO()
-            pacsv.write_csv(
-                batch, buf, write_options=pacsv.WriteOptions(delimiter=sep, include_header=header)
-            )
-            header = False
-            data = buf.getvalue()
-            yield data if enc.lower() in ("utf-8", "utf8") else data.decode("utf-8").encode(enc)
-    elif fmt == "html":
-        # pandas renders each batch; the <tbody> rows are spliced into
-        # one table. ArrowDtype keeps value rendering independent of the
-        # batch split — plain to_pandas would coerce an int64 column to
-        # float64 only in batches that happen to contain a null
-        import pandas as pd
+    one batch, so header-carrying formats always see the schema.
 
-        for i, batch in enumerate(batches):
-            html = batch.to_pandas(types_mapper=pd.ArrowDtype).to_html(index=False)
-            head, _, rest = html.partition("<tbody>")
-            body, _, tail = rest.partition("</tbody>")
-            rows = body.strip()
-            out = (head + "<tbody>" if i == 0 else "") + ("\n    " + rows if rows else "")
-            yield out.encode(enc, "xmlcharrefreplace")
-        yield ("\n  </tbody>" + tail).encode(enc)
-    elif fmt == "xml":
-        # stdlib ElementTree (pandas.to_xml needs the optional lxml) in
-        # the reference's pandas shape: <data><row>...;
-        # characters the encoding lacks become character references,
-        # as ElementTree.write spells them
-        import xml.etree.ElementTree as ET
-
-        yield f"<?xml version='1.0' encoding='{enc}'?>\n<data>".encode(enc)
-        for batch in batches:
-            parts = []
-            for row in batch.to_pylist():
-                el = ET.Element("row")
-                for k, v in row.items():
-                    child = ET.SubElement(el, k)
-                    if v is not None:
-                        child.text = v.isoformat() if hasattr(v, "isoformat") else str(v)
-                parts.append(ET.tostring(el, encoding="unicode"))
-            yield "".join(parts).encode(enc, "xmlcharrefreplace")
-        yield "</data>".encode(enc)
-    elif fmt in ("parquet", "arrow", "arrow-stream", "xlsx"):
+    Every piece of a text format, brackets and separators included, goes
+    through ONE incremental encoder, so the chunks join into the same
+    bytes as encoding the whole text once: one BOM for utf-16/utf-32,
+    and a stateful codec's shift state carries across chunks."""
+    if fmt in ("parquet", "arrow", "arrow-stream", "xlsx"):
         # feather v2 IS the Arrow IPC file format
         open_writer = {
             "parquet": papq.ParquetWriter,
@@ -249,8 +186,91 @@ def _encode(
             yield sink.drain()
         writer.close()  # footer
         yield sink.drain()
+        return
+    # csv4excel is the reference's exact byte layout (response.py:158-169,
+    # test_output_formats.py:22-27): a raw UTF-8 'sep=,\n' preamble so
+    # Excel picks the delimiter, then the csv body encoded UTF-16-LE
+    enc = "utf-16-le" if fmt == "csv4excel" else encoding or "utf-8"
+    # xml/html: characters the encoding lacks become character
+    # references, as ElementTree.write spells them
+    text = codecs.getincrementalencoder(enc)(
+        "xmlcharrefreplace" if fmt in ("html", "xml") else "strict"
+    ).encode
+    if fmt == "json":
+        # one dumps per batch, its brackets spliced off: the bytes of a
+        # single whole-list dump, at the whole-list dump's speed
+        yield text("[")
+        sep = ""
+        for batch in batches:
+            if batch.num_rows:
+                rows = json.dumps(batch.to_pylist(), default=_json_default)
+                yield text(sep + rows[1:-1])
+                sep = ", "
+        yield text("]")
+    elif fmt == "ndjson":
+        for batch in batches:
+            yield text(
+                "".join(json.dumps(row, default=_json_default) + "\n" for row in batch.to_pylist())
+            )
+    elif fmt in ("csv", "scsv", "csv4excel"):
+        if fmt == "csv4excel":
+            yield b"sep=,\n"
+        sep = {"csv": csv_separator, "scsv": ";", "csv4excel": ","}[fmt]
+        utf8 = codecs.lookup(enc).name == "utf-8"
+        header = True
+        for batch in batches:
+            buf = io.BytesIO()
+            pacsv.write_csv(
+                batch, buf, write_options=pacsv.WriteOptions(delimiter=sep, include_header=header)
+            )
+            header = False
+            yield buf.getvalue() if utf8 else text(buf.getvalue().decode("utf-8"))
+    elif fmt == "html":
+        # pandas renders each batch; the <tbody> rows are spliced into
+        # one table. ArrowDtype keeps value rendering independent of the
+        # batch split — plain to_pandas would coerce an int64 column to
+        # float64 only in batches that happen to contain a null. Nested
+        # values are rendered first, one value at a time, as xml does:
+        # pandas would print a list as a numpy array whose dtype follows
+        # the nulls in the batch
+        import pandas as pd
+
+        for i, batch in enumerate(batches):
+            cols = [
+                pa.array([None if v is None else str(v) for v in c.to_pylist()], pa.string())
+                if pa.types.is_nested(c.type)
+                else c
+                for c in batch.columns
+            ]
+            frame = pa.RecordBatch.from_arrays(cols, names=batch.schema.names)
+            html = frame.to_pandas(types_mapper=pd.ArrowDtype).to_html(index=False)
+            head, _, rest = html.partition("<tbody>")
+            body, _, tail = rest.partition("</tbody>")
+            rows = body.strip()
+            yield text((head + "<tbody>" if i == 0 else "") + ("\n    " + rows if rows else ""))
+        yield text("\n  </tbody>" + tail)
+    elif fmt == "xml":
+        # stdlib ElementTree (pandas.to_xml needs the optional lxml) in
+        # the reference's pandas shape: <data><row>...
+        import xml.etree.ElementTree as ET
+
+        yield text(f"<?xml version='1.0' encoding='{enc}'?>\n<data>")
+        for batch in batches:
+            parts = []
+            for row in batch.to_pylist():
+                el = ET.Element("row")
+                for k, v in row.items():
+                    child = ET.SubElement(el, k)
+                    if v is not None:
+                        child.text = v.isoformat() if hasattr(v, "isoformat") else str(v)
+                parts.append(ET.tostring(el, encoding="unicode"))
+            yield text("".join(parts))
+        yield text("</data>")
     else:
         raise ValueError(f"unsupported format {fmt!r}")
+    shift = text("", final=True)  # a stateful codec's closing shift
+    if shift:
+        yield shift
 
 
 def _col_ref(idx: int) -> str:

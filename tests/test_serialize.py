@@ -80,7 +80,7 @@ def test_custom_encoding(small_df):
 
 def test_stream_ndjson_chunks(small_df):
     chunks = list(stream_serialize(small_df, "ndjson", chunk_size=2))
-    rows = [json.loads(ln) for c in chunks for ln in c.decode().strip().split("\n") if ln]
+    rows = [json.loads(ln) for c in chunks for ln in c.decode().strip().split("\n")]
     assert len(rows) == 3
     assert len(chunks) >= 2  # chunked at 2 rows per batch
 
@@ -104,7 +104,13 @@ class TestStreamSerialize:
         """One writer per format: the in-memory and the spilled batch
         source encode to the same bytes (the decoded table for the
         binary formats, whose row-group/batch layout follows the
-        split), for one batch, one batch per row, and an empty result."""
+        split), for one batch, one batch per row, an empty result, and
+        decimal, date, array, map and struct-with-timestamp columns (so
+        the spill's cast follows the schema ``toArrow()`` gives).
+        pyarrow's csv writer takes no nested columns, so the csv formats
+        get the flat ones."""
+        from pyspark.sql.types import ArrayType, MapType, StructType
+
         from lakeapi_spark.serialize import serialize, stream_serialize
 
         readers = {
@@ -113,18 +119,70 @@ class TestStreamSerialize:
             "arrow-stream": lambda raw: ipc.open_stream(io.BytesIO(raw)).read_all(),
         }
         ordered = small_df.orderBy("id")
-        for df in (ordered, ordered.filter("id < 0")):
+        mixed = small_df.sparkSession.sql(
+            "select 1 as id, cast(12.34 as decimal(10,2)) as dec, "
+            "cast(123456789012.345678 as decimal(30,6)) as wide, date'2024-02-29' as d, "
+            "array(1, 2) as arr, map('k', 1.5) as m, "
+            "named_struct('t', timestamp'2024-03-01 12:34:56.5', 's', 'x') as st "
+            "union all select 2, null, null, null, array(null), map('n', null), "
+            "named_struct('t', cast(null as timestamp), 's', cast(null as string))"
+        ).orderBy("id")
+        for df in (ordered, ordered.filter("id < 0"), mixed):
+            flat = [
+                f.name
+                for f in df.schema
+                if not isinstance(f.dataType, (ArrayType, MapType, StructType))
+            ]
             for fmt in FORMATS:
-                whole = serialize(df, fmt)
+                src = df.select(flat) if "csv" in fmt else df
+                whole = serialize(src, fmt)
                 for chunk_size in (10000, 1):
                     streamed = b"".join(
-                        stream_serialize(df.coalesce(1), fmt, chunk_size=chunk_size)
+                        stream_serialize(src.coalesce(1), fmt, chunk_size=chunk_size)
                     )
                     if fmt in readers:
                         got, want = readers[fmt](streamed), readers[fmt](whole)
                         assert got.equals(want) and got.schema == want.schema, fmt
                     else:
                         assert streamed == whole, (fmt, chunk_size)
+        row = json.loads(serialize(mixed, "json"))[0]
+        assert row["dec"] == "12.34" and row["d"] == "2024-02-29"
+        assert row["st"] == {"t": "2024-03-01T12:34:56.500000+00:00", "s": "x"}
+
+    def test_utf16_one_bom_both_paths(self, small_df):
+        """An encoding that is not ASCII-compatible gets one BOM and one
+        byte width for the whole reply, however many chunks it streams
+        in: the text decodes and parses, and both paths agree."""
+        import csv as _csv
+        import xml.etree.ElementTree as ET
+
+        from lakeapi_spark.serialize import serialize, stream_serialize
+
+        df = small_df.orderBy("id")
+        for enc in ("utf-16", "utf-32"):
+            for fmt in ("json", "ndjson", "csv", "xml", "html"):
+                whole = serialize(df, fmt, encoding=enc)
+                streamed = b"".join(
+                    stream_serialize(df.coalesce(1), fmt, encoding=enc, chunk_size=1)
+                )
+                assert streamed == whole, (enc, fmt)
+                doc = whole.decode(enc)
+                assert "\ufeff" not in doc, (enc, fmt)
+                if fmt == "json":
+                    assert [r["id"] for r in json.loads(doc)] == [1, 2, 3]
+                elif fmt == "ndjson":
+                    assert [json.loads(ln)["id"] for ln in doc.splitlines()] == [1, 2, 3]
+                elif fmt == "csv":
+                    rows = list(_csv.DictReader(doc.splitlines()))
+                    assert [r["s"] for r in rows] == ["a;b", "x,y", ""]
+                elif fmt == "xml":
+                    # expat reads no utf-32, so parse the decoded body
+                    root = ET.fromstring(doc.partition("?>")[2])
+                    assert [r.findtext("id") for r in root] == ["1", "2", "3"]
+                else:
+                    assert doc.count("<tr") == 4  # header + 3 rows
+                if fmt != "xml":  # its declaration names the encoding
+                    assert whole == serialize(df, fmt).decode().encode(enc), (enc, fmt)
 
     def test_xml_same_in_both_paths(self, small_df):
         """Characters the requested encoding lacks become character
