@@ -18,7 +18,9 @@ Minimum search length is 3 chars (ref core/config.py:76).
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,10 +34,15 @@ class SearchTooShortError(ValueError):
     pass
 
 
-def _terms(text: str) -> list[str]:
+def search_terms(text: str) -> list[str]:
+    """The space-separated terms of ``text``; SearchTooShortError when the
+    text is under MIN_SEARCH_LENGTH chars or holds no term (all spaces)."""
     if len(text) < MIN_SEARCH_LENGTH:
         raise SearchTooShortError(f"search text must be >= {MIN_SEARCH_LENGTH} chars")
-    return [t for t in text.split(" ") if t]
+    terms = [t for t in text.split(" ") if t]
+    if not terms:
+        raise SearchTooShortError("search text holds no term")
+    return terms
 
 
 def search_score_expr(columns: list[str], search_text: str) -> Column:
@@ -45,12 +52,11 @@ def search_score_expr(columns: list[str], search_text: str) -> Column:
     space-tokenization of the search text.
     """
     haystack = F.lower(F.concat_ws(" ", *[F.col(c) for c in columns]))
-    score = None
-    for term in _terms(search_text):
-        hit = F.when(haystack.like(f"%{term.lower()}%"), F.lit(1)).otherwise(F.lit(0))
-        score = hit if score is None else (score + hit)
-    assert score is not None
-    return F.nullif(score, F.lit(0))
+    hits = [
+        F.when(haystack.like(f"%{term.lower()}%"), F.lit(1)).otherwise(F.lit(0))
+        for term in search_terms(search_text)
+    ]
+    return F.nullif(functools.reduce(operator.add, hits), F.lit(0))
 
 
 def search(
@@ -92,7 +98,7 @@ def bm25_search(
     Everything is SQL-expressible, so DuckDB can verify the exact
     scores (round 4).
     """
-    terms = sorted({t.lower() for t in _terms(search_text)})
+    terms = sorted({t.lower() for t in search_terms(search_text)})
     toks_arr = tokens(F.col(text_col))
     base = df.select(F.col(id_col).alias("__id"), toks_arr.alias("__toks"))
     doclen = base.select("__id", F.size("__toks").alias("__dl"))
@@ -137,7 +143,7 @@ def tf_search(
     scans; at 100 TB the explode+filter runs map-side and the aggregate
     is partial (map-side combine) before the shuffle.
     """
-    terms = [t.lower() for t in _terms(search_text)]
+    terms = [t.lower() for t in search_terms(search_text)]
     tok = df.select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.col(text_col)), r"[ \t\n\x0B\f\r]+")).alias("__tok"),
@@ -267,7 +273,7 @@ def bm25_scores(
     Parquet-backed indexes keep reading their doc-sized stored doclen.
     Wide ops: the co-partitioned doclen join + the final per-doc sum,
     as before."""
-    terms = sorted({t.lower() for t in _terms(search_text)})
+    terms = sorted({t.lower() for t in search_terms(search_text)})
     post = index.postings.filter(F.col("__tok").isin(terms))
     dfreq = post.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
     if index.doclen_from_postings:

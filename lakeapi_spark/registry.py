@@ -51,7 +51,7 @@ from lakeapi_spark.operators.filters import split_param_postfix
 from lakeapi_spark.operators.partitioning import apply_partition_pruning
 from lakeapi_spark.operators.pipeline import QueryRequest, apply_query
 from lakeapi_spark.operators.nearby import nearby as nearby_op
-from lakeapi_spark.operators.search import search as search_op
+from lakeapi_spark.operators.search import search as search_op, search_terms
 from lakeapi_spark.sources.readers import expand_wildcard, read_source
 
 #: sources whose DataFrames re-query the remote side on every action, so
@@ -300,6 +300,7 @@ def compile_request(
         # sort/paging, score, then page the scored result.
         if not cfg.search:
             raise MissingSearchConfigError(name, "has no search config")
+        search_terms(search_text)  # typed 400 before any BM25 index build
         req.sortby, req.limit, req.offset = [], None, None
         out = apply_query(df, req)
         sc = cfg.search[0]

@@ -10,13 +10,16 @@ bitmap, no rewrites), UPDATE as a touched-files-only copy-on-write.
 Nothing is shared with the read endpoint's registry, so a deployment
 that never imports this module cannot mutate anything through SQL.
 
-Parsing follows the repo's no-sqlglot convention (endpoint.py:9-27): a
-structural scan over the comment-stripped statement — string literals
-preserved verbatim because they are PART of the expressions — with the
-WHERE/SET expression text handed to Spark's own parser (``F.expr``)
+Parsing is a small structural scan over the comment-stripped
+statement (``_STRING_OR_COMMENT`` finds literals and comments). String
+literals stay verbatim because they are PART of the expressions; the
+WHERE/SET expression text goes to Spark's own parser (``F.expr``)
 inside delete_delta/update_delta. DELETE requires an explicit WHERE
 (``WHERE true`` spells a full-table delete on purpose; an absent WHERE
-is far more likely a mistake than an intent)."""
+is far more likely a mistake than an intent). That guard is why the
+statement does not go through Catalyst's parser as the read endpoint
+does: Spark parses ``DELETE FROM t`` to a literal-true condition, so an
+absent WHERE no longer shows in the plan."""
 
 from __future__ import annotations
 
@@ -24,7 +27,18 @@ import re
 
 from pyspark.sql import SparkSession
 
-from lakeapi_spark.sql.endpoint import _STRING_OR_COMMENT, SqlValidationError
+from lakeapi_spark.sql.endpoint import SqlValidationError
+
+_STRING_OR_COMMENT = re.compile(
+    r"""
+    '(?:[^'\\]|\\.|'')*'    # single-quoted string ('' and \' escapes)
+  | "(?:[^"\\]|\\.|"")*"    # double-quoted string
+  | `(?:[^`]|``)*`          # backtick identifier
+  | --[^\n]*                # line comment
+  | /\*.*?\*/               # block comment
+    """,
+    re.VERBOSE | re.DOTALL,
+)
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 _DELETE_HEAD = re.compile(

@@ -1,38 +1,35 @@
-"""SQL endpoint: validated pass-through to ``spark.sql`` (§2.8, §3.2).
+"""SQL endpoint: validated pass-through to Spark SQL (§2.8, §3.2).
 
 The reference parses user SQL with sqlglot, whitelists the statement
 node type (Select / Union / Intersect / Except / CTE -> anything else
-is HTTP 400), extracts referenced table names from the AST, registers
-only those configured tables, and executes the original SQL string
-(endpoint/sql_endpoint.py:89-190).
+is HTTP 400), registers only the configured tables the AST references,
+and executes the statement (endpoint/sql_endpoint.py:15-43,89-190).
 
-sqlglot isn't available in this environment, so validation is a small
-token scanner that mirrors the reference's *node-type* property
-instead of blacklisting keywords anywhere (a blacklist 400s legal
-queries touching columns/aliases named ``set``, ``copy``, ``add``, …):
+Here Catalyst's own parser plays sqlglot's part, so the tree that is
+checked is the tree that runs:
 
-- strip comments/strings, require balanced parens and a single
-  statement (no interior ``;``);
-- the statement verb must be SELECT (or a parenthesized SELECT /
-  WITH prologue). Crucially the verb is re-checked AFTER the CTE
-  prologue, because Spark accepts ``WITH x AS (...) INSERT INTO …`` —
-  first-keyword checks alone would let writes through;
-- Spark's script transform (``SELECT TRANSFORM(...) USING 'cmd'``)
-  is the one mutation/escape hatch that lives inside a SELECT; it is
-  rejected by its mandatory ``USING '<string>'`` clause (join USING
-  is always followed by ``(`` so there is no collision).
+- parse: the session's ``sqlParser().parsePlan``. A ``ParseException``
+  (bad syntax, unbalanced parens, more than one statement) is a
+  :class:`SqlValidationError`.
+- statement kind: every node of the parsed plan must be one of the
+  read-only query nodes in ``_READ_ONLY``. The walk follows
+  ``children()`` and ``innerChildren()``; the latter carries CTE bodies
+  and subquery-expression plans. It is a whitelist, not a ``Command``
+  blacklist, because several writes are not commands
+  (``INSERT OVERWRITE DIRECTORY``, ``FROM s INSERT INTO t``, ``CALL``,
+  ``EXECUTE IMMEDIATE``), a script transform sits inside a SELECT, and
+  ``IDENTIFIER('t')`` names its table only at analysis time.
+- visibility: the ``UnresolvedRelation`` names, except references to a
+  CTE in scope (see :func:`_gate`).
 
-Table references are extracted with a per-paren-depth relation
-scanner so comma joins (``FROM a, b``) and lateral subqueries are
-subject to the same visibility check as FROM/JOIN targets
-(ref sql_endpoint.py:15-43 registers only referenced configured
-tables).
+:func:`run_sql` then runs the plan it checked (``Dataset.ofRows``)
+rather than handing the text to ``spark.sql`` for a second parse.
 """
 
 from __future__ import annotations
 
-import re
-
+from py4j.java_gateway import JavaObject
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -40,281 +37,75 @@ class SqlValidationError(ValueError):
     """Maps to HTTP 400 in the service layer (ref sql_endpoint.py:118-124)."""
 
 
-_STRING_OR_COMMENT = re.compile(
-    r"""
-    '(?:[^']|'')*'          # single-quoted string ('' escape)
-  | "(?:[^"]|"")*"          # double-quoted identifier
-  | `(?:[^`]|``)*`          # backtick identifier
-  | --[^\n]*                # line comment
-  | /\*.*?\*/               # block comment
-    """,
-    re.VERBOSE | re.DOTALL,
-)
-
-#: statement kinds the reference allows (sql_endpoint.py:118-124)
-_ALLOWED_FIRST = {"select", "with"}
-
-_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*")
-_TOKEN = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*|[(),;]")
-
-#: keywords that terminate a FROM relation list
-_CLAUSE_KEYWORDS = {
-    "where", "group", "order", "having", "limit", "offset", "union",
-    "intersect", "except", "window", "qualify", "distribute", "cluster",
-    "sort", "select", "when", "then", "else", "end", "and", "or", "not",
-}
-
-#: words that can appear in relation position but are not table names
-#: ("table" is handled inline: ``TABLE <name>`` keeps expecting a relation)
-_RELATION_KEYWORDS = {"lateral", "values", "unnest"}
+#: parsed-plan node kinds of a read-only query (Spark 4.1 parser output
+#: for SELECT / set operations / CTEs / VALUES / table-valued functions)
+_READ_ONLY = frozenset({
+    "Project", "Filter", "Aggregate", "UnresolvedHaving", "Join", "LateralJoin",
+    "Generate", "Union", "Intersect", "Except", "Distinct", "Sort",
+    "GlobalLimit", "LocalLimit", "Offset", "SubqueryAlias",
+    "UnresolvedSubqueryColumnAliases", "UnresolvedWith", "WithWindowDefinition",
+    "UnresolvedRelation", "OneRowRelation", "LocalRelation",
+    "UnresolvedInlineTable", "UnresolvedTableValuedFunction",
+})
 
 
-def _scrub(sql: str) -> str:
-    return _STRING_OR_COMMENT.sub(" '' ", sql)
+def _seq(seq: JavaObject) -> list[JavaObject]:
+    return [seq.apply(i) for i in range(seq.size())]
 
 
-_PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+def _gate(plan: JavaObject) -> set[str]:
+    """Reject any node outside ``_READ_ONLY``; return the base relations.
 
-
-def _scrub_keep_idents(sql: str) -> str:
-    """Like ``_scrub`` but backtick-quoted identifiers (Spark's identifier
-    quote) keep their content, so ``FROM `secret``` is visible to relation
-    extraction instead of vanishing with the string scrub. Quoted names
-    that aren't plain words become a sentinel no configured table can
-    match — conservative deny, never silent bypass."""
-
-    def repl(m: re.Match[str]) -> str:
-        text = m.group(0)
-        if text.startswith("`"):
-            inner = text[1:-1].replace("``", "`")
-            return inner if _PLAIN_IDENT.fullmatch(inner) else " __quoted_ident__ "
-        return " '' "
-
-    return _STRING_OR_COMMENT.sub(repl, sql)
-
-
-def _skip_parens(tokens: list[str], i: int) -> int:
-    """``tokens[i] == '('`` -> index just past the matching ``)``."""
-    depth = 0
-    n = len(tokens)
-    while i < n:
-        if tokens[i] == "(":
-            depth += 1
-        elif tokens[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return i
-
-
-def _main_verb(tokens: list[str]) -> str:
-    """The statement verb after an optional WITH prologue.
-
-    Mirrors sqlglot's node-type whitelist: ``WITH a AS (...), b AS (...)
-    <VERB> …`` — the CTE bodies are skipped as balanced paren groups and
-    ``<VERB>`` is what gets whitelisted, so ``WITH x AS (SELECT 1)
-    INSERT INTO t …`` is rejected even though it starts with WITH.
-    """
-    i = 0
-    n = len(tokens)
-    # parenthesized set-op members: ``(SELECT 1) UNION (SELECT 2)`` — the
-    # verb is the first non-'(' token (mirrors the _ALLOWED_FIRST skip)
-    while i < n and tokens[i] == "(":
-        i += 1
-    if i >= n:
-        return ""
-    if tokens[i].lower() != "with":
-        return tokens[i].lower()
-    i += 1
-    if i < n and tokens[i].lower() == "recursive":
-        i += 1
-    while i < n:
-        if not _WORD.fullmatch(tokens[i]):  # expected CTE name
-            return tokens[i]
-        i += 1
-        if i < n and tokens[i] == "(":  # optional column list
-            i = _skip_parens(tokens, i)
-        if i >= n or tokens[i].lower() != "as":
-            break
-        i += 1
-        if i >= n or tokens[i] != "(":
-            break
-        i = _skip_parens(tokens, i)  # CTE body
-        if i < n and tokens[i] == ",":
-            i += 1
+    CTE scope follows Spark's resolution: a CTE body sees the enclosing
+    scope plus the earlier definitions of its WITH, and its own name only
+    under RECURSIVE; the query after the WITH sees every definition; a
+    WITH inside a set-op member or subquery scopes only that subtree.
+    Qualified names (``db.t``) are never CTE references and report
+    their first part. Names are lower-cased, as Spark resolves them."""
+    tables: set[str] = set()
+    stack: list[tuple[JavaObject, frozenset[str]]] = [(plan, frozenset())]
+    while stack:
+        node, scope = stack.pop()
+        kind = node.nodeName()
+        if kind not in _READ_ONLY:
+            raise SqlValidationError(
+                f"statement kind {kind!r} is not allowed (read-only queries only)"
+            )
+        if kind == "UnresolvedRelation":
+            parts = node.multipartIdentifier()
+            name = parts.head().lower()
+            if parts.size() > 1 or name not in scope:
+                tables.add(name)
             continue
-        break
-    while i < n and tokens[i] == "(":  # (SELECT ...) UNION (SELECT ...)
-        i += 1
-    return tokens[i].lower() if i < n else ""
+        if kind == "UnresolvedWith":
+            recursive = node.allowRecursion()
+            for cte in _seq(node.cteRelations()):
+                name = cte._1().lower()
+                stack.append((cte._2(), (scope | {name}) if recursive else scope))
+                scope = scope | {name}
+            stack.append((node.child(), scope))
+            continue
+        stack.extend((c, scope) for c in _seq(node.children()) + _seq(node.innerChildren()))
+    return tables
 
 
-def validate_sql(sql: str) -> None:
-    """Raise SqlValidationError unless ``sql`` is a single read-only
-    SELECT/UNION/INTERSECT/EXCEPT/CTE statement."""
-    scrubbed = _scrub(sql)
-    if scrubbed.count("(") != scrubbed.count(")"):
-        raise SqlValidationError("unbalanced parentheses")
-    # single statement: no interior semicolons (trailing one is ok)
-    body = scrubbed.strip().rstrip(";")
-    if ";" in body:
-        raise SqlValidationError("multiple statements are not allowed")
-    tokens = _TOKEN.findall(body)
-    first = tokens[0].lower() if tokens else ""
-    if first == "(":
-        first = next((t.lower() for t in tokens if t != "("), "")
-    if first not in _ALLOWED_FIRST:
-        raise SqlValidationError(
-            "only SELECT / WITH (union/intersect/except) statements are allowed"
-        )
-    verb = _main_verb(tokens)
-    if verb != "select":
-        raise SqlValidationError(
-            f"statement kind {verb!r} is not allowed (read-only SELECT forms only)"
-        )
-    # Spark script transform: SELECT TRANSFORM(cols) USING 'cmd' — the one
-    # escape hatch inside a SELECT. After scrubbing, its command string is
-    # '' ; join USING is always followed by '(' so this cannot false-400.
-    if re.search(r"\busing\s+''", body, re.IGNORECASE):
-        raise SqlValidationError("script transform (USING '<command>') is not allowed")
+def validate_sql(sql: str) -> tuple[JavaObject, set[str]]:
+    """Parse ``sql`` with the active session's Catalyst parser and raise
+    SqlValidationError unless it is a single read-only query. Returns the
+    parsed plan and the base tables it reads."""
+    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    try:
+        plan = parser.parsePlan(sql)
+    except ParseException as e:
+        raise SqlValidationError(f"not a valid SQL statement: {e.getMessage()}") from None
+    return plan, _gate(plan)
 
 
 def referenced_tables(sql: str) -> set[str]:
-    """Every BASE relation the statement reads: FROM lists including
-    comma joins, JOIN targets, and relations inside subqueries/lateral
-    subqueries (ref _register_tables, sql_endpoint.py:15-43 registers
-    only referenced configured tables — anything else must not resolve).
-
-    CTE-SCOPE-AWARE: a CTE name shadows references only while it is in
-    scope — after its definition, within the query expression that owns
-    the WITH (and inside its own body only under RECURSIVE). Global
-    name subtraction is unsound in both directions:
-    ``WITH t AS (SELECT * FROM t) SELECT * FROM t`` reads the REAL t
-    inside the body (non-recursive CTEs are not self-visible in Spark),
-    and in ``(WITH a AS (...) SELECT ...) UNION (SELECT * FROM a)`` the
-    second member's ``a`` is a base table — a CTE does not escape its
-    set-op member. Both forms previously slipped past the visibility
-    check (found by the deep-nesting fuzz, r6)."""
-    tokens = _TOKEN.findall(_scrub_keep_idents(sql))
-    return _scan_expr(tokens, frozenset())
-
-
-def _strip_wrapping_parens(tokens: list[str]) -> list[str]:
-    while tokens and tokens[0] == "(" and _skip_parens(tokens, 0) == len(tokens):
-        tokens = tokens[1:-1]
-    return tokens
-
-
-def _scan_expr(tokens: list[str], scope: frozenset) -> set[str]:
-    """One query expression (SELECT / WITH-prologue query / wrapped
-    set-op member). ``scope`` = CTE names visible from enclosing
-    expressions."""
-    tokens = _strip_wrapping_parens(tokens)
-    if not tokens:
-        return set()
-    if tokens[0].lower() != "with":
-        return _scan_relations(tokens, scope)
-    refs: set[str] = set()
-    defined: set[str] = set()
-    i = 1
-    n = len(tokens)
-    recursive = i < n and tokens[i].lower() == "recursive"
-    if recursive:
-        i += 1
-    while i < n:
-        if not _WORD.fullmatch(tokens[i]):
-            break
-        name = tokens[i].lower()
-        i += 1
-        if i < n and tokens[i] == "(":  # optional column list
-            i = _skip_parens(tokens, i)
-        if i >= n or tokens[i].lower() != "as":
-            break
-        i += 1
-        if i >= n or tokens[i] != "(":
-            break
-        j = _skip_parens(tokens, i)
-        body_scope = scope | defined | ({name} if recursive else set())
-        refs |= _scan_expr(tokens[i + 1 : j - 1], frozenset(body_scope))
-        defined.add(name)
-        i = j
-        if i < n and tokens[i] == ",":
-            i += 1
-            continue
-        break
-    refs |= _scan_relations(tokens[i:], frozenset(scope | defined))
-    return refs
-
-
-def _scan_relations(tokens: list[str], scope: frozenset) -> set[str]:
-    """Flat relation scan of one SELECT (possibly with flat set-ops);
-    parenthesized subqueries / set-op members recurse through
-    :func:`_scan_expr` so their CTE scoping stays local."""
-    names: set[str] = set()
-    # relation-scan state per paren depth: None | "rel" (expect a relation)
-    # | "post" (just consumed one; a comma continues the list)
-    state: dict[int, str | None] = {0: None}
-    depth = 0
-    i = 0
-    n = len(tokens)
-    while i < n:
-        t = tokens[i]
-        low = t.lower()
-        if t == "(":
-            nxt = tokens[i + 1].lower() if i + 1 < n else ""
-            if nxt in ("select", "with"):
-                # full subquery / set-op member: recurse with the
-                # CURRENT scope; CTEs defined inside stay inside
-                j = _skip_parens(tokens, i)
-                names |= _scan_expr(tokens[i + 1 : j - 1], scope)
-                if state.get(depth) == "rel":
-                    state[depth] = "post"  # following word is an alias
-                i = j
-                continue
-            inherit = state.get(depth) == "rel"
-            if inherit:
-                # what follows the closing paren is an alias, not a table
-                state[depth] = "post"
-            depth += 1
-            # '(' in relation position over a non-subquery — ``(t)``,
-            # ``((t))``, ``(t JOIN u ON …)``, ``(TABLE t)`` — is a
-            # parenthesized relation: the inner depth inherits the
-            # expect-a-relation state (Spark grammar: '(' relation ')')
-            state[depth] = "rel" if inherit else None
-            i += 1
-            continue
-        if t == ")":
-            state.pop(depth, None)
-            depth = max(0, depth - 1)
-            i += 1
-            continue
-        cur = state.get(depth)
-        if low in ("from", "join"):
-            state[depth] = "rel"
-        elif cur == "rel" and _WORD.fullmatch(t):
-            if low == "table":
-                pass  # ``(TABLE name)``: the relation is the next word
-            elif low in _RELATION_KEYWORDS:
-                # LATERAL (SELECT…), VALUES (...), table-valued fns: the
-                # inner FROMs are scanned at their own depth
-                if low != "lateral":
-                    state[depth] = "post"
-            elif i + 1 < n and tokens[i + 1] == "(":
-                state[depth] = "post"  # table-valued function, not a table
-            else:
-                # an in-scope CTE name is not a base relation; qualified
-                # names (db.t) always are — CTEs cannot be qualified
-                if "." in low or low not in scope:
-                    names.add(low.split(".")[0])
-                state[depth] = "post"
-        elif cur == "post":
-            if t == ",":
-                state[depth] = "rel"
-            elif low in _CLAUSE_KEYWORDS:
-                state[depth] = None
-        i += 1
-    return names
+    """Every base relation ``sql`` reads, CTE references excluded (ref
+    _register_tables, sql_endpoint.py:15-43). Raises SqlValidationError
+    for anything :func:`validate_sql` rejects."""
+    return validate_sql(sql)[1]
 
 
 def run_sql(
@@ -322,17 +113,14 @@ def run_sql(
     sql: str,
     allowed_tables: set[str] | None = None,
 ) -> DataFrame:
-    """Validate, check table visibility, execute. ``referenced_tables``
-    is already CTE-scope-aware, so visibility compares base relations
-    directly — no global CTE-name subtraction (that subtraction was the
-    bypass vector for CTE names shadowing real tables)."""
-    validate_sql(sql)
+    """Validate, check table visibility, and run the validated plan."""
+    plan, tables = validate_sql(sql)
     if allowed_tables is not None:
-        refs = referenced_tables(sql)
-        unknown = refs - {t.lower() for t in allowed_tables}
+        unknown = tables - {t.lower() for t in allowed_tables}
         if unknown:
             raise SqlValidationError(f"unknown or unauthorized tables: {sorted(unknown)}")
-    return spark.sql(sql)
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan)
+    return DataFrame(jdf, spark)
 
 
 def explain_sql(
@@ -346,7 +134,7 @@ def explain_sql(
     executing — the introspection a serving API exposes so users can
     see pushdown/pruning/join strategy for their query without paying
     for it (and without any new attack surface: the statement itself
-    still has to pass the SELECT-only whitelist; only the explain mode
+    still has to pass the read-only whitelist; only the explain mode
     string is extra, and it is validated against Spark's closed set).
     ``mode``: simple | extended | codegen | cost | formatted."""
     if mode not in ("simple", "extended", "codegen", "cost", "formatted"):

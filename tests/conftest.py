@@ -18,35 +18,26 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 #: SOAK tier (VERDICT r13 #2a): the full suite grew past the driver's
 #: pytest window (r13's driver run truncated at ~79% with zero failure
-#: markers — the green signal was lost, not broken). The names below
-#: are the measured slowest deep-coverage tests (~13 min of a ~36 min
-#: serial run, --durations on 2026-08-18) whose guarantees are either
-#: re-proven every round by the fresh-process oracle drive
-#: (tools/drive_contract.py drives all 349 queries vs DuckDB: the
-#: *_driver_canon / all_queries_run / registry plan sweeps) or are
-#: slow-converging property repeats with a faster sibling kept in the
-#: default tier (index refresh/retention; the stream_maintained
+#: markers — the green signal was lost, not broken). Tests marked
+#: ``@pytest.mark.soak`` are the measured slowest deep-coverage tests
+#: (~13 min of a ~36 min serial run, --durations on 2026-08-18) whose
+#: guarantees are either re-proven every round by the fresh-process
+#: oracle drive (tools/drive_contract.py drives all 349 queries vs
+#: DuckDB: the *_driver_canon / all_queries_run / registry plan sweeps)
+#: or are slow-converging property repeats with a faster sibling kept
+#: in the default tier (index refresh/retention; the stream_maintained
 #: aggregate test stays). They SKIP by default so the default run
 #: completes inside the driver's window, and run when
 #: ``SPARK_GRAFT_SOAK=1`` is set — `SPARK_GRAFT_SOAK=1 python -m
 #: pytest tests/ -q` is the full-coverage invocation (run and recorded
-#: each optimization round).
-SOAK_TEST_NAMES = {
-    "test_oracle_types_survive_driver_canon",
-    "test_all_queries_run",
-    "test_full_pipeline_chain_composes",
-    "test_stream_maintained_ivf_index",
-    "test_stream_maintained_lsh_index",
-    "test_spark_results_survive_driver_canon",
-    "test_registry_no_unbounded_global_windows",
-    "test_lsh_index_snapshot_retention",
-    "test_ivf_index_refresh_equals_full_rebuild",
-    "test_streaming_progress_metrics_matches_batch_replay",
-    "test_bm25_refresh_pins_read_to_recorded_version",
-    "test_bm25_index_refresh_equals_full_rebuild",
-    "test_lsh_index_refresh_equals_full_rebuild",
-    "test_query_matches_oracle[kcore_copurchase]",
-}
+#: each optimization round). The marker travels with the test, so a
+#: rename cannot drop it out of the tier.
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "soak: slow deep-coverage test, runs only with SPARK_GRAFT_SOAK=1"
+    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -56,7 +47,7 @@ def pytest_collection_modifyitems(config, items):
         reason="soak tier — set SPARK_GRAFT_SOAK=1 to run (see conftest)"
     )
     for item in items:
-        if item.name in SOAK_TEST_NAMES:
+        if item.get_closest_marker("soak"):
             item.add_marker(skip)
 
 

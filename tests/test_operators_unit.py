@@ -689,6 +689,7 @@ def test_word_id_export_known_ids(spark):
     assert out[2] == (3, 1, md5("-1 1 0"))
 
 
+@pytest.mark.soak
 def test_full_pipeline_chain_composes(spark, sf_dir):
     """End-to-end composition smoke: curation verdicts -> keep set ->
     per-language quota -> deterministic shuffle+shard -> sequence
@@ -1491,6 +1492,7 @@ def test_budget_select_matches_global_window(spark):
     assert got == want and len(got) > 0
 
 
+@pytest.mark.soak
 def test_lsh_index_refresh_equals_full_rebuild(spark, tmp_path):
     """Change-feed maintenance invariant: after append + update +
     delete commits, the incrementally-refreshed index serves the SAME
@@ -1810,6 +1812,7 @@ def test_canary_hits_whitespace_normalized_copy(spark):
     assert out == {1: 1}
 
 
+@pytest.mark.soak
 def test_lsh_index_snapshot_retention(spark, tmp_path):
     """Each refresh writes a full v{N} snapshot; retention after the
     meta flip keeps only the newest _LSH_RETAIN of them so index
@@ -1861,6 +1864,7 @@ def test_lsh_index_snapshot_retention(spark, tmp_path):
     assert inc == ful and len(inc) > 0
 
 
+@pytest.mark.soak
 def test_bm25_index_refresh_equals_full_rebuild(spark, tmp_path):
     """Change-feed maintenance invariant for the BM25 index: after
     append + update + delete commits, the refreshed index serves the
@@ -1906,6 +1910,7 @@ def test_bm25_index_refresh_equals_full_rebuild(spark, tmp_path):
     assert bm25_index_refresh_delta(spark, tbl, idx, "doc_id", "text") == (3, 0)
 
 
+@pytest.mark.soak
 def test_ivf_index_refresh_equals_full_rebuild(spark, tmp_path):
     """Change-feed maintenance invariant for the IVF index: after
     append + update + delete commits, the refreshed index (frozen
@@ -3232,6 +3237,7 @@ def test_weighted_k_core_strength_peel(spark):
         weighted_k_core(chain, s_min=2, max_iter=1)
 
 
+@pytest.mark.soak
 def test_bm25_refresh_pins_read_to_recorded_version(spark, tmp_path, monkeypatch):
     """Race guard: if a commit lands between the refresh's
     delta_snapshot() probe and its table read, the index must still

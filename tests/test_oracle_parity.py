@@ -8,7 +8,12 @@ import pytest
 from lakeapi_spark.queries import QUERIES
 from tests.conftest import assert_matches_oracle
 
-_WITH_ORACLE = [name for name, q in QUERIES.items() if q.oracle is not None]
+#: the slowest oracle check is in the soak tier (see conftest)
+_WITH_ORACLE = [
+    pytest.param(name, marks=pytest.mark.soak) if name == "kcore_copurchase" else name
+    for name, q in QUERIES.items()
+    if q.oracle is not None
+]
 
 
 @pytest.mark.parametrize("name", _WITH_ORACLE)
@@ -26,6 +31,7 @@ def test_entry_smoke(spark):
     assert df.schema is not None
 
 
+@pytest.mark.soak
 def test_all_queries_run(spark, sf_dir):
     """Queries without an oracle still must run and return a DataFrame."""
     for name, q in QUERIES.items():
@@ -33,6 +39,7 @@ def test_all_queries_run(spark, sf_dir):
         assert df.count() >= 0, name
 
 
+@pytest.mark.soak
 def test_oracle_types_survive_driver_canon(oracle_con):
     """Driver-canon type lint (cost round 2: CORRECTNESS_r02 hash-fails).
 
@@ -63,6 +70,7 @@ def test_oracle_types_survive_driver_canon(oracle_con):
             ), f"{name}.{field.name}: nested type {t} crashes the driver canonicalizer"
 
 
+@pytest.mark.soak
 def test_spark_results_survive_driver_canon(spark, sf_dir):
     """Spark side of the same lint: no registered query may expose a
     nested (array/map/struct) column — serialize (to_json / concat_ws)

@@ -366,6 +366,29 @@ def test_search_method_bm25_served_from_index(spark, sf_dir):
         _BM25_CACHE.pop(k).unpersist()
 
 
+@pytest.mark.parametrize("method", ["like", "bm25"])
+def test_whitespace_search_text_is_typed_error(spark, sf_dir, method):
+    """All-space search text passes the length floor but names no term:
+    both methods raise SearchTooShortError before building anything (the
+    LIKE path used to hit an ``assert``, the BM25 path an empty job)."""
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.operators.search import _BM25_CACHE, SearchTooShortError
+
+    reg = TableRegistry(spark)
+    reg.register(
+        TableConfig(
+            name="docs_ws",
+            datasource=DatasourceConfig(uri=f"{sf_dir}/documents.parquet"),
+            search=[SearchConfig("search", ["text"], method, id_column="doc_id")],
+        )
+    )
+    before = set(_BM25_CACHE)
+    for text in ("   ", "     "):
+        with pytest.raises(SearchTooShortError):
+            compile_request(reg, "docs_ws", {}, search_text=text)
+    assert set(_BM25_CACHE) == before
+
+
 def test_serve_request_streams_unbounded_exports(spark, sf_dir):
     """limit=-1 on an allow_get_all_pages table returns a chunk
     iterator (never a whole-result buffer); bounded requests return

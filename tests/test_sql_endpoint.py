@@ -9,6 +9,9 @@ from lakeapi_spark.catalog import TABLES, register_views
 from lakeapi_spark.sql import SqlValidationError, run_sql, validate_sql
 from lakeapi_spark.sql.endpoint import referenced_tables
 
+# validation parses with the active session's Catalyst parser
+pytestmark = pytest.mark.usefixtures("spark")
+
 
 def test_select_allowed():
     validate_sql("SELECT 1")
@@ -17,6 +20,9 @@ def test_select_allowed():
     validate_sql("SELECT a FROM t1 UNION SELECT b FROM t2")
     validate_sql("SELECT a FROM t1 INTERSECT SELECT b FROM t2")
     validate_sql("SELECT a FROM t1 EXCEPT SELECT b FROM t2")
+    validate_sql("SELECT * FROM t LIMIT 5 OFFSET 2")
+    validate_sql("SELECT sum(x) OVER w FROM t WINDOW w AS (PARTITION BY y)")
+    validate_sql("SELECT * FROM (SELECT 1) s(a)")
 
 
 @pytest.mark.parametrize(
@@ -34,6 +40,15 @@ def test_select_allowed():
         "EXPLAIN SELECT 1",
         "SELECT * FROM t WHERE a = (SELECT 1",  # unbalanced
         "MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN DELETE",
+        # writes and side effects that are not Command nodes, or that
+        # a first-keyword check would miss
+        "INSERT OVERWRITE DIRECTORY '/tmp/x' SELECT 1",
+        "FROM s INSERT INTO t SELECT *",
+        "CALL sys.x()",
+        "EXECUTE IMMEDIATE 'DROP TABLE t'",
+        "CACHE TABLE t",
+        "USE db",
+        "ADD JAR /x.jar",
     ],
 )
 def test_rejected(sql):
@@ -232,11 +247,29 @@ def test_parenthesized_relation_visibility():
 
 def test_backtick_identifier_visibility():
     """Backticks are Spark's identifier quote: `secret` must not vanish with
-    the string scrub. Non-word quoted names become a sentinel that can never
-    match a configured table (conservative deny)."""
+    the string scrub. A quoted name that is not a plain word is reported
+    as written, so it passes only when a table of that name is allowed."""
     assert referenced_tables("SELECT * FROM `secret_table`") == {"secret_table"}
     assert referenced_tables("SELECT * FROM (`secret_table`)") == {"secret_table"}
-    assert referenced_tables("SELECT * FROM `weird name`") == {"__quoted_ident__"}
+    assert referenced_tables("SELECT * FROM `weird name`") == {"weird name"}
+
+
+def test_run_sql_scanner_bypasses_blocked(spark):
+    """A text scanner that disagrees with Spark's parser let both of these
+    read a hidden view: Spark's backslash-escaped quote hid ``FROM secret``
+    inside a "string", and IDENTIFIER('...') names its table only at
+    analysis time."""
+    spark.createDataFrame([("public",)], "p STRING").createOrReplaceTempView("pub")
+    spark.createDataFrame([("top-secret",)], "s STRING").createOrReplaceTempView("secret")
+    try:
+        with pytest.raises(SqlValidationError):
+            run_sql(spark, "SELECT 'a\\'' AS x, s FROM secret --'", {"pub"})
+        with pytest.raises(SqlValidationError):
+            run_sql(spark, "SELECT * FROM IDENTIFIER('secret')", {"pub"})
+        assert run_sql(spark, "SELECT 'a\\'' AS x, p FROM pub", {"pub"}).collect()[0].x == "a'"
+    finally:
+        spark.catalog.dropTempView("pub")
+        spark.catalog.dropTempView("secret")
 
 
 def test_parenthesized_setop_accepted():
@@ -468,6 +501,11 @@ class TestDmlRouter:
         with pytest.raises(SqlValidationError, match="interior ';'"):
             run_dml(
                 spark, "DELETE FROM t WHERE true; DROP TABLE t", {"t": path}
+            )
+        # a backslash-escaped quote must not hide the ';' inside a "string"
+        with pytest.raises(SqlValidationError, match="interior ';'"):
+            run_dml(
+                spark, r"DELETE FROM t WHERE p = 'a\'' ; DROP TABLE t --'", {"t": path}
             )
         with pytest.raises(SqlValidationError, match="only DELETE"):
             run_dml(spark, "INSERT INTO t VALUES (1)", {"t": path})

@@ -670,6 +670,7 @@ def test_stream_stateful_balance_matches_batch(spark, sf_dir, tmp_path):
     q.stop()
 
 
+@pytest.mark.soak
 def test_stream_maintained_lsh_index(spark, tmp_path):
     """The index-under-a-stream integration: documents arrive in three
     micro-batches, each one appends to the delta table (txn-marked)
@@ -823,6 +824,7 @@ def test_stream_maintained_aggregate(spark, tmp_path):
     assert ("g9", 1, Decimal(7)) in agg_state()  # new group appeared
 
 
+@pytest.mark.soak
 def test_stream_maintained_ivf_index(spark, tmp_path):
     """The ANN-index-under-a-stream integration (IVF twin of the LSH
     test): embeddings arrive in three micro-batches; batch 0 bootstraps
@@ -978,6 +980,7 @@ def test_stream_maintained_hll_windowed_distinct(spark, tmp_path):
     assert got2 == want2 and got2 != got
 
 
+@pytest.mark.soak
 def test_streaming_progress_metrics_matches_batch_replay(spark, tmp_path):
     """VERDICT r11 #6 property: the per-micro-batch metrics relation's
     rows_dropped_late must equal a BATCH replay of the watermark rule.
