@@ -14,7 +14,8 @@ checked is the tree that runs:
 - statement kind: every node of the parsed plan must be one of the
   read-only query nodes in ``_READ_ONLY``. The walk follows
   ``children()`` and ``innerChildren()``; the latter carries CTE bodies
-  and subquery-expression plans. It is a whitelist, not a ``Command``
+  and subquery-expression plans, except those in a WINDOW clause, which
+  the walk collects itself. It is a whitelist, not a ``Command``
   blacklist, because several writes are not commands
   (``INSERT OVERWRITE DIRECTORY``, ``FROM s INSERT INTO t``, ``CALL``,
   ``EXECUTE IMMEDIATE``), a script transform sits inside a SELECT, and
@@ -22,13 +23,14 @@ checked is the tree that runs:
 - visibility: the ``UnresolvedRelation`` names, except references to a
   CTE in scope (see :func:`_gate`).
 
-:func:`run_sql` then runs the plan it checked (``Dataset.ofRows``)
-rather than handing the text to ``spark.sql`` for a second parse.
+:func:`run_sql` parses with the session it was given and runs the plan
+it checked on that session (``Dataset.ofRows``), rather than handing
+the text to ``spark.sql`` for a second parse.
 """
 
 from __future__ import annotations
 
-from py4j.java_gateway import JavaObject
+from py4j.java_gateway import JavaGateway, JavaObject, is_instance_of
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,7 +40,10 @@ class SqlValidationError(ValueError):
 
 
 #: parsed-plan node kinds of a read-only query (Spark 4.1 parser output
-#: for SELECT / set operations / CTEs / VALUES / table-valued functions)
+#: for SELECT / set operations / CTEs / VALUES / table-valued functions /
+#: hints / TABLESAMPLE / DISTRIBUTE BY / PIVOT / UNPIVOT). A kind belongs
+#: here only if Catalyst's ``innerChildren()`` reaches every plan it holds
+#: (``WithWindowDefinition`` does not; see :func:`_window_subqueries`).
 _READ_ONLY = frozenset({
     "Project", "Filter", "Aggregate", "UnresolvedHaving", "Join", "LateralJoin",
     "Generate", "Union", "Intersect", "Except", "Distinct", "Sort",
@@ -46,14 +51,32 @@ _READ_ONLY = frozenset({
     "UnresolvedSubqueryColumnAliases", "UnresolvedWith", "WithWindowDefinition",
     "UnresolvedRelation", "OneRowRelation", "LocalRelation",
     "UnresolvedInlineTable", "UnresolvedTableValuedFunction",
+    "UnresolvedHint", "Sample", "RepartitionByExpression", "Pivot", "Unpivot",
 })
+
+_EXPRESSION = "org.apache.spark.sql.catalyst.expressions.Expression"
+_SUBQUERY = "org.apache.spark.sql.catalyst.expressions.SubqueryExpression"
 
 
 def _seq(seq: JavaObject) -> list[JavaObject]:
     return [seq.apply(i) for i in range(seq.size())]
 
 
-def _gate(plan: JavaObject) -> set[str]:
+def _window_subqueries(gateway: JavaGateway, node: JavaObject) -> list[JavaObject]:
+    """The subquery plans of a WINDOW clause. Its specs sit in a Map,
+    which Catalyst's ``expressions`` (and so ``innerChildren()``) skips."""
+    todo = [spec for spec in _seq(node.windowDefinitions().values().toSeq())
+            if is_instance_of(gateway, spec, _EXPRESSION)]  # not a `w2 AS w1` reference
+    plans = []
+    while todo:
+        expr = todo.pop()
+        if is_instance_of(gateway, expr, _SUBQUERY):
+            plans.append(expr.plan())
+        todo.extend(_seq(expr.children()))
+    return plans
+
+
+def _gate(gateway: JavaGateway, plan: JavaObject) -> set[str]:
     """Reject any node outside ``_READ_ONLY``; return the base relations.
 
     CTE scope follows Spark's resolution: a CTE body sees the enclosing
@@ -85,20 +108,37 @@ def _gate(plan: JavaObject) -> set[str]:
                 scope = scope | {name}
             stack.append((node.child(), scope))
             continue
+        if kind == "WithWindowDefinition":
+            stack.extend((p, scope) for p in _window_subqueries(gateway, node))
         stack.extend((c, scope) for c in _seq(node.children()) + _seq(node.innerChildren()))
     return tables
+
+
+def _check(spark: SparkSession, sql: str) -> tuple[JavaObject, set[str]]:
+    """Parse ``sql`` with ``spark``'s Catalyst parser and gate the plan.
+    The parser reads its settings from the thread's active session, so
+    ``spark`` is active for the parse, as it is inside ``spark.sql``."""
+    jss = spark._jsparkSession
+    sessions = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    previous = sessions.getActiveSession()
+    sessions.setActiveSession(jss)
+    try:
+        plan = jss.sessionState().sqlParser().parsePlan(sql)
+    except ParseException as e:
+        raise SqlValidationError(f"not a valid SQL statement: {e.getMessage()}") from None
+    finally:
+        if previous.isDefined():
+            sessions.setActiveSession(previous.get())
+        else:
+            sessions.clearActiveSession()
+    return plan, _gate(spark.sparkContext._gateway, plan)
 
 
 def validate_sql(sql: str) -> tuple[JavaObject, set[str]]:
     """Parse ``sql`` with the active session's Catalyst parser and raise
     SqlValidationError unless it is a single read-only query. Returns the
     parsed plan and the base tables it reads."""
-    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
-    try:
-        plan = parser.parsePlan(sql)
-    except ParseException as e:
-        raise SqlValidationError(f"not a valid SQL statement: {e.getMessage()}") from None
-    return plan, _gate(plan)
+    return _check(SparkSession.active(), sql)
 
 
 def referenced_tables(sql: str) -> set[str]:
@@ -113,8 +153,9 @@ def run_sql(
     sql: str,
     allowed_tables: set[str] | None = None,
 ) -> DataFrame:
-    """Validate, check table visibility, and run the validated plan."""
-    plan, tables = validate_sql(sql)
+    """Validate with ``spark``'s own parser, check table visibility, and
+    run the validated plan on ``spark``."""
+    plan, tables = _check(spark, sql)
     if allowed_tables is not None:
         unknown = tables - {t.lower() for t in allowed_tables}
         if unknown:

@@ -23,6 +23,19 @@ def test_select_allowed():
     validate_sql("SELECT * FROM t LIMIT 5 OFFSET 2")
     validate_sql("SELECT sum(x) OVER w FROM t WINDOW w AS (PARTITION BY y)")
     validate_sql("SELECT * FROM (SELECT 1) s(a)")
+    validate_sql("SELECT sum(x) OVER w2 FROM t WINDOW w1 AS (PARTITION BY y), w2 AS w1")
+    # hints, TABLESAMPLE, DISTRIBUTE/CLUSTER BY, PIVOT, UNPIVOT: each form
+    # still reports the table a subquery inside it reads
+    for sql in (
+        "SELECT /*+ REPARTITION(2, (SELECT max(s) FROM secret)) */ * FROM pub",
+        "SELECT * FROM pub, (SELECT * FROM secret) TABLESAMPLE (BUCKET 1 OUT OF 2)",
+        "SELECT * FROM pub DISTRIBUTE BY (SELECT max(s) FROM secret)",
+        "SELECT * FROM pub CLUSTER BY (SELECT max(s) FROM secret)",
+        "SELECT * FROM pub PIVOT (count(*) FOR p IN ((SELECT max(s) FROM secret)))",
+        "SELECT * FROM (SELECT p, (SELECT max(s) FROM secret) AS q FROM pub)"
+        " UNPIVOT (v FOR k IN (p, q))",
+    ):
+        assert referenced_tables(sql) == {"pub", "secret"}, sql
 
 
 @pytest.mark.parametrize(
@@ -255,21 +268,47 @@ def test_backtick_identifier_visibility():
 
 
 def test_run_sql_scanner_bypasses_blocked(spark):
-    """A text scanner that disagrees with Spark's parser let both of these
+    """A text scanner that disagrees with Spark's parser let the first two
     read a hidden view: Spark's backslash-escaped quote hid ``FROM secret``
     inside a "string", and IDENTIFIER('...') names its table only at
-    analysis time."""
+    analysis time. The third hides its subquery from ``innerChildren()``:
+    a WINDOW clause keeps its specs in a Map."""
     spark.createDataFrame([("public",)], "p STRING").createOrReplaceTempView("pub")
     spark.createDataFrame([("top-secret",)], "s STRING").createOrReplaceTempView("secret")
+    window = ("SELECT count(*) OVER w FROM pub"
+              " WINDOW w AS (ORDER BY CAST((SELECT max(s) FROM secret) AS INT))")
     try:
         with pytest.raises(SqlValidationError):
             run_sql(spark, "SELECT 'a\\'' AS x, s FROM secret --'", {"pub"})
         with pytest.raises(SqlValidationError):
             run_sql(spark, "SELECT * FROM IDENTIFIER('secret')", {"pub"})
+        with pytest.raises(SqlValidationError, match="unauthorized"):
+            run_sql(spark, window, {"pub"})
+        assert referenced_tables(window) == {"pub", "secret"}
         assert run_sql(spark, "SELECT 'a\\'' AS x, p FROM pub", {"pub"}).collect()[0].x == "a'"
+        assert run_sql(
+            spark,
+            "SELECT /*+ BROADCAST(pub) */ * FROM pub TABLESAMPLE (100 PERCENT) DISTRIBUTE BY p",
+            {"pub"},
+        ).collect()[0].p == "public"
     finally:
         spark.catalog.dropTempView("pub")
         spark.catalog.dropTempView("secret")
+
+
+def test_run_sql_parses_with_the_given_session(spark):
+    """run_sql parses under the session it runs on, not the active one:
+    the parser reads settings such as escapedStringLiterals from the
+    active session, so ``spark`` is made active for the parse and then
+    restored."""
+    sessions = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    active = sessions.getActiveSession().get()
+    other = spark.newSession()
+    other.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    sql = "SELECT 'a\\n' AS x"
+    assert run_sql(other, sql).collect()[0].x == "a\\n"
+    assert sessions.getActiveSession().get().equals(active)
+    assert run_sql(spark, sql).collect()[0].x == "a\n"
 
 
 def test_parenthesized_setop_accepted():
