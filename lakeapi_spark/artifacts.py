@@ -32,6 +32,12 @@ def cached_artifact(cache: dict, identity: Any, version: Any, params: tuple):
         return cache.get((identity, version, params))
 
 
+def entries(cache: dict, identity: Any) -> dict:
+    """Every entry of ``identity``, key -> artifact; never builds."""
+    with _LOCK:
+        return {k: v for k, v in cache.items() if k[0] == identity}
+
+
 def evict(cache: dict, identity: Any) -> list:
     """Drop every entry of ``identity``; returns the dropped artifacts
     (the caller releases them)."""

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakeapi_spark.operators.text import tokens
-
 #: change-feed row kinds that add (+1) vs retract (-1) a row's mass
 _ADDS = ("insert", "update_postimage")
 _RETRACTS = ("delete", "update_preimage")
@@ -253,11 +251,10 @@ def lsh_index_refresh(
 #
 # Third leg of the maintained-index trilogy (LSH near-dup, IVF ANN,
 # BM25 text search): the corpus-proportional cost of BM25 is
-# tokenizing every document into postings; doc-decomposable relations
-# (postings, doclen) refresh from the change feed at churn cost, and
-# the vocabulary statistics (term_df, n_docs, sum_dl) re-derive from
-# the MAINTAINED relations — index-sized aggregations, never a corpus
-# re-tokenize.
+# tokenizing every document into postings; the postings are
+# doc-decomposable and refresh from the change feed at churn cost, and
+# the term relation re-derives from the MAINTAINED postings — an
+# index-sized aggregation, never a corpus re-tokenize.
 
 
 def bm25_index_version(spark, index_path: str) -> int:
@@ -266,30 +263,24 @@ def bm25_index_version(spark, index_path: str) -> int:
     return lsh_index_version(spark, index_path)
 
 
-def _bm25_tokenize(docs: DataFrame, id_col: str, text_col: str):
-    """(postings, doclen) for ``docs`` — the SAME split expressions as
-    search.build_bm25_index so maintained scores match the one-shot
-    index and its SQL oracles."""
-    toks_arr = tokens(F.col(text_col))
-    base = docs.select(F.col(id_col).alias("__id"), toks_arr.alias("__toks"))
-    doclen = base.select("__id", F.size("__toks").alias("__dl"))
-    postings = (
-        base.select("__id", F.explode("__toks").alias("__tok"))
-        .groupBy("__id", "__tok")
-        .agg(F.count(F.lit(1)).alias("__tf"))
-    )
-    return postings, doclen
+def _bm25_tokenize(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Postings of ``docs`` — search.bm25_postings, the tokenize of the
+    session index, so maintained scores match it and its SQL oracles."""
+    from lakeapi_spark.operators.search import bm25_postings
+
+    return bm25_postings(docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text")))
 
 
 def _bm25_write_snapshot(
     spark,
     postings: DataFrame,
-    doclen: DataFrame,
     index_path: str,
     table_version: int,
     retain: int = _LSH_RETAIN,
 ) -> None:
     import os
+
+    from lakeapi_spark.operators.search import bm25_terms
 
     snap = os.path.join(index_path, f"v{table_version}")
     # postings laid out BY TERM: a query's `__tok IN (...)` probe prunes
@@ -300,15 +291,11 @@ def _bm25_write_snapshot(
         .write.mode("overwrite")
         .parquet(os.path.join(snap, "postings"))
     )
-    doclen.write.mode("overwrite").parquet(os.path.join(snap, "doclen"))
-    # vocabulary stats re-derived from the maintained postings/doclen —
-    # index-sized aggs, written alongside so serving never re-aggregates
-    postings.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df")).write.mode(
+    # the term relation re-derived from the maintained postings — an
+    # index-sized agg, written alongside so serving never re-aggregates
+    bm25_terms(spark.read.parquet(os.path.join(snap, "postings"))).write.mode(
         "overwrite"
-    ).parquet(os.path.join(snap, "term_df"))
-    doclen.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("__dl").alias("sum_dl")
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(snap, "stats"))
+    ).parquet(os.path.join(snap, "terms"))
     spark.createDataFrame(
         [(table_version,)], "table_version long"
     ).coalesce(1).write.mode("overwrite").parquet(_lsh_meta_path(index_path))
@@ -333,8 +320,7 @@ def bm25_index_build_delta(
     docs = read_delta(spark, table_path, {"versionAsOf": str(v)}).select(
         id_col, text_col
     )
-    postings, doclen = _bm25_tokenize(docs, id_col, text_col)
-    _bm25_write_snapshot(spark, postings, doclen, index_path, v)
+    _bm25_write_snapshot(spark, _bm25_tokenize(docs, id_col, text_col), index_path, v)
     return v
 
 
@@ -344,10 +330,10 @@ def bm25_index_refresh_delta(
     """Advance the BM25 index to the table's latest version by change
     feed: touched ids from ``delta_changes`` since the indexed version,
     their CURRENT text re-read and tokenized (churn-sized), untouched
-    postings/doclen rows carried over by broadcast anti-join; the
-    vocabulary stats re-derive from the maintained relations inside
-    the snapshot write. Deleted ids fall out naturally. No-op when the
-    table hasn't moved. Returns (new_version, n_touched)."""
+    postings carried over by broadcast anti-join; the term relation
+    re-derives from the maintained postings inside the snapshot write.
+    Deleted ids fall out naturally. No-op when the table hasn't moved.
+    Returns (new_version, n_touched)."""
     import os
 
     from lakeapi_spark.sources.delta import (
@@ -360,9 +346,7 @@ def bm25_index_refresh_delta(
     latest = delta_snapshot(spark, table_path).version
     if latest <= v0:
         return v0, 0
-    snap = os.path.join(index_path, f"v{v0}")
-    old_postings = spark.read.parquet(os.path.join(snap, "postings"))
-    old_doclen = spark.read.parquet(os.path.join(snap, "doclen"))
+    old_postings = spark.read.parquet(os.path.join(index_path, f"v{v0}", "postings"))
     touched = (
         delta_changes(spark, table_path, v_from=v0, v_to=latest)
         .select(F.col(id_col).alias("__id"))
@@ -376,15 +360,11 @@ def bm25_index_refresh_delta(
     changed = current.join(
         F.broadcast(touched.withColumnRenamed("__id", id_col)), id_col, "semi"
     )
-    new_postings, new_doclen = _bm25_tokenize(changed, id_col, text_col)
     n_touched = touched.count()
     postings = old_postings.join(F.broadcast(touched), "__id", "anti").unionByName(
-        new_postings
+        _bm25_tokenize(changed, id_col, text_col)
     )
-    doclen = old_doclen.join(F.broadcast(touched), "__id", "anti").unionByName(
-        new_doclen
-    )
-    _bm25_write_snapshot(spark, postings, doclen, index_path, latest)
+    _bm25_write_snapshot(spark, postings, index_path, latest)
     return latest, n_touched
 
 
@@ -402,19 +382,14 @@ def bm25_index_scores_delta(
     the term filter prunes the term-sorted postings parquet."""
     import os
 
-    from lakeapi_spark.operators.search import Bm25Index, bm25_scores
+    from lakeapi_spark.operators.search import Bm25Index, Bm25Segment, bm25_scores
 
-    v = bm25_index_version(spark, index_path)
-    snap = os.path.join(index_path, f"v{v}")
-    stats = spark.read.parquet(os.path.join(snap, "stats")).first()
-    idx = Bm25Index(
+    snap = os.path.join(index_path, f"v{bm25_index_version(spark, index_path)}")
+    seg = Bm25Segment(
         postings=spark.read.parquet(os.path.join(snap, "postings")),
-        doclen=spark.read.parquet(os.path.join(snap, "doclen")),
-        term_df=spark.read.parquet(os.path.join(snap, "term_df")),
-        n_docs=int(stats.n_docs),
-        avgdl=float(stats.sum_dl) / int(stats.n_docs),
+        terms=spark.read.parquet(os.path.join(snap, "terms")),
     )
-    return bm25_scores(idx, search_text, k1, b, score_col)
+    return bm25_scores(Bm25Index((seg,)), search_text, k1, b, score_col)
 
 
 # --- Incrementally-maintained IVF (ANN) index --------------------------------

@@ -160,93 +160,120 @@ def tf_search(
 # ---------------------------------------------------------------------------
 #
 # The reference persists a DuckDB FTS index next to the data and rebuilds
-# it only when the table's modified date changes (df_duckdb.py:321-379);
-# queries hit the index, never a full corpus scan. The ad-hoc
-# ``bm25_search`` above re-aggregates the corpus (doc lengths, term DFs,
-# N/avgdl) on EVERY query — 6 shuffles, which at 100 TB means re-reading
-# the corpus per search request. The index below is the Spark analogue:
+# it when the table's modified date changes (df_duckdb.py:321-379).
+# ``bm25_search`` above re-aggregates the corpus per query; the index
+# tokenizes it once per table version into one cached relation:
 #
-# - ``postings``  (__tok, __id, __tf): the inverted index. Built once per
-#   table version; co-partitioned by __id with ``doclen`` so the
-#   query-time join needs no exchange.
-# - ``doclen``    (__id, __dl) and ``term_df`` (__tok, __df): the
-#   vocabulary-sized statistics relations.
-# - ``n_docs`` / ``avgdl``: scalars, collected once at build time.
+# - ``postings`` (__id, __tok, __tf, __dl): every row carries its
+#   document's length, and each id has one more row under the token ''
+#   (never a real token) whose __tf counts the id's rows, so a document
+#   without tokens still counts in N;
+# - ``terms`` (__tok, __df, __tf, __dl): postings summed per token; the
+#   '' row holds N and sum(dl).
 #
-# Query time: filter postings/term_df to the (tiny) query term set,
-# broadcast the term stats, one co-partitioned join + one aggregate.
-
+# A search collects its terms' rows and the '' row (one job), ships idf
+# and avgdl in one map literal and sums per id over the term-filtered
+# postings with no exchange: three Spark jobs with the final top-k. A delta
+# table's index follows commits as its last full build (the base) plus
+# one tail: while every file the base read is live and unchanged, only
+# the files added since are tokenized, and the next search's term lookup
+# fills the tail's cache in the same action.
 
 from dataclasses import dataclass
 
+#: a tail of more rows than this fraction of the base's makes the refresh
+#: a full build, so the tail stays small next to what it extends
+TAIL_FRACTION = 0.25
+
 
 @dataclass
-class Bm25Index:
-    postings: DataFrame  # (__tok, __id, __tf)
-    doclen: DataFrame  # (__id, __dl)
-    term_df: DataFrame  # (__tok, __df)
-    n_docs: int
-    avgdl: float
-    #: True for session-memoized builds whose relations share the
-    #: postings lineage: query time then derives doclen as
-    #: sum(__tf) per doc (value-identical for every doc that can match
-    #: a term), so one corpus materialization serves the whole query
-    #: even after an external clearCache dropped the cache. False for
-    #: parquet-backed indexes (incremental/loaded), where the stored
-    #: doclen is a cheap doc-sized read and re-deriving it would scan
-    #: the full postings file past the term-pruned row groups.
-    doclen_from_postings: bool = False
+class Bm25Segment:
+    """One tokenized set of rows: cached postings and the terms of them."""
+
+    postings: DataFrame  # (__id, __tok, __tf, __dl)
+    terms: DataFrame  # (__tok, __df, __tf, __dl)
 
     def unpersist(self) -> None:
-        for d in (self.postings, self.doclen, self.term_df):
+        for d in (self.postings, self.terms):
             try:
                 d.unpersist()
             except Exception:  # noqa: BLE001 - already-unpersisted is fine
                 pass
 
 
-def build_bm25_index(df: DataFrame, id_col: str, text_col: str) -> Bm25Index:
-    """One corpus pass -> cached postings + stats relations.
+@dataclass
+class Bm25Index:
+    """A full build, or a full build and the tail of rows added since, with
+    no id in both. ``rows``: the full build's row count; ``files``: the
+    delta file identities it read, None where it cannot follow commits."""
 
-    The ``fan_out(by=['__id'])`` hash exchange gives postings and doclen
-    the same HashPartitioning(__id) — unconditionally, since fan_out
-    hash-repartitions whenever ``by`` is set (ADVICE r13) — so the
-    per-query join satisfies EnsureRequirements with no new exchange.
-    The build cost is paid once per table version instead of per query.
-    ``fan_out`` before the tokenize (guide §2.5): a narrow single-file
-    corpus scan would otherwise tokenize every document in one task —
-    and under the serving session's clearCache hygiene that lineage
-    re-runs, so the build stage must be parallel each time, not just
-    the first."""
+    segments: tuple[Bm25Segment, ...]
+    rows: int = 0
+    files: dict | None = None
+
+    def unpersist(self) -> None:
+        for s in self.segments:
+            s.unpersist()
+
+
+def bm25_postings(docs: DataFrame) -> DataFrame:
+    """(__id, __tok, __tf, __dl) of (__id, __text) rows; ``__dl`` is the
+    id's token count over all its rows (a per-id window: no exchange on
+    input clustered by __id)."""
+    from pyspark.sql.window import Window
+
+    toks = docs.select("__id", tokens(F.col("__text")).alias("__toks"))
+    return (
+        toks.withColumn("__dl", F.sum(F.size("__toks")).over(Window.partitionBy("__id")))
+        .select("__id", "__dl", F.explode(F.array_append("__toks", F.lit(""))).alias("__tok"))
+        .groupBy("__id", "__tok", "__dl")
+        .agg(F.count(F.lit(1)).alias("__tf"))
+        .select("__id", "__tok", "__tf", "__dl")
+    )
+
+
+def bm25_terms(postings: DataFrame) -> DataFrame:
+    """(__tok, __df, __tf, __dl): per token its document frequency, and
+    sums whose '' row is N and sum(dl)."""
+    return postings.groupBy("__tok").agg(
+        F.count(F.lit(1)).alias("__df"), F.sum("__tf").alias("__tf"), F.sum("__dl").alias("__dl")
+    )
+
+
+def _segment(postings: DataFrame) -> Bm25Segment:
+    postings = postings.persist()
+    return Bm25Segment(postings, bm25_terms(postings).persist())
+
+
+def _rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
+
+
+def build_bm25_index(df: DataFrame, id_col: str, text_col: str) -> Bm25Index:
+    """Full build, filled by one action. ``fan_out(by=['__id'])`` is its
+    one row exchange, of the raw (id, text) rows: HashPartitioning(__id)
+    carries the per-id window, the (id, token) aggregate and every search's
+    per-id sum with no further exchange, and spreads the tokenize over the
+    cores even when the scan is one file."""
     from lakeapi_spark.operators.scale import BM25_TASK_BYTES, fan_out
 
-    toks_arr = tokens(F.col("__text"))
-    # ONE exchange for the whole build, of the RAW (id, text) rows —
-    # the smallest relation in the pipeline (r13, guide §2.4): the
-    # fan-out hashes on __id, and HashPartitioning(__id) satisfies
-    # both doclen's clustering and the (__id, __tok) grouping (subset
-    # rule), so tokenize, explode and the tf aggregate all run in that
-    # one id-partitioned stage and the exploded token stream never
-    # reaches the wire. The old plan round-robined the text, then paid
-    # a second exchange of the exploded tokens into the aggregate.
-    base = fan_out(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text")),
-        per_partition_bytes=BM25_TASK_BYTES,
-        by=["__id"],
-    ).select("__id", toks_arr.alias("__toks"))
-    doclen = base.select("__id", F.size("__toks").alias("__dl")).persist()
-    postings = (
-        base.select("__id", F.explode("__toks").alias("__tok"))
-        .groupBy("__id", "__tok")
-        .agg(F.count(F.lit(1)).alias("__tf"))
-        .persist()
-    )
-    term_df = postings.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df")).persist()
-    n_docs, avgdl = doclen.agg(F.count(F.lit(1)), F.avg("__dl")).first()
-    return Bm25Index(
-        postings, doclen, term_df, int(n_docs), float(avgdl),
-        doclen_from_postings=True,
-    )
+    rows = fan_out(_rows(df, id_col, text_col), per_partition_bytes=BM25_TASK_BYTES, by=["__id"])
+    seg = _segment(bm25_postings(rows))
+    n = seg.terms.filter(F.col("__tok") == "").select("__tf").collect()  # collect: every partition
+    return Bm25Index((seg,), int(n[0][0]) if n else 0)
+
+
+def _extend(index: Bm25Index, added: DataFrame, added_rows: int) -> Bm25Index | None:
+    """``index``'s full build and a tail of the ``added`` (__id, __text)
+    rows, whose ids the caller proved new; None when the tail would pass
+    TAIL_FRACTION of the base. One partition holds the tail, which the
+    per-id and per-token groupings take as it stands: a commit costs no
+    exchange and no action of its own. Not named ``build_*``: a refresh is
+    not a full build."""
+    if added_rows > TAIL_FRACTION * index.rows:
+        return None
+    tail = _segment(bm25_postings(added.coalesce(1)))
+    return Bm25Index((index.segments[0], tail), index.rows, index.files)
 
 
 def bm25_scores(
@@ -256,127 +283,96 @@ def bm25_scores(
     b: float = 0.75,
     score_col: str = "bm25_score",
 ) -> DataFrame:
-    """(__id, score) for every doc matching >= 1 term — identical scores
-    to ``bm25_search`` (same formula, same stats), but computed from the
-    index. r13: the per-term DF is the filtered postings grouped by
-    term (filter on the group key commutes with the aggregate, so it
-    equals ``term_df`` filtered — and never touches the term_df
-    relation), and for session-memoized indexes
-    (``doclen_from_postings``) the document length is ``sum(__tf)`` per
-    doc — equal to the stored ``__dl`` for every doc that can match a
-    term (docs with zero postings never reach the join). Touching one
-    relation instead of three matters when an external ``clearCache``
-    has dropped the index materialization (session hygiene between
-    bench queries does exactly that): each referenced relation re-runs
-    its full corpus lineage independently, so the old three-relation
-    plan paid THREE tokenize passes per query and this one pays one.
-    Parquet-backed indexes keep reading their doc-sized stored doclen.
-    Wide ops: the co-partitioned doclen join + the final per-doc sum,
-    as before."""
+    """(__id, score) for every doc matching >= 1 term: the scores of
+    ``bm25_search`` (same formula, same stats), from the index. One job
+    collects each segment's rows for the terms and for '' (at most
+    segments x (terms + 1) rows); df, N and sum(dl) add over segments,
+    whose ids are disjoint. The idf and avgdl ship in one map literal, a
+    referenced object in the generated code, so neither a new term set nor
+    a new table version compiles anything. Each segment sums per id on its
+    own partitioning, with no exchange."""
     terms = sorted({t.lower() for t in search_terms(search_text)})
-    post = index.postings.filter(F.col("__tok").isin(terms))
-    dfreq = post.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    if index.doclen_from_postings:
-        doclen = index.postings.groupBy("__id").agg(F.sum("__tf").alias("__dl"))
-    else:
-        doclen = index.doclen
-    idf = F.log((F.lit(index.n_docs) - F.col("__df") + 0.5) / (F.col("__df") + 0.5) + 1)
-    denom = F.col("__tf") + k1 * (1 - b + b * F.col("__dl") / F.lit(index.avgdl))
-    contrib = idf * F.col("__tf") * (k1 + 1) / denom
-    return (
-        post.join(F.broadcast(dfreq), "__tok")
-        .join(doclen, "__id")
-        .groupBy("__id")
-        .agg(F.round(F.sum(contrib), 4).alias(score_col))
-    )
+    lookup = functools.reduce(DataFrame.union, [s.terms for s in index.segments])
+    dfs: dict[str, int] = {}
+    n_docs = sum_dl = 0
+    for tok, df, tf, dl in lookup.filter(F.col("__tok").isin(["", *terms])).collect():
+        if tok:
+            dfs[tok] = dfs.get(tok, 0) + df
+        else:
+            n_docs, sum_dl = n_docs + tf, sum_dl + dl
+    avgdl = sum_dl / max(n_docs, 1)
+    # [idf, avgdl] per term as map values: referenced objects, not code
+    w = F.create_map(*[
+        x for t in sorted(dfs)
+        for x in (F.lit(t), F.array(F.lit(math.log((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1)), F.lit(avgdl)))
+    ]).cast("map<string,array<double>>")[F.col("__tok")]
+    denom = F.col("__tf") + k1 * (1 - b + b * F.col("__dl") / w[1])
+    contrib = w[0] * F.col("__tf") * (k1 + 1) / denom
+    return functools.reduce(DataFrame.union, [
+        s.postings.filter(w.isNotNull()).groupBy("__id").agg(F.round(F.sum(contrib), 4).alias(score_col))
+        for s in index.segments
+    ])
 
 
-def bm25_search_indexed(
-    df: DataFrame,
-    index: Bm25Index,
-    id_col: str,
-    search_text: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-    score_col: str = "bm25_score",
-) -> DataFrame:
-    """Drop-in for ``bm25_search`` given a prebuilt index: full rows +
-    score, ordered score desc."""
-    scores = bm25_scores(index, search_text, k1, b, score_col)
-    return (
-        df.join(scores, df[id_col] == scores["__id"])
-        .drop("__id")
-        .orderBy(F.col(score_col).desc(), F.col(id_col))
-    )
-
-
-#: (identity, version) -> index; version comes from the table's modified
-#: date (sources.fs.latest_modification), mirroring the reference's cache
-#: key. Stale versions of the same identity are evicted on rebuild.
+#: (identity, version, build columns) -> index; version comes from the
+#: table's data version, mirroring the reference's cache key.
 _BM25_CACHE: dict[tuple, Bm25Index] = {}
 
 
+def _release(identity, old: Bm25Index) -> None:
+    """Unpersist the segments of a stale index that no live index of the
+    same table shares (a refreshed index keeps its base)."""
+    from lakeapi_spark.artifacts import entries
+
+    live = [s for idx in entries(_BM25_CACHE, identity).values() for s in idx.segments]
+    for seg in old.segments:
+        if not any(seg is s for s in live):
+            seg.unpersist()
+
+
 def bm25_index_for(
-    df: DataFrame, id_col: str, text_col: str, key: tuple
+    df: DataFrame, id_col: str, text_col: str, key: tuple, log=None
 ) -> Bm25Index:
     """Memoized index: ``key = (identity, version)`` plus the build
-    columns. A new version of the same identity evicts + unpersists the
-    stale entry (shared artifacts.versioned_artifact contract).
+    columns (shared artifacts.versioned_artifact contract: one build per
+    key under concurrent misses; a new version releases the stale entry).
+
+    ``log`` (delta tables): ``log(base)`` returns the file identities
+    ``df`` read, and the (id_col, text_col) rows of the files added since
+    the identities ``base`` with their count, or None where the log does
+    not prove them new rows of new ids on an unchanged base. A miss then
+    extends the previous version's full build with a tail.
 
     Revive-on-access (r13): an external ``spark.catalog.clearCache()``
-    (the bench/serving session hygiene between queries) silently drops
-    the index's materialization while the memo keeps handing out the
-    same DataFrames — every downstream branch then re-runs the full
-    corpus lineage. Re-marking the dropped relations persistent costs
-    nothing when they are still cached and restores single-
-    materialization semantics when they are not (the rebuild itself
-    still runs inside whichever query touches the index first — nothing
-    is precomputed outside it)."""
-    from lakeapi_spark.artifacts import versioned_artifact
+    (the bench/serving session hygiene between queries) drops the cached
+    relations while the memo keeps handing them out; re-marking them
+    persistent (postings before the terms derived from them) restores
+    single materialization at the next query."""
+    from lakeapi_spark.artifacts import entries, versioned_artifact
 
     identity, version = key
+    params = (id_col, text_col)
+
+    def build() -> Bm25Index:
+        prev = next((i for (_, _, p), i in entries(_BM25_CACHE, identity).items()
+                     if p == params and i.files is not None), None)
+        files, added = log(prev and prev.files) if log is not None else (None, None)
+        if added is not None:
+            idx = _extend(prev, _rows(added[0], id_col, text_col), added[1])
+            if idx is not None:
+                return idx
+        idx = build_bm25_index(df, id_col, text_col)
+        idx.files = files
+        return idx
+
     idx = versioned_artifact(
-        _BM25_CACHE,
-        identity,
-        version,
-        (id_col, text_col),
-        lambda: build_bm25_index(df, id_col, text_col),
-        lambda idx: idx.unpersist(),
+        _BM25_CACHE, identity, version, params, build, lambda old: _release(identity, old)
     )
-    for rel in (idx.postings, idx.doclen, idx.term_df):
-        if not rel.storageLevel.useMemory:
-            rel.persist()
+    for seg in idx.segments:
+        for rel in (seg.postings, seg.terms):
+            if not rel.storageLevel.useMemory:
+                rel.persist()
     return idx
-
-
-def save_bm25_index(index: Bm25Index, path: str) -> None:
-    """Persist the index as parquet — the 100 TB deployment shape, where
-    the index outlives the session like the reference's FTS file.
-    Postings are range-partitioned + sorted by term so a query's
-    ``__tok IN (...)`` filter prunes row groups via min/max stats."""
-    (
-        index.postings.repartitionByRange(F.col("__tok"))
-        .sortWithinPartitions("__tok")
-        .write.mode("overwrite")
-        .parquet(f"{path}/postings")
-    )
-    index.doclen.write.mode("overwrite").parquet(f"{path}/doclen")
-    index.term_df.write.mode("overwrite").parquet(f"{path}/term_df")
-    spark = index.doclen.sparkSession
-    spark.createDataFrame(
-        [(index.n_docs, index.avgdl)], "n_docs long, avgdl double"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def load_bm25_index(spark, path: str) -> Bm25Index:
-    stats = spark.read.parquet(f"{path}/stats").first()
-    return Bm25Index(
-        postings=spark.read.parquet(f"{path}/postings"),
-        doclen=spark.read.parquet(f"{path}/doclen"),
-        term_df=spark.read.parquet(f"{path}/term_df"),
-        n_docs=int(stats.n_docs),
-        avgdl=float(stats.avgdl),
-    )
 
 
 def hybrid_search(
@@ -396,10 +392,9 @@ def hybrid_search(
     candidates; final score = alpha * bm25/max_bm25 + (1-alpha) * cos,
     top ``k`` returned as (id, bm25_score, cos_sim, hybrid_score, rank).
 
-    Scale shape: stage 1 is the indexed BM25 (postings pruned to the
-    query terms, broadcast stats, co-partitioned doclen join); the
-    candidate cut and max-bm25 normalization are windows over the
-    MATCHING set only — at web scale you'd swap in a block-max WAND
+    Scale shape: stage 1 is the indexed BM25 (term-filtered postings
+    summed per id, no exchange); the candidate cut and max-bm25
+    normalization are windows over the MATCHING set only — at web scale you'd swap in a block-max WAND
     top-N, but the interface (small candidate relation out) is the
     same. Stage 2 touches ``n_candidates`` embedding rows via one
     LEFT equi-join on the id — never a corpus-wide vector scan; the

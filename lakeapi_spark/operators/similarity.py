@@ -1375,7 +1375,7 @@ def _power_direction(cov: DataFrame, iters: int, scale: int) -> DataFrame:
     preserved bit-for-bit."""
     from lakeapi_spark.operators.scale import local_df
 
-    rows = [(int(r[0]), int(r[1]), int(r[2])) for r in cov.collect()]
+    rows = [(int(r[0]), int(r[1]), None if r[2] is None else int(r[2])) for r in cov.collect()]
     res = _power_iterate_cov_local(rows, iters, scale) if rows else None
     if res is None:
         return _power_iterate_cov(cov, iters, scale)

@@ -55,7 +55,8 @@ def sliding(
     """Sliding window via bucket explosion: each event lands in
     width/step buckets (k = base, base-1, ... ). Equivalent to Spark's
     ``F.window(ts, width, step)`` but with epoch-seconds output."""
-    assert width_s % step_s == 0, "width must be a multiple of step"
+    if width_s % step_s:
+        raise ValueError("width must be a multiple of step")
     n = width_s // step_s
     base = F.floor(_epoch(F.col(ts_col)) / step_s)
     starts = F.array(*[(base - k) * step_s for k in range(n)])
@@ -1416,7 +1417,8 @@ def order_statistics(
         if g is not None:
             found[g] = (row["__s"], row["__k"], row["__v"])
     missing = [r for r in set(ends) if r not in found]
-    assert not missing, f"selection missed boundary ranks {missing}"
+    if missing:
+        raise RuntimeError(f"selection missed boundary ranks {missing}")
     if key_col is None:
         return [(r, found[r][0], None, found[r][2]) for r in ends]
     return [(r, *found[r]) for r in ends]

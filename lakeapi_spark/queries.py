@@ -11193,8 +11193,8 @@ def _bm25_incremental_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, st
     UPDATE %7==0 to doubled text, v3 DELETE %13==0) with the index
     built ONCE at v0 and advanced purely from delta_changes
     (operators/incremental.bm25_index_refresh_delta): only churned
-    docs re-tokenize; the vocabulary stats re-derive from the
-    maintained relations. Returns (table_path, index_path)."""
+    docs re-tokenize; the term relation re-derives from the
+    maintained postings. Returns (table_path, index_path)."""
     import hashlib
     import os
     import shutil
@@ -11209,7 +11209,7 @@ def _bm25_incremental_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, st
 
     dest = os.path.join(
         tempfile.gettempdir(),
-        "lakeapi_bm25_incr_" + hashlib.md5((sf_dir + ":v1").encode()).hexdigest()[:12],
+        "lakeapi_bm25_incr_" + hashlib.md5((sf_dir + ":v2").encode()).hexdigest()[:12],
     )
     tbl, idx = os.path.join(dest, "docs"), os.path.join(dest, "bm25_index")
     marker = os.path.join(dest, "_done")

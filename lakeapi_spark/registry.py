@@ -27,6 +27,13 @@ and the BM25 index key all read the same entry; delta requests with
 log-stats predicates read their own per-request file subset and are
 never memoized.
 
+BM25 search scores against the index built from the same memoized scan
+(``operators/search.py``), keyed by its version, so rows and scores never
+straddle a commit. For a delta table, a miss also hands the index the
+snapshot that scan read (``_delta_log``): a commit that only adds rows of
+new ids, as the log's per-file id ranges prove, is tokenized as a tail
+next to the last full build; any other commit rebuilds the index.
+
 ``create_views`` still freezes the SQL endpoint's temp views at the scan
 of registration time; refreshing them is out of the memo's scope.
 """
@@ -223,6 +230,26 @@ def route_params(
     return filters, list(combi_groups.values())
 
 
+def _delta_log(cfg: TableConfig, full: DataFrame, project):
+    """The ``log`` callable ``bm25_index_for`` follows a delta table's
+    commits through (see there), or None when ``full`` is not a scan of a
+    whole delta snapshot. The snapshot is the one ``full`` read."""
+    from lakeapi_spark.sources.delta import _file_identities, files_since, scan_snapshot
+
+    scan = scan_snapshot(full)
+    if scan is None:
+        return None
+    uri, snap = scan
+
+    def log(base):
+        added = None
+        if base is not None:
+            added = files_since(full.sparkSession, uri, snap, base, cfg.search[0].id_column)
+        return _file_identities(snap), added and (project(added[0]), added[1])
+
+    return log
+
+
 def compile_request(
     registry: TableRegistry,
     name: str,
@@ -320,15 +347,20 @@ def compile_request(
             if full is None:
                 full, version = registry.scan(name)
             text = F.concat_ws(" ", *[F.col(c) for c in sc.columns])
+
+            def project(d: DataFrame) -> DataFrame:
+                return d.select(F.col(sc.id_column), text.alias("__text"))
+
             idx = bm25_index_for(
-                full.select(F.col(sc.id_column), text.alias("__text")),
+                project(full),
                 sc.id_column,
                 "__text",
                 key=(f"search:{name}:{ds.uri}", version),
+                log=_delta_log(cfg, full, project),
             )
             scores = bm25_scores(idx, search_text, score_col="search_score")
             out = out.join(
-                scores.withColumnRenamed("__id", sc.id_column), sc.id_column, "inner"
+                F.broadcast(scores.withColumnRenamed("__id", sc.id_column)), sc.id_column, "inner"
             )
         else:
             out = search_op(out, sc.columns, search_text)

@@ -36,6 +36,7 @@ import decimal
 import json
 import math
 import threading
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -183,6 +184,9 @@ def _normalize_ckpt_value(v):
 _SNAPSHOT_CACHE: dict[tuple, DeltaSnapshot] = {}
 _SNAPSHOT_CACHE_MAX = 64
 _SNAPSHOT_CACHE_LOCK = threading.Lock()
+#: whole-table fallback scan -> (table uri, the snapshot it reads); see
+#: :func:`scan_snapshot`
+_SCAN_SNAPSHOTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def delta_snapshot(
@@ -615,7 +619,17 @@ def read_delta_fallback(
             if _stats_overlap(snap.stats.get(p), phys_predicates)
             and _partition_overlap(pv, phys_predicates, ptypes)
         }
-    return _files_to_df(spark, base, snap, files)
+    df = _files_to_df(spark, base, snap, files)
+    if files is snap.files:
+        _SCAN_SNAPSHOTS[df] = (base, snap)
+    return df
+
+
+def scan_snapshot(df: DataFrame) -> tuple[str, DeltaSnapshot] | None:
+    """(table uri, snapshot) when ``df`` is a scan of every live file of
+    a snapshot, as :func:`read_delta_fallback` returned it; else None.
+    What the scan read, with no log listing."""
+    return _SCAN_SNAPSHOTS.get(df)
 
 
 def delta_timestamp_version(spark: SparkSession, uri: str, ts_ms: int) -> int:
@@ -813,11 +827,11 @@ def predicates_from_filters(
 
 
 def _file_stats_json(path: str) -> str | None:
-    """delta-spec ``add.stats`` JSON (numRecords/minValues/maxValues)
-    from the parquet footer — the metadata data skipping runs on. Only
-    top-level scalar columns with usable footer statistics are
-    recorded; absence is always legal (readers must keep statless
-    files)."""
+    """delta-spec ``add.stats`` JSON (numRecords/minValues/maxValues/
+    nullCount) from the parquet footer — the metadata data skipping and
+    the BM25 index refresh run on. Only top-level scalar columns with
+    usable footer statistics are recorded; absence is always legal
+    (readers must keep statless files)."""
     import pyarrow.parquet as papq
 
     try:
@@ -826,15 +840,21 @@ def _file_stats_json(path: str) -> str | None:
         return None
     mins: dict = {}
     maxs: dict = {}
+    nulls: dict = {}
     bad: set = set()  # columns with any unusable row-group stats
     for rg in range(md.num_row_groups):
         row_group = md.row_group(rg)
         for ci in range(row_group.num_columns):
             col = row_group.column(ci)
             name = col.path_in_schema
-            if "." in name or name in bad:
-                continue  # nested leaf / already disqualified
+            if "." in name:
+                continue  # nested leaf
             st = col.statistics
+            if nulls.get(name, 0) is not None:
+                known = st is not None and st.has_null_count
+                nulls[name] = nulls.get(name, 0) + st.null_count if known else None
+            if name in bad:
+                continue  # already disqualified
             if st is None or not st.has_min_max:
                 if name in mins or name in maxs:
                     # a later statless row group makes earlier file
@@ -895,7 +915,10 @@ def _file_stats_json(path: str) -> str | None:
                 continue
             mins[name] = mn if name not in mins else min(mins[name], mn)
             maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-    return json.dumps({"numRecords": md.num_rows, "minValues": mins, "maxValues": maxs})
+    nulls = {k: v for k, v in nulls.items() if v is not None}
+    return json.dumps(
+        {"numRecords": md.num_rows, "minValues": mins, "maxValues": maxs, "nullCount": nulls}
+    )
 
 
 def _partition_overlap(
@@ -2847,6 +2870,79 @@ def _file_identities(snap: DeltaSnapshot) -> dict[str, tuple]:
             else None,
         )
     return out
+
+
+#: the most paths a read lists itself rather than in a Spark job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def files_since(
+    spark: SparkSession, uri: str, snap: DeltaSnapshot, base: dict[str, tuple], key: str
+) -> tuple[DataFrame, int] | None:
+    """The rows of ``snap``'s live files outside ``base`` (the
+    ``_file_identities`` of an earlier snapshot of the table) and their
+    live row count from the log (``numRecords`` less each deletion
+    vector's cardinality), when the log proves that no such row repeats
+    a ``key`` value of a base file: each added file with rows records no
+    NULL ``key`` and an int or string [min, max] range of it that meets
+    no base file's range. None otherwise, when a base file is no longer
+    live as it was (removed, or its deletion vector changed), or when
+    the added files are too many to list without a Spark job."""
+    import bisect
+    import itertools
+
+    ids = _file_identities(snap)
+    if any(ids.get(p) != ident for p, ident in base.items()):
+        return None
+    field = next((f for f in snap.schema.fields if f.name == key), None)
+    if field is None:
+        return None
+    col = _physical_name(field)
+
+    def span(p: str, nulls_known: bool) -> tuple | None:
+        """(live rows, key min, key max) of file ``p``; None when unknown."""
+        st = snap.stats.get(p) or {}
+        n = st.get("numRecords")
+        if n is None:
+            return None
+        n -= int((_file_dv(snap, p) or {}).get("cardinality") or 0)
+        lo, hi = st.get("minValues", {}).get(col), st.get("maxValues", {}).get(col)
+        if n and (nulls_known and st.get("nullCount", {}).get(col) != 0
+                  or type(lo) is not type(hi) or type(lo) not in (int, str)):
+            return None
+        return n, lo, hi
+
+    spans = [span(p, False) for p in base]
+    if None in spans:
+        return None
+    ranges = sorted((lo, hi) for n, lo, hi in spans if n)
+    if len({type(lo) for lo, _ in ranges}) > 1:
+        return None
+    lows = [lo for lo, _ in ranges]
+    # reach[i]: the largest max of the i + 1 base ranges of smallest min
+    reach = list(itertools.accumulate((hi for _, hi in ranges), max))
+    added, rows = {}, 0
+    for p, pv in snap.files.items():
+        if p in base:
+            continue
+        got = span(p, True)
+        if got is None:
+            return None
+        n, lo, hi = got
+        if n and ranges and type(lo) is not type(lows[0]):
+            return None
+        if not n:
+            continue  # no live rows to read
+        i = bisect.bisect_right(lows, hi)
+        if i and reach[i - 1] >= lo:
+            return None  # a base range starting at or below this max reaches its min
+        added[p] = pv
+        rows += n
+    # past this many paths Spark lists them in a job of its own, which
+    # costs as much as rebuilding from the scan that already listed them
+    if len(added) > int(spark.conf.get(_LISTING_THRESHOLD)):
+        return None
+    return _files_to_df(spark, uri.rstrip("/"), snap, added), rows
 
 
 def delete_delta(

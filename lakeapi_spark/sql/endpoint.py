@@ -9,7 +9,8 @@ Here Catalyst's own parser plays sqlglot's part, so the tree that is
 checked is the tree that runs:
 
 - parse: the session's ``sqlParser().parsePlan``. A ``ParseException``
-  (bad syntax, unbalanced parens, more than one statement) is a
+  (bad syntax, unbalanced parens, more than one statement) and a
+  statement nested past the parser's recursion limit are a
   :class:`SqlValidationError`.
 - statement kind: every node of the parsed plan must be one of the
   read-only query nodes in ``_READ_ONLY``. The walk follows
@@ -31,6 +32,7 @@ the text to ``spark.sql`` for a second parse.
 from __future__ import annotations
 
 from py4j.java_gateway import JavaGateway, JavaObject, is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,6 +57,9 @@ _READ_ONLY = frozenset({
 })
 
 _EXPRESSION = "org.apache.spark.sql.catalyst.expressions.Expression"
+#: what the parser's recursion throws past its depth limit (~1,000 nested
+#: parentheses)
+_STACK_OVERFLOW = "java.lang.StackOverflowError"
 _SUBQUERY = "org.apache.spark.sql.catalyst.expressions.SubqueryExpression"
 
 
@@ -126,6 +131,10 @@ def _check(spark: SparkSession, sql: str) -> tuple[JavaObject, set[str]]:
         plan = jss.sessionState().sqlParser().parsePlan(sql)
     except ParseException as e:
         raise SqlValidationError(f"not a valid SQL statement: {e.getMessage()}") from None
+    except Py4JJavaError as e:
+        if not is_instance_of(spark.sparkContext._gateway, e.java_exception, _STACK_OVERFLOW):
+            raise
+        raise SqlValidationError("statement nested too deeply to parse") from None
     finally:
         if previous.isDefined():
             sessions.setActiveSession(previous.get())

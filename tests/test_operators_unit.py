@@ -156,48 +156,21 @@ def test_bm25_index_matches_adhoc(spark, sf_dir):
     """The persisted-index path must produce byte-identical scores to the
     per-query corpus aggregation it replaces."""
     from lakeapi_spark.catalog import table
-    from lakeapi_spark.operators.search import (
-        bm25_search,
-        bm25_search_indexed,
-        build_bm25_index,
-    )
+    from lakeapi_spark.operators.search import bm25_scores, bm25_search, build_bm25_index
 
     docs = table(spark, sf_dir, "documents")
     idx = build_bm25_index(docs, "doc_id", "text")
     try:
-        adhoc = {
-            r.doc_id: r.bm25_score
-            for r in bm25_search(docs, "doc_id", "text", "spark window").collect()
-        }
-        indexed = {
-            r.doc_id: r.bm25_score
-            for r in bm25_search_indexed(docs, idx, "doc_id", "spark window").collect()
-        }
-        assert indexed == adhoc and len(indexed) > 0
-    finally:
-        idx.unpersist()
-
-
-def test_bm25_index_save_load_roundtrip(spark, tmp_path):
-    from lakeapi_spark.operators.search import (
-        bm25_scores,
-        build_bm25_index,
-        load_bm25_index,
-        save_bm25_index,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "spark spark window"), (2, "spark only"), (3, "nothing here")], ["id", "t"]
-    )
-    idx = build_bm25_index(df, "id", "t")
-    try:
-        path = str(tmp_path / "bm25_idx")
-        save_bm25_index(idx, path)
-        loaded = load_bm25_index(spark, path)
-        assert loaded.n_docs == idx.n_docs and loaded.avgdl == idx.avgdl
-        a = {r["__id"]: r.bm25_score for r in bm25_scores(idx, "spark window").collect()}
-        b = {r["__id"]: r.bm25_score for r in bm25_scores(loaded, "spark window").collect()}
-        assert a == b and len(a) == 2
+        sizes = []
+        for text in ("spark window", "delta lake table", "zzzz"):
+            adhoc = {
+                r.doc_id: r.bm25_score
+                for r in bm25_search(docs, "doc_id", "text", text).collect()
+            }
+            indexed = {r["__id"]: r.bm25_score for r in bm25_scores(idx, text).collect()}
+            assert indexed == adhoc
+            sizes.append(len(indexed))
+        assert sizes[0] > 0 and sizes[-1] == 0  # no term matches: empty, no error
     finally:
         idx.unpersist()
 
@@ -3753,9 +3726,11 @@ def test_bm25_empty_doc_doclen_zero_both_engines(spark):
     df = spark.createDataFrame(rows, "doc_id int, text string")
     idx = build_bm25_index(df, "doc_id", "text")
     try:
-        dl = {r["__id"]: r["__dl"] for r in idx.doclen.collect()}
+        postings = idx.segments[0].postings
+        dl = {r["__id"]: r["__dl"] for r in postings.filter("__tok = ''").collect()}
         assert dl == {1: 3, 2: 0, 3: 0, 4: 2}
-        assert abs(idx.avgdl - 1.25) < 1e-12
+        n, sum_dl = idx.segments[0].terms.filter("__tok = ''").select("__tf", "__dl").first()
+        assert (n, sum_dl, idx.rows) == (4, 5, 4)  # avgdl 1.25
         spark_scores = {
             r.doc_id: r.bm25_score
             for r in bm25_search(df, "doc_id", "text", "banana").collect()
@@ -4039,6 +4014,20 @@ def test_pca_top_component_known_axis(spark):
     degen = pca_top_component(const, "vec_id", "embedding").collect()
     assert all(r.loading_fp is None for r in degen)
     spark.catalog.clearCache()
+
+
+def test_power_direction_keeps_null_covariance(spark):
+    """A NULL covariance entry reaches the local iterate as None
+    (which skips it, as SQL SUM does) instead of crashing int(): the
+    result equals the relational rounds'."""
+    from lakeapi_spark.operators.similarity import _power_direction, _power_iterate_cov
+
+    cov = spark.createDataFrame(
+        [(1, 1, 4000), (1, 2, None), (2, 1, 1000), (2, 2, 2000)], "j int, k int, c long"
+    )
+    got = sorted(tuple(r) for r in _power_direction(cov, 5, 1000).collect())
+    want = sorted(tuple(r) for r in _power_iterate_cov(cov, 5, 1000).collect())
+    assert got == want and len(got) == 2
 
 
 def test_croston_intermittent_demand(spark):

@@ -540,12 +540,7 @@ def test_repeated_request_on_unchanged_table_runs_only_its_action(spark, sf_dir)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert [r["n_nationkey"] for r in json.loads(out)] == [4]
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty(10_000)
-    listed = jsc.statusStore().jobsList(None)  # a Scala Seq
-    jobs = [j for j in (listed.apply(i) for i in range(listed.size()))
-            if j.jobGroup().isDefined() and j.jobGroup().get() == group]
-    assert len(jobs) == 1
+    assert _job_count(spark, group) == 1
 
 
 def test_bm25_index_refreshes_for_data_path_relative_uri(spark, tmp_path):
@@ -669,6 +664,127 @@ def test_concurrent_requests_during_rewrite(spark, sf_dir, tmp_path, monkeypatch
     finally:
         sys.setswitchinterval(switch)
         for k in [k for k in _BM25_CACHE if k[0].startswith("search:live_docs:")]:
+            _BM25_CACHE.pop(k).unpersist()
+
+
+def _job_count(spark, group: str) -> int:
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    listed = jsc.statusStore().jobsList(None)  # a Scala Seq
+    return sum(1 for j in (listed.apply(i) for i in range(listed.size()))
+               if j.jobGroup().isDefined() and j.jobGroup().get() == group)
+
+
+def test_warm_bm25_request_runs_three_jobs(spark, sf_dir):
+    """A BM25 request on an unchanged table runs the term lookup, the
+    scores broadcast and the top-k: three Spark jobs, whatever the terms."""
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.operators.search import _BM25_CACHE
+    from lakeapi_spark.registry import serve_request
+
+    reg = TableRegistry(spark)
+    reg.register(
+        TableConfig(
+            name="warm_docs",
+            datasource=DatasourceConfig(uri=f"{sf_dir}/documents.parquet"),
+            search=[SearchConfig("text", ["text"], "bm25", "doc_id")],
+        )
+    )
+    sc = spark.sparkContext
+    try:
+        serve_request(reg, "warm_docs", search_text="spark window", limit=10)  # builds
+        for i, text in enumerate(("spark window", "delta lake table")):
+            sc.setJobGroup(f"warm-bm25-{i}", "warm bm25 request")
+            try:
+                assert serve_request(reg, "warm_docs", search_text=text, limit=10) != b"[]"
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert _job_count(spark, f"warm-bm25-{i}") <= 3
+    finally:
+        for k in [k for k in _BM25_CACHE if k[0].startswith("search:warm_docs:")]:
+            _BM25_CACHE.pop(k).unpersist()
+
+
+def test_bm25_index_follows_delta_commits(spark, tmp_path, monkeypatch):
+    """Across appends, deletes (deletion vectors), updates and an id
+    reused by an append, the served scores always equal those of a full
+    build on the table as it stands. A commit that only adds rows of new ids
+    refreshes the index without a full build, as does one that deletes
+    or rewrites only rows added since the last full build; a commit that
+    touches a file of the full build, appends an id it holds, or leaves
+    more tail files than the session lists without a Spark job makes the next
+    search build in full."""
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.operators import search
+    from lakeapi_spark.operators.search import _BM25_CACHE, bm25_scores
+    from lakeapi_spark.sources.delta import delete_delta, update_delta, write_delta
+
+    schema = "doc_id long, text string"
+    words = ["spark", "window", "delta", "lake", "table", "index"]
+    path = str(tmp_path / "live_bm25")
+    write_delta(spark.createDataFrame(
+        [(i, " ".join(words[(i + j) % 6] for j in range(1 + i % 4))) for i in range(20)], schema
+    ).coalesce(1), path)
+    reg = TableRegistry(spark)
+    reg.register(
+        TableConfig(
+            name="live_bm25",
+            datasource=DatasourceConfig(uri=path, file_type="delta"),
+            search=[SearchConfig("text", ["text"], "bm25", "doc_id")],
+        )
+    )
+    builds = []
+    build = search.build_bm25_index
+
+    def counting_build(df, id_col, text_col):
+        builds.append(1)
+        return build(df, id_col, text_col)
+
+    monkeypatch.setattr(search, "build_bm25_index", counting_build)
+
+    def append(*rows):
+        write_delta(spark.createDataFrame(list(rows), schema), path, mode="append")
+
+    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    default_listing = spark.conf.get(listing)
+
+    def append_past_listing_threshold(*rows):
+        spark.conf.set(listing, "1")  # the tail now spans more files than this
+        append(*rows)
+
+    steps = [  # (commit, full builds so far, segments of the served index)
+        (lambda: None, 1, 1),
+        (lambda: append((100, "spark spark window"), (101, "lake"), (102, "window table")), 1, 2),
+        (lambda: append((103, "spark index")), 1, 2),
+        (lambda: delete_delta(spark, path, "doc_id = 100"), 1, 2),  # DV on a tail file
+        (lambda: update_delta(spark, path, {"text": "'window spark'"}, "doc_id = 103"), 1, 2),
+        (lambda: append((5, "spark again")), 2, 1),  # reuses an id of the full build
+        (lambda: delete_delta(spark, path, "doc_id = 7"), 3, 1),  # DV on a full-build file
+        (lambda: append((200, "window window")), 3, 2),
+        (lambda: update_delta(spark, path, {"text": "'spark'"}, "doc_id = 2"), 4, 1),
+        (lambda: append((300, "lake"), (301, "index spark")), 4, 2),
+        (lambda: append_past_listing_threshold((302, "window"), (303, "lake")), 5, 1),
+    ]
+    try:
+        for i, (commit, n_builds, n_segments) in enumerate(steps):
+            commit()
+            for text in ("spark window", "lake index"):
+                got = {(r.doc_id, r.search_score) for r in compile_request(
+                    reg, "live_bm25", {}, search_text=text, limit=100).collect()}
+                full = build(reg.dataframe("live_bm25"), "doc_id", "text")
+                want = {tuple(r) for r in bm25_scores(full, text).collect()}
+                full.unpersist()
+                assert got == want and got, (i, text)
+            assert len(builds) == n_builds, i
+            live = [v for k, v in _BM25_CACHE.items() if k[0].startswith("search:live_bm25:")]
+            assert [len(idx.segments) for idx in live] == [n_segments], i
+            if n_segments == 2 and len(prev.segments) == 2:
+                assert live[0].segments[0] is prev.segments[0]  # the base is shared
+                assert not prev.segments[1].postings.storageLevel.useMemory  # old tail released
+            prev = live[0]
+    finally:
+        spark.conf.set(listing, default_listing)
+        for k in [k for k in _BM25_CACHE if k[0].startswith("search:live_bm25:")]:
             _BM25_CACHE.pop(k).unpersist()
 
 

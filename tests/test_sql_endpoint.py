@@ -311,6 +311,14 @@ def test_run_sql_parses_with_the_given_session(spark):
     assert run_sql(spark, sql).collect()[0].x == "a\n"
 
 
+def test_run_sql_deep_nesting_is_typed_error(spark):
+    """A statement nested past the parser's recursion limit raises the
+    typed 400, not the JVM's StackOverflowError through py4j."""
+    sql = "SELECT " + "(" * 3000 + "1" + ")" * 3000
+    with pytest.raises(SqlValidationError, match="nested too deeply"):
+        run_sql(spark, sql)
+
+
 def test_parenthesized_setop_accepted():
     """(SELECT 1) UNION (SELECT 2) is a legal read-only statement — the
     reference's sqlglot Union whitelist accepts it (r2 ADVICE)."""
