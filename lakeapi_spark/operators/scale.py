@@ -131,7 +131,7 @@ def fan_out(
     target = min_partitions or spark.sparkContext.defaultParallelism
     if per_partition_bytes:
         try:
-            sz = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            sz = size_estimate(df)
             target = max(2, min(target, math.ceil(sz / per_partition_bytes)))
         except Exception:  # noqa: BLE001 - connect mode / stats missing
             pass
@@ -139,6 +139,11 @@ def fan_out(
     if cur >= target:
         return df.repartition(cur, *by) if by else df
     return df.repartition(target, *by) if by else df.repartition(target)
+
+
+def size_estimate(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` estimate of ``df``: no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def plan_partitions(df: DataFrame) -> int:

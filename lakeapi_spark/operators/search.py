@@ -159,25 +159,17 @@ def tf_search(
 # Persisted BM25 index (the reference's FTS index, Spark-shaped)
 # ---------------------------------------------------------------------------
 #
-# The reference persists a DuckDB FTS index next to the data and rebuilds
-# it when the table's modified date changes (df_duckdb.py:321-379).
-# ``bm25_search`` above re-aggregates the corpus per query; the index
-# tokenizes it once per table version into one cached relation:
-#
-# - ``postings`` (__id, __tok, __tf, __dl): every row carries its
-#   document's length, and each id has one more row under the token ''
-#   (never a real token) whose __tf counts the id's rows, so a document
-#   without tokens still counts in N;
-# - ``terms`` (__tok, __df, __tf, __dl): postings summed per token; the
-#   '' row holds N and sum(dl).
-#
-# A search collects its terms' rows and the '' row (one job), ships idf
-# and avgdl in one map literal and sums per id over the term-filtered
-# postings with no exchange: three Spark jobs with the final top-k. A delta
-# table's index follows commits as its last full build (the base) plus
-# one tail: while every file the base read is live and unchanged, only
-# the files added since are tokenized, and the next search's term lookup
-# fills the tail's cache in the same action.
+# The reference rebuilds a DuckDB FTS index whenever the table's modified
+# date changes (df_duckdb.py:321-379). Here one cached relation holds the
+# tokenized table: ``postings`` (__id, __tok, __tf, __dl), each row with
+# its document's length, plus per id a row under the token '' (never a
+# real token) whose __tf counts the id's rows, so an empty document still
+# counts in N; ``terms`` sums it per token, its '' row N and sum(dl). A
+# search collects its terms' rows and '' (one job), ships idf and avgdl in
+# a map literal and sums per id over the term-filtered postings with no
+# exchange: three Spark jobs with the top-k. A delta table's index follows
+# commits as its last full build (the base) plus one tail of the files
+# added since, while every file the base read is live and unchanged.
 
 from dataclasses import dataclass
 
@@ -204,11 +196,13 @@ class Bm25Segment:
 @dataclass
 class Bm25Index:
     """A full build, or a full build and the tail of rows added since, with
-    no id in both. ``rows``: the full build's row count; ``files``: the
-    delta file identities it read, None where it cannot follow commits."""
+    no id in both. ``rows`` and ``size``: the full build's row count and
+    input size estimate; ``files``: the delta file identities it read,
+    None where it cannot follow commits."""
 
     segments: tuple[Bm25Segment, ...]
     rows: int = 0
+    size: int = 0
     files: dict | None = None
 
     def unpersist(self) -> None:
@@ -245,35 +239,41 @@ def _segment(postings: DataFrame) -> Bm25Segment:
     return Bm25Segment(postings, bm25_terms(postings).persist())
 
 
-def _rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
+def _rows(df: DataFrame, id_col: str, text: str | Column) -> DataFrame:
+    text = F.col(text) if isinstance(text, str) else text
+    return df.select(F.col(id_col).alias("__id"), text.alias("__text"))
 
 
-def build_bm25_index(df: DataFrame, id_col: str, text_col: str) -> Bm25Index:
-    """Full build, filled by one action. ``fan_out(by=['__id'])`` is its
-    one row exchange, of the raw (id, text) rows: HashPartitioning(__id)
+def build_bm25_index(df: DataFrame, id_col: str, text_col: str | Column) -> Bm25Index:
+    """Full build over ``id_col`` and ``text_col`` (a column name, or a
+    Column over ``df``), filled by one action. ``fan_out(by=['__id'])`` is
+    its one row exchange, of the raw (id, text) rows: HashPartitioning(__id)
     carries the per-id window, the (id, token) aggregate and every search's
     per-id sum with no further exchange, and spreads the tokenize over the
     cores even when the scan is one file."""
-    from lakeapi_spark.operators.scale import BM25_TASK_BYTES, fan_out
+    from lakeapi_spark.operators.scale import BM25_TASK_BYTES, fan_out, size_estimate
 
-    rows = fan_out(_rows(df, id_col, text_col), per_partition_bytes=BM25_TASK_BYTES, by=["__id"])
+    src = _rows(df, id_col, text_col)
+    rows = fan_out(src, per_partition_bytes=BM25_TASK_BYTES, by=["__id"])
     seg = _segment(bm25_postings(rows))
     n = seg.terms.filter(F.col("__tok") == "").select("__tf").collect()  # collect: every partition
-    return Bm25Index((seg,), int(n[0][0]) if n else 0)
+    return Bm25Index((seg,), int(n[0][0]) if n else 0, size_estimate(src))
 
 
 def _extend(index: Bm25Index, added: DataFrame, added_rows: int) -> Bm25Index | None:
     """``index``'s full build and a tail of the ``added`` (__id, __text)
-    rows, whose ids the caller proved new; None when the tail would pass
-    TAIL_FRACTION of the base. One partition holds the tail, which the
-    per-id and per-token groupings take as it stands: a commit costs no
-    exchange and no action of its own. Not named ``build_*``: a refresh is
-    not a full build."""
-    if added_rows > TAIL_FRACTION * index.rows:
+    rows, whose ids the caller proved new; None past TAIL_FRACTION of the
+    base's rows or past one task's share of its full build (size estimate),
+    where the full build, spread over the cores, is the faster. The tail is
+    one partition, so a commit costs no exchange and no action of its own.
+    Not named ``build_*``: a refresh is not a full build."""
+    from lakeapi_spark.operators.scale import BM25_TASK_BYTES, size_estimate
+
+    task = max(BM25_TASK_BYTES, index.size / added.sparkSession.sparkContext.defaultParallelism)
+    if added_rows > TAIL_FRACTION * index.rows or size_estimate(added) > task:
         return None
     tail = _segment(bm25_postings(added.coalesce(1)))
-    return Bm25Index((index.segments[0], tail), index.rows, index.files)
+    return Bm25Index((index.segments[0], tail), index.rows, index.size, index.files)
 
 
 def bm25_scores(
@@ -285,12 +285,13 @@ def bm25_scores(
 ) -> DataFrame:
     """(__id, score) for every doc matching >= 1 term: the scores of
     ``bm25_search`` (same formula, same stats), from the index. One job
-    collects each segment's rows for the terms and for '' (at most
-    segments x (terms + 1) rows); df, N and sum(dl) add over segments,
-    whose ids are disjoint. The idf and avgdl ship in one map literal, a
-    referenced object in the generated code, so neither a new term set nor
-    a new table version compiles anything. Each segment sums per id on its
-    own partitioning, with no exchange."""
+    collects each segment's rows for the terms and for ''; df, N and
+    sum(dl) add over segments, whose ids are disjoint. idf and avgdl ship
+    in a map literal, a referenced object in the generated code, so a new
+    term set or table version compiles nothing. Each segment sums per id,
+    with no exchange, over its postings of the terms (an IN filter, which
+    parquet postings prune row groups by). The scores are hinted for a
+    broadcast when sum(df) rows, their bound, fit the session's threshold."""
     terms = sorted({t.lower() for t in search_terms(search_text)})
     lookup = functools.reduce(DataFrame.union, [s.terms for s in index.segments])
     dfs: dict[str, int] = {}
@@ -308,10 +309,14 @@ def bm25_scores(
     ]).cast("map<string,array<double>>")[F.col("__tok")]
     denom = F.col("__tf") + k1 * (1 - b + b * F.col("__dl") / w[1])
     contrib = w[0] * F.col("__tf") * (k1 + 1) / denom
-    return functools.reduce(DataFrame.union, [
-        s.postings.filter(w.isNotNull()).groupBy("__id").agg(F.round(F.sum(contrib), 4).alias(score_col))
+    scores = functools.reduce(DataFrame.union, [
+        s.postings.filter(F.col("__tok").isin(sorted(dfs)))
+        .groupBy("__id").agg(F.round(F.sum(contrib), 4).alias(score_col))
         for s in index.segments
     ])
+    limit = scores.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    small = sum(dfs.values()) * (8 + scores._jdf.schema().defaultSize()) <= limit
+    return F.broadcast(scores) if small else scores
 
 
 #: (identity, version, build columns) -> index; version comes from the
@@ -331,38 +336,37 @@ def _release(identity, old: Bm25Index) -> None:
 
 
 def bm25_index_for(
-    df: DataFrame, id_col: str, text_col: str, key: tuple, log=None
+    df: DataFrame, id_col: str, text_col: str | Column, key: tuple, delta: tuple | None = None
 ) -> Bm25Index:
-    """Memoized index: ``key = (identity, version)`` plus the build
-    columns (shared artifacts.versioned_artifact contract: one build per
-    key under concurrent misses; a new version releases the stale entry).
-
-    ``log`` (delta tables): ``log(base)`` returns the file identities
-    ``df`` read, and the (id_col, text_col) rows of the files added since
-    the identities ``base`` with their count, or None where the log does
-    not prove them new rows of new ids on an unchanged base. A miss then
-    extends the previous version's full build with a tail.
+    """Memoized ``build_bm25_index(df, id_col, text_col)``: ``key =
+    (identity, version)`` plus the build columns (artifacts.versioned_artifact:
+    one build per key under concurrent misses; a new version releases the
+    stale entry). ``delta`` = (uri, snapshot) when ``df`` reads every live
+    file of that delta snapshot: a miss then extends an earlier full build
+    of the same columns by a tail of the files added since, where
+    ``sources.delta.files_since`` proves them new rows of new ids.
 
     Revive-on-access (r13): an external ``spark.catalog.clearCache()``
-    (the bench/serving session hygiene between queries) drops the cached
-    relations while the memo keeps handing them out; re-marking them
-    persistent (postings before the terms derived from them) restores
-    single materialization at the next query."""
+    drops the cached relations while the memo keeps handing them out;
+    re-marking them persistent (postings before the terms derived from
+    them) restores single materialization at the next query."""
     from lakeapi_spark.artifacts import entries, versioned_artifact
 
     identity, version = key
-    params = (id_col, text_col)
+    params = (id_col, str(text_col))
 
     def build() -> Bm25Index:
+        if delta is None:
+            return build_bm25_index(df, id_col, text_col)
+        from lakeapi_spark.sources.delta import _file_identities, files_since
+
         prev = next((i for (_, _, p), i in entries(_BM25_CACHE, identity).items()
                      if p == params and i.files is not None), None)
-        files, added = log(prev and prev.files) if log is not None else (None, None)
-        if added is not None:
-            idx = _extend(prev, _rows(added[0], id_col, text_col), added[1])
-            if idx is not None:
-                return idx
-        idx = build_bm25_index(df, id_col, text_col)
-        idx.files = files
+        added = prev and files_since(df.sparkSession, *delta, prev.files, id_col)
+        idx = added and _extend(prev, _rows(added[0], id_col, text_col), added[1])
+        if not idx:
+            idx = build_bm25_index(df, id_col, text_col)
+            idx.files = _file_identities(delta[1])
         return idx
 
     idx = versioned_artifact(

@@ -29,10 +29,11 @@ never memoized.
 
 BM25 search scores against the index built from the same memoized scan
 (``operators/search.py``), keyed by its version, so rows and scores never
-straddle a commit. For a delta table, a miss also hands the index the
-snapshot that scan read (``_delta_log``): a commit that only adds rows of
-new ids, as the log's per-file id ranges prove, is tokenized as a tail
-next to the last full build; any other commit rebuilds the index.
+straddle a commit. For a delta table the memo also keeps the snapshot the
+scan read, and a miss hands it to the index: a commit that only adds rows
+of new ids, as the log's per-file id ranges prove, is tokenized as a tail
+next to the last full build; any other commit rebuilds the index, as does
+re-registering the table.
 
 ``create_views`` still freezes the SQL endpoint's temp views at the scan
 of registration time; refreshing them is out of the memo's scope.
@@ -86,8 +87,9 @@ class TableRegistry:
         self.accounts = accounts or {}
         self.data_path = data_path
         self._tables: dict[str, TableConfig] = {}
-        #: (name, scan version, ()) -> scan DataFrame (module docstring)
-        self._scans: dict[tuple, DataFrame] = {}
+        #: (name, scan version, ()) -> (scan DataFrame, (uri, delta
+        #: snapshot) when it read every live file of one, else None)
+        self._scans: dict[tuple, tuple] = {}
 
     def _resolve_uri(self, cfg: TableConfig) -> str:
         """Normalize the configured uri to its Hadoop form and apply any
@@ -124,9 +126,15 @@ class TableRegistry:
         self._add(cfg)
 
     def _add(self, cfg: TableConfig) -> None:
+        from lakeapi_spark.operators.search import _BM25_CACHE
+
+        old = self._tables.get(cfg.name)
         self._tables[cfg.name] = cfg
-        # a replaced config may read differently at the same data version
+        # a replaced config may read differently at the same data version,
+        # so neither its scan nor its index may serve or seed the new one
         evict(self._scans, cfg.name)
+        for idx in evict(_BM25_CACHE, _search_identity(old)) if old else ():
+            idx.unpersist()
 
     def names(self) -> list[str]:
         return sorted(self._tables)
@@ -141,6 +149,16 @@ class TableRegistry:
         return read_source(
             self.spark, uri, ds.file_type, dict(ds.options), delta_predicates=delta_predicates
         )
+
+    def _read_scan(self, cfg: TableConfig, uri: str) -> tuple:
+        """The memo's value: the whole-table scan and, for a delta table
+        read through the log, (uri, the snapshot it read)."""
+        if cfg.datasource.file_type != "delta":
+            return self._read(cfg, uri), None
+        from lakeapi_spark.sources.delta import delta_scan
+
+        df, snap = delta_scan(self.spark, uri, dict(cfg.datasource.options))
+        return df, snap and (uri, snap)
 
     def _scan_version(self, cfg: TableConfig, uri: str) -> tuple | None:
         """The memo version of the table's scan: (config version, data
@@ -159,20 +177,22 @@ class TableRegistry:
         except (OSError, Py4JJavaError):  # missing path, unknown scheme, not a path
             return (cfg.version,) if cfg.datasource.file_type in _REQUERY_TYPES else None
 
-    def scan(self, name: str) -> tuple[DataFrame, Any]:
-        """The table's unpredicated scan and the version it was read at,
-        from the memo (read once per version; module docstring). The
-        version is also the key of artifacts built from this scan, such
-        as the BM25 index."""
+    def scan(self, name: str) -> tuple[DataFrame, Any, tuple | None]:
+        """The table's unpredicated scan, the version it was read at and,
+        for a delta table read through the log, (uri, the snapshot it
+        read), from the memo (read once per version; module docstring).
+        The version is also the key of artifacts built from this scan,
+        such as the BM25 index."""
         cfg = self.config(name)
         uri = self._resolve_uri(cfg)
         version = self._scan_version(cfg, uri)
         if version is None:
-            return self._read(cfg, uri), (cfg.version,)
-        df = versioned_artifact(
-            self._scans, name, version, (), lambda: self._read(cfg, uri), lambda _df: None
+            df, delta = self._read_scan(cfg, uri)
+            return df, (cfg.version,), delta
+        df, delta = versioned_artifact(
+            self._scans, name, version, (), lambda: self._read_scan(cfg, uri), lambda _s: None
         )
-        return df, version
+        return df, version, delta
 
     def dataframe(
         self, name: str, delta_predicates: list[tuple] | None = None
@@ -198,8 +218,8 @@ class TableRegistry:
         cfg = self.config(name)
         uri = self._resolve_uri(cfg)
         version = self._scan_version(cfg, uri)
-        df = None if version is None else cached_artifact(self._scans, name, version, ())
-        return (df if df is not None else self.dataframe(name)).schema
+        hit = None if version is None else cached_artifact(self._scans, name, version, ())
+        return (hit[0] if hit is not None else self.dataframe(name)).schema
 
     def create_views(self) -> None:
         """Temp views for the SQL endpoint over each table's current scan;
@@ -230,24 +250,9 @@ def route_params(
     return filters, list(combi_groups.values())
 
 
-def _delta_log(cfg: TableConfig, full: DataFrame, project):
-    """The ``log`` callable ``bm25_index_for`` follows a delta table's
-    commits through (see there), or None when ``full`` is not a scan of a
-    whole delta snapshot. The snapshot is the one ``full`` read."""
-    from lakeapi_spark.sources.delta import _file_identities, files_since, scan_snapshot
-
-    scan = scan_snapshot(full)
-    if scan is None:
-        return None
-    uri, snap = scan
-
-    def log(base):
-        added = None
-        if base is not None:
-            added = files_since(full.sparkSession, uri, snap, base, cfg.search[0].id_column)
-        return _file_identities(snap), added and (project(added[0]), added[1])
-
-    return log
+def _search_identity(cfg: TableConfig) -> str:
+    """The BM25 index cache identity of a table's config."""
+    return f"search:{cfg.name}:{cfg.datasource.uri}"
 
 
 def compile_request(
@@ -283,13 +288,13 @@ def compile_request(
         # a bigint column) and date/timestamp stats are isoformat
         # strings — coercion per the table type keeps skipping sound
         delta_preds = predicates_from_filters(filters, registry.schema(name)) or None
-    full = version = None
+    full = version = delta = None
     if delta_preds:
         df = registry.dataframe(name, delta_predicates=delta_preds)
     else:
         # the memoized scan; a BM25 request scores against the index of
         # this same version, so its rows and scores never straddle a rewrite
-        full, version = registry.scan(name)
+        full, version, delta = registry.scan(name)
         df = full
 
     # derived partition pruning (§2.12) before the logical filters
@@ -345,23 +350,16 @@ def compile_request(
             from lakeapi_spark.operators.search import bm25_index_for, bm25_scores
 
             if full is None:
-                full, version = registry.scan(name)
-            text = F.concat_ws(" ", *[F.col(c) for c in sc.columns])
-
-            def project(d: DataFrame) -> DataFrame:
-                return d.select(F.col(sc.id_column), text.alias("__text"))
-
+                full, version, delta = registry.scan(name)
             idx = bm25_index_for(
-                project(full),
+                full,
                 sc.id_column,
-                "__text",
-                key=(f"search:{name}:{ds.uri}", version),
-                log=_delta_log(cfg, full, project),
+                F.concat_ws(" ", *[F.col(c) for c in sc.columns]),
+                key=(_search_identity(cfg), version),
+                delta=delta,
             )
             scores = bm25_scores(idx, search_text, score_col="search_score")
-            out = out.join(
-                F.broadcast(scores.withColumnRenamed("__id", sc.id_column)), sc.id_column, "inner"
-            )
+            out = out.join(scores.withColumnRenamed("__id", sc.id_column), sc.id_column, "inner")
         else:
             out = search_op(out, sc.columns, search_text)
         # Page with the same deterministic-tiebreak discipline as paged():

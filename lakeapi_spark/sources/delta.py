@@ -36,7 +36,6 @@ import decimal
 import json
 import math
 import threading
-import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -184,9 +183,6 @@ def _normalize_ckpt_value(v):
 _SNAPSHOT_CACHE: dict[tuple, DeltaSnapshot] = {}
 _SNAPSHOT_CACHE_MAX = 64
 _SNAPSHOT_CACHE_LOCK = threading.Lock()
-#: whole-table fallback scan -> (table uri, the snapshot it reads); see
-#: :func:`scan_snapshot`
-_SCAN_SNAPSHOTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def delta_snapshot(
@@ -606,8 +602,13 @@ def read_delta_fallback(
     surviving scans). Statless files and un-coercible values are
     conservatively kept, so predicates never change results, just
     cost."""
-    snap = delta_snapshot(spark, uri, version_as_of)
-    base = uri.rstrip("/")
+    return _snapshot_df(spark, uri, delta_snapshot(spark, uri, version_as_of), predicates)
+
+
+def _snapshot_df(
+    spark: SparkSession, uri: str, snap: DeltaSnapshot, predicates: list[tuple] | None
+) -> DataFrame:
+    """The live files of ``snap`` that may meet ``predicates``, read."""
     files = snap.files
     if predicates:
         phys = {f.name: _physical_name(f) for f in snap.schema.fields}
@@ -619,17 +620,7 @@ def read_delta_fallback(
             if _stats_overlap(snap.stats.get(p), phys_predicates)
             and _partition_overlap(pv, phys_predicates, ptypes)
         }
-    df = _files_to_df(spark, base, snap, files)
-    if files is snap.files:
-        _SCAN_SNAPSHOTS[df] = (base, snap)
-    return df
-
-
-def scan_snapshot(df: DataFrame) -> tuple[str, DeltaSnapshot] | None:
-    """(table uri, snapshot) when ``df`` is a scan of every live file of
-    a snapshot, as :func:`read_delta_fallback` returned it; else None.
-    What the scan read, with no log listing."""
-    return _SCAN_SNAPSHOTS.get(df)
+    return _files_to_df(spark, uri.rstrip("/"), snap, files)
 
 
 def delta_timestamp_version(spark: SparkSession, uri: str, ts_ms: int) -> int:
@@ -704,11 +695,23 @@ def read_delta(
     both paths. ``predicates`` (closed ranges, see
     :func:`read_delta_fallback`) enable log-stats FILE skipping on the
     fallback; delta-spark does its own skipping and ignores them."""
+    return delta_scan(spark, uri, options, predicates)[0]
+
+
+def delta_scan(
+    spark: SparkSession,
+    uri: str,
+    options: dict[str, str] | None = None,
+    predicates: list[tuple] | None = None,
+) -> tuple[DataFrame, DeltaSnapshot | None]:
+    """:func:`read_delta` and the snapshot it read, when it read every
+    live file of one through the fallback (no ``predicates``); else None.
+    What a whole-table scan holds, with no second log listing."""
     opts = dict(options or {})
     try:
         import delta  # noqa: F401 - presence check only
 
-        return spark.read.options(**opts).format("delta").load(uri)
+        return spark.read.options(**opts).format("delta").load(uri), None
     except ImportError:
         version = opts.pop("versionAsOf", None)
         ts = opts.pop("timestampAsOf", None)
@@ -716,12 +719,8 @@ def read_delta(
             raise ValueError("versionAsOf and timestampAsOf are mutually exclusive")
         if ts is not None:
             version = delta_timestamp_version(spark, uri, _to_ts_ms(ts))
-        return read_delta_fallback(
-            spark,
-            uri,
-            int(version) if version is not None else None,
-            predicates=predicates,
-        )
+        snap = delta_snapshot(spark, uri, int(version) if version is not None else None)
+        return _snapshot_df(spark, uri, snap, predicates), None if predicates else snap
 
 
 def _coerce_stat_value(value, dtype: T.DataType | None):

@@ -175,6 +175,31 @@ def test_bm25_index_matches_adhoc(spark, sf_dir):
         idx.unpersist()
 
 
+def test_bm25_scores_broadcast_only_when_matching_set_fits(spark):
+    """The scores carry a broadcast hint only while sum(df) rows, the bound
+    on the matching set, fit the session's broadcast threshold."""
+    from lakeapi_spark.operators.search import bm25_scores, build_bm25_index
+
+    idx = build_bm25_index(
+        spark.createDataFrame([(i, "spark window") for i in range(50)], ["id", "t"]), "id", "t"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+
+    def hinted() -> bool:
+        return "ResolvedHint" in bm25_scores(idx, "spark")._jdf.queryExecution().analyzed().toString()
+
+    try:
+        assert hinted()
+        spark.conf.set(key, "1000")  # 50 rows of (id, score) do not fit
+        assert not hinted()
+        spark.conf.set(key, "-1")
+        assert not hinted()
+    finally:
+        spark.conf.set(key, default)
+        idx.unpersist()
+
+
 def test_bm25_cache_keyed_by_version(spark):
     from lakeapi_spark.operators.search import _BM25_CACHE, bm25_index_for
 

@@ -788,6 +788,82 @@ def test_bm25_index_follows_delta_commits(spark, tmp_path, monkeypatch):
             _BM25_CACHE.pop(k).unpersist()
 
 
+def test_bm25_index_extends_only_a_build_of_its_config(spark, tmp_path, monkeypatch):
+    """An index is extended only from a full build of the same text
+    columns and config: a second registry that serves the table's name
+    and uri with other columns, a re-registration with other columns, and
+    a tail past one task's share of the full build each rebuild in full,
+    and the served scores equal a full build of the columns now
+    configured."""
+    from pyspark.sql import functions as F
+
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.operators import scale, search
+    from lakeapi_spark.operators.search import _BM25_CACHE, bm25_scores
+    from lakeapi_spark.sources.delta import write_delta
+
+    schema = "doc_id long, title string, body string"
+    path = str(tmp_path / "cfg_bm25")
+    write_delta(spark.createDataFrame(
+        [(i, ["spark", "lake", "window"][i % 3], ["index", "table spark"][i % 2]) for i in range(12)],
+        schema,
+    ).coalesce(1), path)
+
+    def registry(columns):
+        reg = TableRegistry(spark)
+        reg.register(TableConfig(
+            name="cfg_bm25",
+            datasource=DatasourceConfig(uri=path, file_type="delta"),
+            search=[SearchConfig("text", columns, "bm25", "doc_id")],
+        ))
+        return reg
+
+    builds = []
+    build = search.build_bm25_index
+
+    def counting_build(df, id_col, text_col):
+        builds.append(1)
+        return build(df, id_col, text_col)
+
+    monkeypatch.setattr(search, "build_bm25_index", counting_build)
+    n = iter(range(100, 200))
+
+    def append_then_check(reg, columns, n_builds):
+        i = next(n)
+        write_delta(spark.createDataFrame([(i, "spark", "lake index")], schema), path, mode="append")
+        text = F.concat_ws(" ", *[F.col(c) for c in columns]).alias("t")
+        full = build(reg.dataframe("cfg_bm25").select("doc_id", text), "doc_id", "t")
+        for q in ("spark", "lake index"):
+            got = {(r.doc_id, r.search_score) for r in compile_request(
+                reg, "cfg_bm25", {}, search_text=q, limit=100).collect()}
+            assert got == {tuple(r) for r in bm25_scores(full, q).collect()} and got, (columns, q)
+        full.unpersist()
+        assert len(builds) == n_builds, columns
+
+    try:
+        title = registry(["title"])
+        compile_request(title, "cfg_bm25", {}, search_text="spark", limit=1).collect()
+        append_then_check(title, ["title"], 1)  # a tail on the title build
+        both = registry(["title", "body"])
+        append_then_check(both, ["title", "body"], 2)
+        live = [k for k in _BM25_CACHE if k[0].startswith("search:cfg_bm25:")]
+        old = [v for k, v in _BM25_CACHE.items() if k in live and "body" not in k[2][1]]
+        title.register(TableConfig(
+            name="cfg_bm25",
+            datasource=DatasourceConfig(uri=path, file_type="delta"),
+            search=[SearchConfig("text", ["body"], "bm25", "doc_id")],
+        ))
+        assert not any(k[0].startswith("search:cfg_bm25:") for k in _BM25_CACHE)
+        assert not any(s.postings.storageLevel.useMemory for idx in old for s in idx.segments)
+        append_then_check(title, ["body"], 3)
+        append_then_check(title, ["body"], 3)  # a tail on the body build
+        monkeypatch.setattr(scale, "BM25_TASK_BYTES", 1)  # one task's share is now tiny
+        append_then_check(title, ["body"], 4)
+    finally:
+        for k in [k for k in _BM25_CACHE if k[0].startswith("search:cfg_bm25:")]:
+            _BM25_CACHE.pop(k).unpersist()
+
+
 def test_typed_config_errors_name_the_table(spark, sf_dir):
     """Config and request validation raises TableConfigError subclasses
     (ValueError) carrying the table name, never ``assert`` — which
