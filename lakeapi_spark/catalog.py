@@ -15,6 +15,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeapi_spark.artifacts import versioned_artifact
+
 TABLES = (
     "region",
     "nation",
@@ -29,6 +31,37 @@ TABLES = (
 )
 
 
+class _ConfsNotHeld(Exception):
+    pass
+
+
+def _memo(spark: SparkSession) -> dict:
+    """The session's ``versioned_artifact`` cache, kept on the session
+    object so a new session never sees a dead session's plans."""
+    return spark.__dict__.setdefault("_lakeapi_memo", {})
+
+
+def _keep(_stale) -> None:
+    pass  # nothing to release: a memoized scan caches no data
+
+
+def _set_confs(spark: SparkSession) -> bool:
+    ok = True
+    for k, v in (
+        ("spark.sql.session.timeZone", "UTC"),
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.sources.partitionColumnTypeInference.enabled", "false"),
+    ):
+        try:
+            spark.conf.set(k, v)
+            ok = ok and spark.conf.get(k) == v
+        except Exception:  # immutable on some builds — best effort
+            ok = False
+    if not ok:
+        raise _ConfsNotHeld
+    return True
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
     """Determinism confs that must hold even on a caller-provided session
     (the driver passes its own SparkSession to the query builders):
@@ -40,32 +73,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
       convert below;
     - partition values stay strings (md5-derived partition dirs like
       '12' must not be inferred as ints).
-    All are runtime-settable SQL confs. Asserted ONCE per session
-    (flag on the session object, like the table memo): each conf.set is
-    a ~2-3 ms py4j round-trip and ``table()`` runs ~150 times per bench
-    pass — the confs are idempotent and nothing in the serving/bench
-    paths unsets them mid-session.
+    All are runtime-settable SQL confs. Set ONCE per session, through
+    the session memo: each conf.set is a ~2-3 ms py4j round-trip and
+    ``table()`` runs ~150 times per bench pass — the confs are
+    idempotent and nothing in the serving/bench paths unsets them
+    mid-session. The memo keeps the result only once every conf
+    verifiably holds, so a session where a set failed re-asserts them
+    on each call.
     """
-    if getattr(spark, "_lakeapi_confs_set", False):
-        return
-    ok = True
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.sources.partitionColumnTypeInference.enabled", "false"),
-    ):
-        try:
-            spark.conf.set(k, v)
-            if spark.conf.get(k) != v:
-                ok = False
-        except Exception:  # immutable on some builds — best effort
-            ok = False
-    # latch ONLY after every conf verifiably holds (ADVICE r13): a
-    # session where any set failed keeps re-asserting per call, so the
-    # old self-healing behavior is preserved for the broken-session
-    # case while the healthy path pays the ~6 ms only once
-    if ok:
-        spark._lakeapi_confs_set = True
+    try:
+        versioned_artifact(_memo(spark), "confs", None, (), lambda: _set_confs(spark), _keep)
+    except _ConfsNotHeld:
+        pass
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,32 +97,28 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     were costing more driver time than several queries' entire
     execution. The memo holds only the LAZY plan handle (the
     reference's register-routes-once shape, core/route.py): no data is
-    cached — every action still scans the parquet file — and the key
-    carries the file's (mtime, size) so a rewritten table gets a fresh
-    scan with the new schema. The memo dict lives ON the session
-    object, so a new session never sees a dead session's plans."""
+    cached — every action still scans the parquet file. The version is
+    the file's (mtime, size), so a rewritten table gets a fresh scan with
+    the new schema, and the stale one is dropped."""
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = None
     try:
         st = os.stat(path)
-        key = (sf_dir, name, st.st_mtime_ns, st.st_size)
-    except OSError:
-        pass  # odd path (dir listing race): fall through unmemoized
-    memo = getattr(spark, "_lakeapi_table_memo", None)
-    if memo is None:
-        memo = {}
-        spark._lakeapi_table_memo = memo
-    if key is not None and key in memo:
-        return memo[key]
+    except OSError:  # odd path (dir listing race): read unmemoized
+        return _read_table(spark, path, name)
+    return versioned_artifact(
+        _memo(spark), (sf_dir, name), (st.st_mtime_ns, st.st_size), (),
+        lambda: _read_table(spark, path, name), _keep,
+    )
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     # ns-timestamp columns surface as long under nanosAsLong: convert to
     # a real timestamp (µs truncation; `div` keeps 64-bit precision —
     # float division would corrupt ~1.7e18 nano epochs)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if key is not None:
-        memo[key] = df
     return df
 
 

@@ -87,8 +87,11 @@ def bm25_search(
     score(D,Q) = sum_t  ln((N - df_t + 0.5)/(df_t + 0.5) + 1)
                         * tf_tD * (k1+1) / (tf_tD + k1*(1 - b + b*|D|/avgdl))
 
+    A document is an id: its length and term counts sum over the id's
+    rows, while N counts rows, as the index (``bm25_postings``) has it.
+
     Plan shape at scale:
-    - doc lengths: per-row ``size(tokens)`` — codegen, no shuffle;
+    - doc lengths: ``size(tokens)`` summed per id — one shuffle on id;
     - corpus stats (N, avgdl): one scalar aggregate, broadcast back;
     - tf: tokens filtered to the (tiny) query term set BEFORE the
       explode aggregate — map-side partial agg, one shuffle on doc id;
@@ -101,10 +104,9 @@ def bm25_search(
     terms = sorted({t.lower() for t in search_terms(search_text)})
     toks_arr = tokens(F.col(text_col))
     base = df.select(F.col(id_col).alias("__id"), toks_arr.alias("__toks"))
-    doclen = base.select("__id", F.size("__toks").alias("__dl"))
-    stats = doclen.agg(
-        F.count(F.lit(1)).alias("__n"), F.avg("__dl").alias("__avgdl")
-    )
+    stats = base.agg(F.count(F.lit(1)).alias("__n"), F.sum(F.size("__toks")).alias("__sdl"))
+    stats = stats.select("__n", (F.col("__sdl") / F.col("__n")).alias("__avgdl"))
+    doclen = base.groupBy("__id").agg(F.sum(F.size("__toks")).alias("__dl"))
     tf = (
         base.select("__id", F.explode("__toks").alias("__tok"))
         .filter(F.col("__tok").isin(terms))

@@ -2860,7 +2860,8 @@ def _ivf_cdf_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             mode="append",
         )
         ivf_index_refresh_delta(spark, tbl, idx, "vec_id", "embedding")
-        assert ivf_index_version(spark, idx) == 3
+        if ivf_index_version(spark, idx) != 3:
+            raise RuntimeError(f"{idx}: index fixture is not at version 3")
         with open(marker, "w") as f:
             f.write("v3\n")
     return tbl, idx
@@ -11060,7 +11061,8 @@ def _lsh_incremental_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str
         )
         delete_delta(spark, tbl, "doc_id % 13 = 0")
         lsh_index_refresh(spark, tbl, idx, "doc_id", "text")
-        assert lsh_index_version(spark, idx) == 3
+        if lsh_index_version(spark, idx) != 3:
+            raise RuntimeError(f"{idx}: index fixture is not at version 3")
         with open(marker, "w") as f:
             f.write("v3\n")
     return tbl, idx
@@ -11230,7 +11232,8 @@ def _bm25_incremental_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, st
         )
         delete_delta(spark, tbl, "doc_id % 13 = 0")
         bm25_index_refresh_delta(spark, tbl, idx, "doc_id", "text")
-        assert bm25_index_version(spark, idx) == 3
+        if bm25_index_version(spark, idx) != 3:
+            raise RuntimeError(f"{idx}: index fixture is not at version 3")
         with open(marker, "w") as f:
             f.write("v3\n")
     return tbl, idx

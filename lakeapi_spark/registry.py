@@ -35,8 +35,12 @@ of new ids, as the log's per-file id ranges prove, is tokenized as a tail
 next to the last full build; any other commit rebuilds the index, as does
 re-registering the table.
 
-``create_views`` still freezes the SQL endpoint's temp views at the scan
-of registration time; refreshing them is out of the memo's scope.
+SQL. ``sql(text)`` parses once with the SQL endpoint's gate and checks
+the tables it reads against the registered names. It then installs each
+of them as a temp view of its memoized scan, so a statement reads the
+same version of a table as a request compiled at that moment: one answer
+per table. The reference likewise registers only the tables the
+statement references, per request (endpoint/sql_endpoint.py:15-43).
 """
 
 from __future__ import annotations
@@ -221,11 +225,30 @@ class TableRegistry:
         hit = None if version is None else cached_artifact(self._scans, name, version, ())
         return (hit[0] if hit is not None else self.dataframe(name)).schema
 
+    def sql(self, text: str) -> DataFrame:
+        """Run one read-only SQL statement over the registered tables: the
+        SQL endpoint's gate (``sql/endpoint.py``), visibility against
+        :meth:`names`, then each table the statement reads is installed as
+        a temp view of its memoized scan, so the statement reads what
+        ``compile_request`` serves at that moment."""
+        from lakeapi_spark.sql import endpoint
+
+        plan, tables = endpoint._check(self.spark, text)
+        names = {n.lower(): n for n in self.names()}
+        endpoint.check_visible(tables, names)
+        for table in tables:
+            self._install_view(names[table])
+        return endpoint.run_checked(self.spark, plan)
+
+    def _install_view(self, name: str) -> None:
+        self.scan(name)[0].createOrReplaceTempView(name)
+
     def create_views(self) -> None:
-        """Temp views for the SQL endpoint over each table's current scan;
-        they stay at that scan until called again."""
+        """A temp view of each table's current scan, for callers that run
+        SQL on the session themselves; :meth:`sql` refreshes the ones it
+        reads."""
         for name in self._tables:
-            self.dataframe(name).createOrReplaceTempView(name)
+            self._install_view(name)
 
 
 def route_params(

@@ -38,7 +38,7 @@ import math
 import threading
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -277,6 +277,11 @@ def _physical_name(f: T.StructField) -> str:
     logical name (mode 'none'). 'id' mode also writes physicalName, so
     reading by physical name covers both modes."""
     return (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
+
+
+def _as_column(expr: str | Column) -> Column:
+    """A Spark SQL expression string parsed by ``F.expr``; a Column as is."""
+    return expr if isinstance(expr, Column) else F.expr(expr)
 
 
 def _physical_type(dt: T.DataType) -> T.DataType:
@@ -530,6 +535,14 @@ def _files_to_df(
         ]
     )
     ptypes = {f.name: f.dataType for f in snap.schema.fields if f.name in pcols}
+    # back to logical names and types; a column whose physical form is its
+    # logical one is read as is (each cast or alias costs py4j round trips)
+    logical_cols = []
+    for f in data_fields:
+        c = F.col(phys[f.name])
+        if _physical_type(f.dataType) != f.dataType:
+            c = c.cast(f.dataType)
+        logical_cols.append(c.alias(f.name) if phys[f.name] != f.name else c)
 
     dv_files = [p for p in files if _file_dv(snap, p)]
     extra_cols = ([file_col] if file_col else []) + ([pos_col] if pos_col else [])
@@ -562,13 +575,7 @@ def _files_to_df(
         if dv_files:
             meta_cols.append(_file_path_raw_col().alias("__dv_file"))
             meta_cols.append(F.col("_metadata.row_index").alias("__dv_pos"))
-        renamed = df.select(
-            *[
-                F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-                for f in data_fields
-            ],
-            *meta_cols,
-        )
+        renamed = df.select(*logical_cols, *meta_cols)
         for c, v in zip(pcols, key):
             renamed = renamed.withColumn(c, _partition_lit(v, ptypes[c]))
         parts.append(renamed.select(scan_cols))
@@ -1628,25 +1635,32 @@ def drop_constraint_delta(spark: SparkSession, path: str, name: str) -> int:
     return snap.version + 1
 
 
-def _rules_mentioning(snap: DeltaSnapshot, col: str) -> list[str]:
+def _rules_mentioning(spark: SparkSession, snap: DeltaSnapshot, col: str) -> list[str]:
     """Labels of CHECK constraints / invariants / generation
-    expressions whose SQL mentions ``col`` as a word — the conservative
-    screen rename/drop use before changing a schema the expressions
-    compile against."""
-    import re as _re
+    expressions that reference ``col`` — the screen rename/drop use
+    before changing a schema the expressions compile against. Each rule
+    is read by Catalyst's parser; an attribute whose first name part is
+    ``col`` (case-insensitively, as Spark resolves names; backticks or
+    not) references it."""
+    from lakeapi_spark.sql.endpoint import expression_nodes, parse
 
-    pat = _re.compile(rf"(?<![A-Za-z0-9_`]){_re.escape(col)}(?![A-Za-z0-9_])")
+    def mentions(sql: str) -> bool:
+        return any(
+            e.nodeName() == "UnresolvedAttribute" and e.nameParts().head().lower() == col.lower()
+            for e in expression_nodes(parse(spark, sql, expression=True))
+        )
+
     hits = [
         label
         for label, expr in _row_rules(
             snap.schema, snap.metadata_raw.get("configuration")
         )
-        if pat.search(expr)
+        if mentions(expr)
     ]
     hits.extend(
         f"GENERATION {name}"
         for name, gexpr in _generated_fields(snap.schema).items()
-        if pat.search(gexpr) or name == col
+        if name == col or mentions(gexpr)
     )
     return hits
 
@@ -1678,7 +1692,7 @@ def rename_column_delta(
         raise ValueError(f"no column {old!r} in schema {names}")
     if new in names:
         raise ValueError(f"column {new!r} already exists in {names}")
-    broken = _rules_mentioning(snap, old)
+    broken = _rules_mentioning(spark, snap, old)
     if broken:
         raise ValueError(
             f"cannot rename {old!r}: referenced by {broken} — drop/recreate "
@@ -1732,7 +1746,7 @@ def drop_column_delta(spark: SparkSession, path: str, col: str) -> int:
         raise ValueError(
             f"cannot drop partition column {col!r} (the layout is keyed on it)"
         )
-    broken = _rules_mentioning(snap, col)
+    broken = _rules_mentioning(spark, snap, col)
     if broken:
         raise ValueError(
             f"cannot drop {col!r}: referenced by {broken} — drop/recreate "
@@ -2550,8 +2564,8 @@ def _safe_upcast(src: str, dst: str) -> bool:
 def update_delta(
     spark: SparkSession,
     path: str,
-    set_exprs: dict[str, str],
-    predicate: str = "true",
+    set_exprs: dict[str, str | Column],
+    predicate: str | Column = "true",
     max_commit_retries: int = 10,
     collect_stats: bool = True,
 ) -> int:
@@ -2560,8 +2574,9 @@ def update_delta(
     :func:`merge_delta` this completes the DML surface delta-spark
     exposes. ``set_exprs`` maps column -> Spark SQL expression evaluated
     per matching row (e.g. ``{"v": "v * 2", "status": "'X'"}``);
-    ``predicate`` selects the rows. Returns the committed version (the
-    current one when nothing matched).
+    ``predicate`` selects the rows. Either may be a Column instead
+    (``sql/dml.py`` passes the ones it parsed). Returns the committed
+    version (the current one when nothing matched).
 
     Same touched-data cost model and concurrency rules as merge_delta:
     one provenance scan finds the files containing a matching LIVE row
@@ -2602,7 +2617,8 @@ def update_delta(
     }
 
     target = _files_to_df(spark, base, snap, snap.files, file_col="_file")
-    cond = F.expr(predicate)
+    cond = _as_column(predicate)
+    set_exprs = {c: _as_column(e) for c, e in set_exprs.items()}
     matched_files_rows = (
         target.filter(cond).select("_file").distinct().collect()
     )
@@ -2623,7 +2639,7 @@ def update_delta(
     # coerce a mistyped branch to the column type and fail at write
     # time with an ANSI cast error instead of a clear message)
     probe = touched_rows.select(
-        *[F.expr(e).alias(c) for c, e in set_exprs.items()]
+        *[e.alias(c) for c, e in set_exprs.items()]
     )
     table_types = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
     for f in probe.schema.fields:
@@ -2644,7 +2660,7 @@ def update_delta(
     try:
         staged1 = flagged.select(
             *[
-                F.when(F.col("__m"), F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
+                F.when(F.col("__m"), set_exprs[c]).otherwise(F.col(c)).alias(c)
                 if c in set_exprs
                 else F.col(c)
                 for c in col_order
@@ -2675,7 +2691,7 @@ def update_delta(
             pre = flagged.filter(F.col("__m")).select(col_order)
             post = pre.select(
                 *[
-                    F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
+                    set_exprs[c].alias(c) if c in set_exprs else F.col(c)
                     for c in col_order
                 ]
             ).select(  # second stage: generated cols over POST-update values
@@ -2947,7 +2963,7 @@ def files_since(
 def delete_delta(
     spark: SparkSession,
     path: str,
-    predicate: str,
+    predicate: str | Column,
     max_commit_retries: int = 10,
     max_deleted_rows: int = 50_000_000,
 ) -> int:
@@ -3005,7 +3021,7 @@ def delete_delta(
     scan = _files_to_df(
         spark, base, snap, snap.files, file_col="_file", pos_col="_pos"
     )
-    matches = scan.filter(F.expr(predicate)).select("_file", "_pos")
+    matches = scan.filter(_as_column(predicate)).select("_file", "_pos")
     # ONE scan, memory-bounded: collect at most max+1 rows — reaching
     # the sentinel proves the overflow without materializing it (and a
     # second scan could disagree with the first for nondeterministic

@@ -1,150 +1,78 @@
 """Guarded SQL DML over delta tables: DELETE / UPDATE statements routed
 to the log-native writers (sources/delta.py).
 
-The READ endpoint (sql/endpoint.py) stays SELECT-only — reference
-parity (its sql route 400s anything else). This module is the separate,
-explicitly-opt-in write surface: a caller hands `run_dml` a statement
-AND the table->delta-path mapping it is allowed to touch, and gets the
-delta-native execution — DELETE via deletion vectors (kilobytes of
-bitmap, no rewrites), UPDATE as a touched-files-only copy-on-write.
-Nothing is shared with the read endpoint's registry, so a deployment
-that never imports this module cannot mutate anything through SQL.
+The read endpoint (sql/endpoint.py) stays SELECT-only, as the
+reference's sql route is. This module is the separate, opt-in write
+surface: a caller hands `run_dml` a statement AND the table->delta-path
+mapping it may touch. DELETE runs as deletion vectors, UPDATE as a
+touched-files-only copy-on-write. A deployment that never imports this
+module cannot mutate anything through SQL.
 
-Parsing is a small structural scan over the comment-stripped
-statement (``_STRING_OR_COMMENT`` finds literals and comments). String
-literals stay verbatim because they are PART of the expressions; the
-WHERE/SET expression text goes to Spark's own parser (``F.expr``)
-inside delete_delta/update_delta. DELETE requires an explicit WHERE
-(``WHERE true`` spells a full-table delete on purpose; an absent WHERE
-is far more likely a mistake than an intent). That guard is why the
-statement does not go through Catalyst's parser as the read endpoint
-does: Spark parses ``DELETE FROM t`` to a literal-true condition, so an
-absent WHERE no longer shows in the plan."""
+The statement is parsed once, by the read endpoint's Catalyst parser
+(:func:`lakeapi_spark.sql.endpoint.parse`), and the parsed condition and
+SET values reach delete_delta / update_delta as Columns: the tree that
+was checked is the tree that runs. Only ``DeleteFromTable`` /
+``UpdateTable`` over one unqualified table name passes; that name is
+authorized before anything else is checked. Subqueries are refused: they
+would read tables outside the mapping. DELETE needs an explicit WHERE,
+and Spark parses ``DELETE FROM t`` to a literal-true condition, so a
+condition that is foldable and true is refused (``WHERE true`` too); a
+full-table delete is ``delete_delta(spark, path, "true")``."""
 
 from __future__ import annotations
 
-import re
+from py4j.java_gateway import JavaObject, is_instance_of
+from pyspark.sql import Column, SparkSession
 
-from pyspark.sql import SparkSession
+from lakeapi_spark.sql.endpoint import _SUBQUERY, SqlValidationError, _seq, expression_nodes, parse
 
-from lakeapi_spark.sql.endpoint import SqlValidationError
-
-_STRING_OR_COMMENT = re.compile(
-    r"""
-    '(?:[^'\\]|\\.|'')*'    # single-quoted string ('' and \' escapes)
-  | "(?:[^"\\]|\\.|"")*"    # double-quoted string
-  | `(?:[^`]|``)*`          # backtick identifier
-  | --[^\n]*                # line comment
-  | /\*.*?\*/               # block comment
-    """,
-    re.VERBOSE | re.DOTALL,
-)
-
-_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
-_DELETE_HEAD = re.compile(
-    rf"^\s*delete\s+from\s+({_IDENT})\s+where\s+", re.IGNORECASE
-)
-_UPDATE_HEAD = re.compile(rf"^\s*update\s+({_IDENT})\s+set\s+", re.IGNORECASE)
-_ASSIGN_RE = re.compile(rf"^\s*({_IDENT})\s*=\s*(.+)$", re.DOTALL)
+_OPERATIONS = {"DeleteFromTable": "DELETE", "UpdateTable": "UPDATE"}
 
 
-def _strip_comments(sql: str) -> str:
-    """Blank out comments but keep string/identifier literals verbatim —
-    they are part of the expressions this module forwards to Spark."""
-
-    def repl(m: re.Match[str]) -> str:
-        text = m.group(0)
-        return text if text[0] in "'\"`" else " "
-
-    return _STRING_OR_COMMENT.sub(repl, sql)
-
-
-def _reject_multi_statement(sql: str) -> None:
-    scrubbed = _STRING_OR_COMMENT.sub(" '' ", sql)
-    if ";" in scrubbed.rstrip().rstrip(";"):
-        raise SqlValidationError("one statement at a time (interior ';')")
-
-
-def _walk(text: str):
-    """Yield ``(i, ch, depth, in_quote)`` over ``text`` with paren depth
-    tracked and quoted spans ('', \"\", ``, with doubled-char escapes,
-    plus backslash escapes inside '/\" — Spark's SQL literals honor
-    ``\\'``) marked — the shared scanner under comma splitting and
-    top-level WHERE detection."""
-    depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'`\"":
-            quote = ch
-            yield i, ch, depth, True
-            i += 1
-            while i < n:
-                yield i, text[i], depth, True
-                if text[i] == "\\" and quote != "`" and i + 1 < n:
-                    # backslash escape: the next char (incl. a quote)
-                    # is literal — backticks have no backslash escapes
-                    yield i + 1, text[i + 1], depth, True
-                    i += 2
-                    continue
-                if text[i] == quote:
-                    if i + 1 < n and text[i + 1] == quote:  # doubled escape
-                        yield i + 1, text[i + 1], depth, True
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        yield i, ch, depth, False
-        i += 1
-
-
-def _find_top_level_where(text: str) -> int | None:
-    """Index of the first top-level WHERE keyword (outside quotes and
-    parens, word-bounded), or None. A 'where' inside a string literal
-    or subexpression never splits the statement."""
-    lower = text.lower()
-    for i, _ch, depth, in_quote in _walk(text):
-        if in_quote or depth != 0:
-            continue
-        if lower.startswith("where", i):
-            before_ok = i == 0 or not (lower[i - 1].isalnum() or lower[i - 1] == "_")
-            after = i + 5
-            after_ok = after >= len(lower) or not (
-                lower[after].isalnum() or lower[after] == "_"
-            )
-            if before_ok and after_ok:
-                return i
-    return None
-
-
-def _split_assignments(text: str) -> list[tuple[str, str]]:
-    """Split ``a = expr, b = expr`` on top-level commas (quotes and
-    parens respected)."""
-    parts: list[str] = []
-    start = 0
-    for i, ch, depth, in_quote in _walk(text):
-        if ch == "," and depth == 0 and not in_quote:
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    out = []
-    for part in parts:
-        m = _ASSIGN_RE.match(part)
-        if not m:
-            raise SqlValidationError(f"malformed SET assignment: {part.strip()!r}")
-        out.append((m.group(1), m.group(2).strip()))
-    return out
-
-
-def run_dml(
+def parse_dml(
     spark: SparkSession, sql: str, tables: dict[str, str]
-) -> dict:
+) -> tuple[str, str, str, list[tuple[str, JavaObject]], JavaObject | None]:
+    """``(operation, table, path, [(column, value)], condition)`` of one
+    DELETE or UPDATE statement, without running it. Values and the
+    condition are parsed Catalyst expressions; the condition is None for
+    an UPDATE without WHERE. Raises SqlValidationError (module docstring)."""
+    plan = parse(spark, sql)
+    operation = _OPERATIONS.get(plan.nodeName())
+    if operation is None:
+        raise SqlValidationError(
+            f"only DELETE FROM ... WHERE and UPDATE ... SET are supported here, "
+            f"got {plan.nodeName()!r} (SELECTs go through sql.endpoint.run_sql)"
+        )
+    target = plan.table()
+    parts = target.multipartIdentifier() if target.nodeName() == "UnresolvedRelation" else None
+    if parts is None or parts.size() != 1:
+        raise SqlValidationError("the target must be one unqualified table name")
+    name = parts.head().lower()
+    lookup = {k.lower(): v for k, v in tables.items()}
+    if name not in lookup:
+        raise SqlValidationError(f"unknown or unauthorized table: {name}")
+    sets = []
+    if operation == "DELETE":
+        cond = plan.condition()
+        if cond.foldable() and cond.eval(None) is True:
+            raise SqlValidationError(
+                "DELETE requires an explicit WHERE that is not always true "
+                "(a full-table delete is delete_delta(spark, path, 'true'))"
+            )
+    else:
+        cond = plan.condition().get() if plan.condition().isDefined() else None
+        for assignment in _seq(plan.assignments()):
+            key = assignment.key()
+            if key.nodeName() != "UnresolvedAttribute" or key.nameParts().size() != 1:
+                raise SqlValidationError(f"SET target must be a column name: {key.sql()}")
+            sets.append((key.nameParts().head(), assignment.value()))
+    for expr in expression_nodes(*[v for _, v in sets], *[cond] if cond is not None else []):
+        if is_instance_of(spark.sparkContext._gateway, expr, _SUBQUERY):
+            raise SqlValidationError("subqueries are not allowed in DELETE / UPDATE")
+    return operation, name, lookup[name], sets, cond
+
+
+def run_dml(spark: SparkSession, sql: str, tables: dict[str, str]) -> dict:
     """Execute one DELETE or UPDATE statement against a delta table.
 
     ``tables`` maps statement table names (case-insensitive) to delta
@@ -154,48 +82,16 @@ def run_dml(
     statement matched nothing)."""
     from lakeapi_spark.sources.delta import delete_delta, update_delta
 
-    _reject_multi_statement(sql)
-    stmt = _strip_comments(sql).strip().rstrip(";").strip()
-    lookup = {k.lower(): v for k, v in tables.items()}
+    operation, name, path, sets, cond = parse_dml(spark, sql, tables)
+    jvm = spark._jvm
 
-    def _authorized(name: str) -> str:
-        if name not in lookup:
-            raise SqlValidationError(f"unknown or unauthorized table: {name}")
-        return lookup[name]
+    def column(expr: JavaObject) -> Column:
+        node = jvm.org.apache.spark.sql.classic.ExpressionColumnNode.apply(expr)
+        return Column(jvm.org.apache.spark.sql.Column(node))
 
-    m = _DELETE_HEAD.match(stmt)
-    if m:
-        name = m.group(1).lower()
-        predicate = stmt[m.end() :].strip()
-        if not predicate:
-            raise SqlValidationError("DELETE WHERE clause is empty")
-        version = delete_delta(spark, _authorized(name), predicate)
-        return {"operation": "DELETE", "table": name, "version": version}
-
-    m = _UPDATE_HEAD.match(stmt)
-    if m:
-        name = m.group(1).lower()
-        rest = stmt[m.end() :]
-        where_at = _find_top_level_where(rest)
-        if where_at is None:
-            set_part, predicate = rest, "true"
-        else:
-            set_part = rest[:where_at]
-            predicate = rest[where_at + 5 :].strip()
-            if not predicate:
-                raise SqlValidationError("UPDATE WHERE clause is empty")
-        set_exprs = dict(_split_assignments(set_part))
-        version = update_delta(spark, _authorized(name), set_exprs, predicate)
-        return {"operation": "UPDATE", "table": name, "version": version}
-
-    verb = stmt.strip().split(None, 1)[0].lower() if stmt.strip() else ""
-    if verb == "delete":
-        raise SqlValidationError(
-            "DELETE requires an explicit WHERE (use WHERE true for a "
-            "full-table delete)"
-        )
-    raise SqlValidationError(
-        f"only DELETE FROM ... WHERE and UPDATE ... SET are supported "
-        f"here, got {verb or 'empty statement'!r} (SELECTs go through "
-        "sql.endpoint.run_sql)"
-    )
+    if operation == "DELETE":
+        version = delete_delta(spark, path, column(cond))
+    else:
+        values = {c: column(v) for c, v in sets}
+        version = update_delta(spark, path, values, "true" if cond is None else column(cond))
+    return {"operation": operation, "table": name, "version": version}

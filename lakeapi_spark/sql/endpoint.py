@@ -8,10 +8,11 @@ and executes the statement (endpoint/sql_endpoint.py:15-43,89-190).
 Here Catalyst's own parser plays sqlglot's part, so the tree that is
 checked is the tree that runs:
 
-- parse: the session's ``sqlParser().parsePlan``. A ``ParseException``
-  (bad syntax, unbalanced parens, more than one statement) and a
-  statement nested past the parser's recursion limit are a
-  :class:`SqlValidationError`.
+- parse (:func:`parse`, shared with the DML router ``sql/dml.py`` and
+  the delta rule checks): the session's ``sqlParser().parsePlan``. A
+  ``ParseException`` (bad syntax, unbalanced parens, more than one
+  statement) and a statement nested past the parser's recursion limit
+  are a :class:`SqlValidationError`.
 - statement kind: every node of the parsed plan must be one of the
   read-only query nodes in ``_READ_ONLY``. The walk follows
   ``children()`` and ``innerChildren()``; the latter carries CTE bodies
@@ -30,6 +31,8 @@ the text to ``spark.sql`` for a second parse.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 from py4j.java_gateway import JavaGateway, JavaObject, is_instance_of
 from py4j.protocol import Py4JJavaError
@@ -67,18 +70,21 @@ def _seq(seq: JavaObject) -> list[JavaObject]:
     return [seq.apply(i) for i in range(seq.size())]
 
 
+def expression_nodes(*roots: JavaObject) -> Iterator[JavaObject]:
+    """Every node of the Catalyst expression trees under ``roots``."""
+    todo = list(roots)
+    while todo:
+        expr = todo.pop()
+        yield expr
+        todo.extend(_seq(expr.children()))
+
+
 def _window_subqueries(gateway: JavaGateway, node: JavaObject) -> list[JavaObject]:
     """The subquery plans of a WINDOW clause. Its specs sit in a Map,
     which Catalyst's ``expressions`` (and so ``innerChildren()``) skips."""
-    todo = [spec for spec in _seq(node.windowDefinitions().values().toSeq())
-            if is_instance_of(gateway, spec, _EXPRESSION)]  # not a `w2 AS w1` reference
-    plans = []
-    while todo:
-        expr = todo.pop()
-        if is_instance_of(gateway, expr, _SUBQUERY):
-            plans.append(expr.plan())
-        todo.extend(_seq(expr.children()))
-    return plans
+    specs = [spec for spec in _seq(node.windowDefinitions().values().toSeq())
+             if is_instance_of(gateway, spec, _EXPRESSION)]  # not a `w2 AS w1` reference
+    return [e.plan() for e in expression_nodes(*specs) if is_instance_of(gateway, e, _SUBQUERY)]
 
 
 def _gate(gateway: JavaGateway, plan: JavaObject) -> set[str]:
@@ -119,18 +125,22 @@ def _gate(gateway: JavaGateway, plan: JavaObject) -> set[str]:
     return tables
 
 
-def _check(spark: SparkSession, sql: str) -> tuple[JavaObject, set[str]]:
-    """Parse ``sql`` with ``spark``'s Catalyst parser and gate the plan.
-    The parser reads its settings from the thread's active session, so
-    ``spark`` is active for the parse, as it is inside ``spark.sql``."""
+def parse(spark: SparkSession, text: str, *, expression: bool = False) -> JavaObject:
+    """Parse ``text`` with ``spark``'s Catalyst parser: a plan, or with
+    ``expression`` an expression. The parser reads its settings from the
+    thread's active session, so ``spark`` is active for the parse, as it is
+    inside ``spark.sql``. Text the parser rejects, or nests past its
+    recursion limit, is a :class:`SqlValidationError`."""
     jss = spark._jsparkSession
     sessions = spark._jvm.org.apache.spark.sql.classic.SparkSession
     previous = sessions.getActiveSession()
     sessions.setActiveSession(jss)
+    parser = jss.sessionState().sqlParser()
     try:
-        plan = jss.sessionState().sqlParser().parsePlan(sql)
+        return parser.parseExpression(text) if expression else parser.parsePlan(text)
     except ParseException as e:
-        raise SqlValidationError(f"not a valid SQL statement: {e.getMessage()}") from None
+        what = "expression" if expression else "statement"
+        raise SqlValidationError(f"not a valid SQL {what}: {e.getMessage()}") from None
     except Py4JJavaError as e:
         if not is_instance_of(spark.sparkContext._gateway, e.java_exception, _STACK_OVERFLOW):
             raise
@@ -140,6 +150,11 @@ def _check(spark: SparkSession, sql: str) -> tuple[JavaObject, set[str]]:
             sessions.setActiveSession(previous.get())
         else:
             sessions.clearActiveSession()
+
+
+def _check(spark: SparkSession, sql: str) -> tuple[JavaObject, set[str]]:
+    """Parse ``sql`` with ``spark``'s Catalyst parser and gate the plan."""
+    plan = parse(spark, sql)
     return plan, _gate(spark.sparkContext._gateway, plan)
 
 
@@ -166,9 +181,20 @@ def run_sql(
     run the validated plan on ``spark``."""
     plan, tables = _check(spark, sql)
     if allowed_tables is not None:
-        unknown = tables - {t.lower() for t in allowed_tables}
-        if unknown:
-            raise SqlValidationError(f"unknown or unauthorized tables: {sorted(unknown)}")
+        check_visible(tables, allowed_tables)
+    return run_checked(spark, plan)
+
+
+def check_visible(tables: set[str], allowed_tables) -> None:
+    """Raise SqlValidationError unless every name in ``tables`` (lower
+    case, as :func:`_gate` reports them) is one of ``allowed_tables``."""
+    unknown = tables - {t.lower() for t in allowed_tables}
+    if unknown:
+        raise SqlValidationError(f"unknown or unauthorized tables: {sorted(unknown)}")
+
+
+def run_checked(spark: SparkSession, plan: JavaObject) -> DataFrame:
+    """The DataFrame of a checked plan, analyzed on ``spark``."""
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan)
     return DataFrame(jdf, spark)
 

@@ -3356,6 +3356,33 @@ class TestDeltaAlterColumns:
         with pytest.raises(NotImplementedError, match="column mapping"):
             rename_column_delta(spark, path2, "v", "v2")
 
+    def test_rename_and_drop_see_quoted_and_cased_references(self, spark, tmp_path):
+        """A rule that names the column in backticks or in another case
+        references it all the same (Spark resolves both), so rename and
+        drop refuse rather than commit a schema the rule no longer
+        compiles against; an unreferenced column still renames."""
+        from lakeapi_spark.sources.delta import (
+            add_constraint_delta,
+            delta_snapshot,
+            drop_column_delta,
+            rename_column_delta,
+            write_delta_column_mapped,
+        )
+
+        for i, rule in enumerate(["`v` < 100", "V < 100"]):
+            path = str(tmp_path / f"renq{i}")
+            write_delta_column_mapped(
+                spark.range(3).selectExpr("id AS k", "id AS v"), path
+            )
+            add_constraint_delta(spark, path, "vcap", rule)
+            with pytest.raises(ValueError, match="CHECK vcap"):
+                rename_column_delta(spark, path, "v", "v2")
+            with pytest.raises(ValueError, match="CHECK vcap"):
+                drop_column_delta(spark, path, "v")
+            rename_column_delta(spark, path, "k", "k2")
+            names = [f.name for f in delta_snapshot(spark, path).schema.fields]
+            assert names == ["k2", "v"], rule
+
     def test_drop_column_no_resurrection(self, spark, tmp_path):
         from lakeapi_spark.sources.delta import (
             drop_column_delta,

@@ -587,7 +587,7 @@ def test_request_validation_uses_no_assert():
         f"{rel}:{node.lineno}"
         for rel in (
             "registry.py", "sources/readers.py", "operators/search.py", "sql/endpoint.py",
-            "operators/windows.py",
+            "sql/dml.py", "operators/windows.py", "queries.py",
         )
         for node in ast.walk(ast.parse((root / rel).read_text()))
         if isinstance(node, ast.Assert)

@@ -516,6 +516,67 @@ def test_memo_serves_rows_of_a_delta_append(spark, tmp_path):
     assert _ids(serve_request(reg, "appended", fmt="ndjson")) == [1, 2]
 
 
+def test_registry_sql_reads_what_compile_request_serves(spark, tmp_path):
+    """``TableRegistry.sql`` installs the tables a statement reads from the
+    memoized scan: after a parquet rewrite and after a delta append it
+    returns the new rows, the ones ``compile_request`` serves, although
+    ``create_views`` installed views of the old scans. It sees only
+    registered tables."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeapi_spark.sources.delta import write_delta
+    from lakeapi_spark.sql.endpoint import SqlValidationError
+
+    flat = str(tmp_path / "flat.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), flat)
+    log = str(tmp_path / "logged")
+    write_delta(spark.createDataFrame([(10,)], ["id"]), log)
+    reg = TableRegistry(spark)
+    reg.register(TableConfig(name="Flat", datasource=DatasourceConfig(uri=flat)))
+    reg.register(TableConfig(name="logged", datasource=DatasourceConfig(uri=log, file_type="delta")))
+    reg.create_views()
+
+    def rows(sql):
+        return sorted(tuple(r) for r in reg.sql(sql).collect())
+
+    def served(name):
+        return sorted(tuple(r) for r in compile_request(reg, name, {}).collect())
+
+    assert rows("SELECT * FROM flat") == served("Flat") == [(1,), (2,)]
+    assert rows("SELECT id FROM logged") == served("logged") == [(10,)]
+    pq.write_table(pa.table({"id": [1, 2, 3], "tag": ["a", "b", "c"]}), flat)
+    assert rows("SELECT * FROM flat") == served("Flat") == [(1, "a"), (2, "b"), (3, "c")]
+    write_delta(spark.createDataFrame([(11,)], ["id"]), log, mode="append")
+    assert rows("SELECT id FROM logged") == served("logged") == [(10,), (11,)]
+    both = "SELECT f.id, l.id FROM flat f JOIN logged l ON l.id = f.id + 9"
+    assert rows(both) == [(1, 10), (2, 11)]
+    with pytest.raises(SqlValidationError, match="unauthorized"):
+        reg.sql("SELECT * FROM logged JOIN unlisted USING (id)")
+    with pytest.raises(SqlValidationError, match="read-only"):
+        reg.sql("DROP TABLE logged")
+
+
+def test_catalog_table_memo_follows_the_file_version(spark, sf_dir, tmp_path):
+    """``catalog.table`` keeps one scan per file version on the session: a
+    repeat call returns the same DataFrame, a rewritten file a new one, and
+    the stale entry is dropped."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeapi_spark.catalog import _memo, table
+
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+    first = table(spark, str(tmp_path), "nation")
+    assert table(spark, str(tmp_path), "nation") is first
+    pq.write_table(pa.table({"n_nationkey": [1]}), tmp_path / "nation.parquet")
+    second = table(spark, str(tmp_path), "nation")
+    assert second is not first and second.columns == ["n_nationkey"]
+    assert [v for k, v in _memo(spark).items() if k[0] == (str(tmp_path), "nation")] == [second]
+
+
 def test_repeated_request_on_unchanged_table_runs_only_its_action(spark, sf_dir):
     """The memo skips the re-read: no file listing job, no schema
     inference job — the request's one Spark job is its action."""
@@ -708,7 +769,7 @@ def test_warm_bm25_request_runs_three_jobs(spark, sf_dir):
 def test_bm25_index_follows_delta_commits(spark, tmp_path, monkeypatch):
     """Across appends, deletes (deletion vectors), updates and an id
     reused by an append, the served scores always equal those of a full
-    build on the table as it stands. A commit that only adds rows of new ids
+    build on the table as it stands, and those of ``bm25_search``. A commit that only adds rows of new ids
     refreshes the index without a full build, as does one that deletes
     or rewrites only rows added since the last full build; a commit that
     touches a file of the full build, appends an id it holds, or leaves
@@ -716,7 +777,7 @@ def test_bm25_index_follows_delta_commits(spark, tmp_path, monkeypatch):
     search build in full."""
     from lakeapi_spark.config import SearchConfig
     from lakeapi_spark.operators import search
-    from lakeapi_spark.operators.search import _BM25_CACHE, bm25_scores
+    from lakeapi_spark.operators.search import _BM25_CACHE, bm25_scores, bm25_search
     from lakeapi_spark.sources.delta import delete_delta, update_delta, write_delta
 
     schema = "doc_id long, text string"
@@ -771,10 +832,14 @@ def test_bm25_index_follows_delta_commits(spark, tmp_path, monkeypatch):
             for text in ("spark window", "lake index"):
                 got = {(r.doc_id, r.search_score) for r in compile_request(
                     reg, "live_bm25", {}, search_text=text, limit=100).collect()}
-                full = build(reg.dataframe("live_bm25"), "doc_id", "text")
+                table = reg.dataframe("live_bm25")
+                full = build(table, "doc_id", "text")
                 want = {tuple(r) for r in bm25_scores(full, text).collect()}
                 full.unpersist()
                 assert got == want and got, (i, text)
+                # the relational scorer agrees, ids of several rows included
+                oracle = bm25_search(table, "doc_id", "text", text).select("doc_id", "bm25_score")
+                assert {tuple(r) for r in oracle.collect()} == want, (i, text)
             assert len(builds) == n_builds, i
             live = [v for k, v in _BM25_CACHE.items() if k[0].startswith("search:live_bm25:")]
             assert [len(idx.segments) for idx in live] == [n_segments], i

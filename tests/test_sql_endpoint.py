@@ -545,32 +545,34 @@ class TestDmlRouter:
             run_dml(spark, "DELETE FROM other WHERE true", {"t": path})
         with pytest.raises(SqlValidationError, match="explicit WHERE"):
             run_dml(spark, "DELETE FROM t", {"t": path})
-        with pytest.raises(SqlValidationError, match="interior ';'"):
+        with pytest.raises(SqlValidationError, match="not a valid SQL statement"):
             run_dml(
                 spark, "DELETE FROM t WHERE true; DROP TABLE t", {"t": path}
             )
         # a backslash-escaped quote must not hide the ';' inside a "string"
-        with pytest.raises(SqlValidationError, match="interior ';'"):
+        with pytest.raises(SqlValidationError, match="not a valid SQL statement"):
             run_dml(
                 spark, r"DELETE FROM t WHERE p = 'a\'' ; DROP TABLE t --'", {"t": path}
             )
         with pytest.raises(SqlValidationError, match="only DELETE"):
             run_dml(spark, "INSERT INTO t VALUES (1)", {"t": path})
-        with pytest.raises(SqlValidationError, match="malformed SET"):
+        with pytest.raises(SqlValidationError, match="not a valid SQL statement"):
             run_dml(spark, "UPDATE t SET 5 WHERE true", {"t": path})
 
 
-def test_dml_parser_fuzz_roundtrip():
-    """Parser-level fuzz (no Spark): build UPDATE statements from known
+def test_dml_parser_fuzz_roundtrip(spark):
+    """Parse-level fuzz (no Spark job): UPDATE statements built from known
     assignment/predicate pieces — string literals stuffed with 'where',
-    commas, semicolon-free parens — and check the scanner recovers
-    exactly the pieces. Mirrors the read endpoint's fuzz convention:
-    the hand-rolled scanner is the security-relevant part, so it gets
-    generative coverage, not just examples."""
+    commas, semicolon-free parens — parse to exactly those pieces: the SET
+    columns in order, and each value and the predicate equal to Catalyst's
+    ``parseExpression`` of its own text. Mirrors the read endpoint's fuzz
+    convention: the statement reader is the security-relevant part, so it
+    gets generative coverage, not just examples."""
     import random
 
-    from lakeapi_spark.sql.dml import _find_top_level_where, _split_assignments
+    from lakeapi_spark.sql.dml import parse_dml
 
+    parser = spark._jsparkSession.sessionState().sqlParser()
     rnd = random.Random(99)
     exprs = [
         "k + 1",
@@ -588,16 +590,40 @@ def test_dml_parser_fuzz_roundtrip():
         set_part = ", ".join(f"{c} = {e}" for c, e in chosen)
         with_where = rnd.random() < 0.7
         pred = rnd.choice(preds)
-        rest = set_part + (f" WHERE {pred}" if with_where else "")
-        at = _find_top_level_where(rest)
+        stmt = f"UPDATE t SET {set_part}" + (f" WHERE {pred}" if with_where else "")
+        op, name, path, sets, cond = parse_dml(spark, stmt, {"t": "/unused"})
+        assert (op, name, path) == ("UPDATE", "t", "/unused"), stmt
+        assert [c for c, _ in sets] == cols, stmt
+        for (_, value), (_, piece) in zip(sets, chosen):
+            assert value.equals(parser.parseExpression(piece)), (stmt, piece)
         if with_where:
-            assert at is not None, rest
-            assert rest[at + 5 :].strip() == pred, rest
-            got = _split_assignments(rest[:at])
+            assert cond.equals(parser.parseExpression(pred)), stmt
         else:
-            assert at is None, rest
-            got = _split_assignments(rest)
-        assert got == [(c, e) for c, e in chosen], (rest, got)
+            assert cond is None, stmt
+
+
+def test_dml_guards_read_the_parsed_tree(spark):
+    """The checks that only a parsed statement can make, all before any
+    Spark job: authorization comes first; a foldable-true DELETE condition
+    is no explicit WHERE (so ``WHERE true`` is refused too); qualified or
+    aliased targets, nested SET targets and subqueries are refused."""
+    from lakeapi_spark.sql.dml import run_dml
+    from lakeapi_spark.sql.endpoint import SqlValidationError
+
+    tables = {"T": "/unused"}
+    for stmt, match in [
+        ("DELETE FROM other", "unauthorized table"),
+        ("DELETE FROM t WHERE true", "explicit WHERE"),
+        ("DELETE FROM t WHERE 1 = 1 AND true", "explicit WHERE"),
+        ("DELETE FROM db.t WHERE k = 1", "unqualified table"),
+        ("DELETE FROM t AS x WHERE x.k = 1", "unqualified table"),
+        ("UPDATE t SET s.x = 1", "SET target"),
+        ("DELETE FROM t WHERE k IN (SELECT k FROM secret)", "subqueries"),
+        ("UPDATE t SET v = (SELECT max(v) FROM secret) WHERE k = 1", "subqueries"),
+        ("UPDATE t SET v = 1 WHERE EXISTS (SELECT 1 FROM secret)", "subqueries"),
+    ]:
+        with pytest.raises(SqlValidationError, match=match):
+            run_dml(spark, stmt, tables)
 
 
 def test_dml_backslash_escaped_quote(spark, tmp_path):
