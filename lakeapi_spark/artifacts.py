@@ -25,13 +25,6 @@ _LOCK = threading.Lock()
 _BUILDING: dict[tuple[int, tuple], threading.Lock] = {}
 
 
-def cached_artifact(cache: dict, identity: Any, version: Any, params: tuple):
-    """The cached artifact for ``(identity, version, params)``, or None;
-    never builds."""
-    with _LOCK:
-        return cache.get((identity, version, params))
-
-
 def entries(cache: dict, identity: Any) -> dict:
     """Every entry of ``identity``, key -> artifact; never builds."""
     with _LOCK:

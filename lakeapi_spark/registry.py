@@ -22,10 +22,13 @@ probe cannot stat the source (odbc/jdbc) the key is the config version
 alone, which is safe because those DataFrames re-query the remote side
 on every action; any other source the probe cannot stat (e.g. a glob
 uri) is read fresh per request. A miss evicts the table's stale entry;
-re-registering a table drops it. ``dataframe(name)``, ``schema(name)``
-and the BM25 index key all read the same entry; delta requests with
-log-stats predicates read their own per-request file subset and are
-never memoized.
+re-registering a table drops it. ``compile_request`` reads the entry
+once per request and takes everything from it: the schema its filters
+coerce against, the rows, the BM25 index version and, for a delta table
+read through the log, the snapshot whose files a predicated request
+prunes by log stats (``sources.delta.read_snapshot``: no second log
+listing). So a request never reads two versions of its table.
+``dataframe(name)`` and ``schema(name)`` read the same entry.
 
 BM25 search scores against the index built from the same memoized scan
 (``operators/search.py``), keyed by its version, so rows and scores never
@@ -50,7 +53,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from lakeapi_spark.artifacts import cached_artifact, evict, versioned_artifact
+from lakeapi_spark.artifacts import evict, versioned_artifact
 from lakeapi_spark.config import (
     MissingNearbyConfigError,
     MissingSearchConfigError,
@@ -148,20 +151,15 @@ class TableRegistry:
             raise UnknownTableError(name)
         return self._tables[name]
 
-    def _read(self, cfg: TableConfig, uri: str, delta_predicates=None) -> DataFrame:
-        ds = cfg.datasource
-        return read_source(
-            self.spark, uri, ds.file_type, dict(ds.options), delta_predicates=delta_predicates
-        )
-
     def _read_scan(self, cfg: TableConfig, uri: str) -> tuple:
         """The memo's value: the whole-table scan and, for a delta table
         read through the log, (uri, the snapshot it read)."""
-        if cfg.datasource.file_type != "delta":
-            return self._read(cfg, uri), None
+        ds = cfg.datasource
+        if ds.file_type != "delta":
+            return read_source(self.spark, uri, ds.file_type, dict(ds.options)), None
         from lakeapi_spark.sources.delta import delta_scan
 
-        df, snap = delta_scan(self.spark, uri, dict(cfg.datasource.options))
+        df, snap = delta_scan(self.spark, uri, dict(ds.options))
         return df, snap and (uri, snap)
 
     def _scan_version(self, cfg: TableConfig, uri: str) -> tuple | None:
@@ -198,32 +196,16 @@ class TableRegistry:
         )
         return df, version, delta
 
-    def dataframe(
-        self, name: str, delta_predicates: list[tuple] | None = None
-    ) -> DataFrame:
-        """The table's scan: the memoized one, or — given
-        ``delta_predicates``, closed-range boxes (from
-        ``predicates_from_filters``) that let a delta table skip whole
-        files by LOG stats before Spark ever lists them — a fresh read
-        of that file subset (the metadata layer of pruning, on top of
-        Catalyst's row-group/partition pruning). Results never change;
-        only IO."""
-        if delta_predicates:
-            cfg = self.config(name)
-            return self._read(cfg, self._resolve_uri(cfg), delta_predicates)
+    def dataframe(self, name: str) -> DataFrame:
+        """The table's memoized whole-table scan (:meth:`scan`)."""
         return self.scan(name)[0]
 
     def schema(self, name: str) -> T.StructType:
         """The schema of the memoized scan, so it follows the same
         freshness contract: a table rewritten underneath the server with a
         new column serves the new schema on the next call, without a
-        restart. A hit costs the data-version probe only; ``dataframe()``
-        runs only on a miss, to read the table at its new version."""
-        cfg = self.config(name)
-        uri = self._resolve_uri(cfg)
-        version = self._scan_version(cfg, uri)
-        hit = None if version is None else cached_artifact(self._scans, name, version, ())
-        return (hit[0] if hit is not None else self.dataframe(name)).schema
+        restart."""
+        return self.scan(name)[0].schema
 
     def sql(self, text: str) -> DataFrame:
         """Run one read-only SQL statement over the registered tables: the
@@ -300,25 +282,25 @@ def compile_request(
     for f in ds.filters:
         filters.append((f["col"], f.get("op", "="), f.get("value")))
 
-    # delta log-stats file skipping from the request's AND filters:
-    # pure-IO pruning a level above Catalyst (files are dropped before
-    # Spark lists them); combi (OR) groups don't contribute
-    delta_preds = None
-    if ds.file_type == "delta":
-        from lakeapi_spark.sources.delta import predicates_from_filters
+    # the one read of the table: rows, schema, BM25 index version and
+    # delta snapshot all come from this version, so a request never
+    # straddles a rewrite or a commit
+    full, version, delta = registry.scan(name)
+    df = full
+    if delta is not None:
+        # delta log-stats file skipping from the request's AND filters:
+        # pure-IO pruning a level above Catalyst (files the snapshot's
+        # stats prove miss are never read); combi (OR) groups don't
+        # contribute. Under delta-spark the scan holds no snapshot and
+        # skips files itself.
+        from lakeapi_spark.sources.delta import predicates_from_filters, read_snapshot
 
         # schema-aware folding: raw params arrive untyped ('5' against
         # a bigint column) and date/timestamp stats are isoformat
         # strings — coercion per the table type keeps skipping sound
-        delta_preds = predicates_from_filters(filters, registry.schema(name)) or None
-    full = version = delta = None
-    if delta_preds:
-        df = registry.dataframe(name, delta_predicates=delta_preds)
-    else:
-        # the memoized scan; a BM25 request scores against the index of
-        # this same version, so its rows and scores never straddle a rewrite
-        full, version, delta = registry.scan(name)
-        df = full
+        preds = predicates_from_filters(filters, full.schema)
+        if preds:
+            df = read_snapshot(registry.spark, *delta, preds)
 
     # derived partition pruning (§2.12) before the logical filters
     if ds.partition_columns:
@@ -372,8 +354,6 @@ def compile_request(
 
             from lakeapi_spark.operators.search import bm25_index_for, bm25_scores
 
-            if full is None:
-                full, version, delta = registry.scan(name)
             idx = bm25_index_for(
                 full,
                 sc.id_column,

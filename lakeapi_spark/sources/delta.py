@@ -578,7 +578,9 @@ def _files_to_df(
         renamed = df.select(*logical_cols, *meta_cols)
         for c, v in zip(pcols, key):
             renamed = renamed.withColumn(c, _partition_lit(v, ptypes[c]))
-        parts.append(renamed.select(scan_cols))
+        # partition columns were appended last; anything else already
+        # stands in scan order (logical fields, then provenance and DV)
+        parts.append(renamed.select(scan_cols) if pcols else renamed)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -609,13 +611,15 @@ def read_delta_fallback(
     surviving scans). Statless files and un-coercible values are
     conservatively kept, so predicates never change results, just
     cost."""
-    return _snapshot_df(spark, uri, delta_snapshot(spark, uri, version_as_of), predicates)
+    return read_snapshot(spark, uri, delta_snapshot(spark, uri, version_as_of), predicates)
 
 
-def _snapshot_df(
-    spark: SparkSession, uri: str, snap: DeltaSnapshot, predicates: list[tuple] | None
+def read_snapshot(
+    spark: SparkSession, uri: str, snap: DeltaSnapshot, predicates: list[tuple] | None = None
 ) -> DataFrame:
-    """The live files of ``snap`` that may meet ``predicates``, read."""
+    """The live files of ``snap`` that may meet ``predicates`` (see
+    :func:`read_delta_fallback`), read; no log listing. The registry
+    prunes its memoized snapshot with it for a predicated request."""
     files = snap.files
     if predicates:
         phys = {f.name: _physical_name(f) for f in snap.schema.fields}
@@ -692,28 +696,23 @@ def _to_ts_ms(value) -> int:
 
 
 def read_delta(
-    spark: SparkSession,
-    uri: str,
-    options: dict[str, str] | None = None,
-    predicates: list[tuple] | None = None,
+    spark: SparkSession, uri: str, options: dict[str, str] | None = None
 ) -> DataFrame:
     """delta-spark when available; protocol-log fallback otherwise.
     Honors the reader options ``versionAsOf`` and ``timestampAsOf`` on
-    both paths. ``predicates`` (closed ranges, see
-    :func:`read_delta_fallback`) enable log-stats FILE skipping on the
-    fallback; delta-spark does its own skipping and ignores them."""
-    return delta_scan(spark, uri, options, predicates)[0]
+    both paths. Log-stats file skipping is :func:`read_snapshot` over the
+    snapshot :func:`delta_scan` returns (or :func:`read_delta_fallback`);
+    delta-spark does its own skipping."""
+    return delta_scan(spark, uri, options)[0]
 
 
 def delta_scan(
-    spark: SparkSession,
-    uri: str,
-    options: dict[str, str] | None = None,
-    predicates: list[tuple] | None = None,
+    spark: SparkSession, uri: str, options: dict[str, str] | None = None
 ) -> tuple[DataFrame, DeltaSnapshot | None]:
-    """:func:`read_delta` and the snapshot it read, when it read every
-    live file of one through the fallback (no ``predicates``); else None.
-    What a whole-table scan holds, with no second log listing."""
+    """:func:`read_delta` and, on the fallback, the snapshot whose every
+    live file it read; None under delta-spark. What a whole-table scan
+    holds, so a predicated read of the same version prunes that snapshot
+    with no second log listing."""
     opts = dict(options or {})
     try:
         import delta  # noqa: F401 - presence check only
@@ -727,7 +726,7 @@ def delta_scan(
         if ts is not None:
             version = delta_timestamp_version(spark, uri, _to_ts_ms(ts))
         snap = delta_snapshot(spark, uri, int(version) if version is not None else None)
-        return _snapshot_df(spark, uri, snap, predicates), None if predicates else snap
+        return read_snapshot(spark, uri, snap), snap
 
 
 def _coerce_stat_value(value, dtype: T.DataType | None):

@@ -104,15 +104,16 @@ def read_source(
     uri: str,
     file_type: str = "parquet",
     options: dict[str, str] | None = None,
-    delta_predicates: list[tuple] | None = None,
 ) -> DataFrame:
+    """The table at ``uri`` read as ``file_type`` (module docstring); a
+    delta table is read whole, through ``sources.delta.read_delta``."""
     opts = options or {}
     if file_type == "parquet":
         return spark.read.options(**opts).parquet(uri)
     if file_type == "delta":
         from lakeapi_spark.sources.delta import read_delta
 
-        return read_delta(spark, uri, opts, predicates=delta_predicates)
+        return read_delta(spark, uri, opts)
     if file_type == "csv":
         # ref duckdb read_csv_auto semantics: header + inference; defaults
         # merged first so datasource options may override them

@@ -3608,7 +3608,11 @@ class TestConvertToDelta:
         import json
         import os
 
-        from lakeapi_spark.sources.delta import convert_to_delta, read_delta
+        from lakeapi_spark.sources.delta import (
+            convert_to_delta,
+            read_delta,
+            read_delta_fallback,
+        )
 
         p = str(tmp_path / "t")
         src = spark.range(0, 100).selectExpr(
@@ -3623,7 +3627,7 @@ class TestConvertToDelta:
             "0", "1", "2", "3"
         }
         # partition pruning from log-declared partitionValues
-        pruned = read_delta(spark, p, {}, predicates=[("b", "2", "2")])
+        pruned = read_delta_fallback(spark, p, predicates=[("b", "2", "2")])
         assert pruned.count() == 25
 
         lines = open(os.path.join(p, "_delta_log", f"{0:020d}.json")).readlines()

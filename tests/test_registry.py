@@ -502,6 +502,8 @@ def test_memo_serves_file_added_two_partition_levels_down(spark, tmp_path):
 
 
 def test_memo_serves_rows_of_a_delta_append(spark, tmp_path):
+    """After a delta append, unpredicated and predicated (log-stats
+    pruned) requests both serve the new row."""
     from lakeapi_spark.registry import serve_request
     from lakeapi_spark.sources.delta import write_delta
 
@@ -509,11 +511,17 @@ def test_memo_serves_rows_of_a_delta_append(spark, tmp_path):
     write_delta(spark.createDataFrame([(1,)], ["id"]), path)
     reg = TableRegistry(spark)
     reg.register(
-        TableConfig(name="appended", datasource=DatasourceConfig(uri=path, file_type="delta"))
+        TableConfig(
+            name="appended",
+            datasource=DatasourceConfig(uri=path, file_type="delta"),
+            params=[ParamConfig(name="id")],
+        )
     )
     assert _ids(serve_request(reg, "appended", fmt="ndjson")) == [1]
+    assert _ids(serve_request(reg, "appended", {"id": 2}, fmt="ndjson")) == []
     write_delta(spark.createDataFrame([(2,)], ["id"]), path, mode="append")
     assert _ids(serve_request(reg, "appended", fmt="ndjson")) == [1, 2]
+    assert _ids(serve_request(reg, "appended", {"id": 2}, fmt="ndjson")) == [2]
 
 
 def test_registry_sql_reads_what_compile_request_serves(spark, tmp_path):
@@ -1002,6 +1010,96 @@ def test_compile_request_delta_log_stats_skipping(spark, tmp_path):
     out_eq = compile_request(reg, "t", {"k": 250})
     assert len(out_eq.inputFiles()) <= len(out.inputFiles())
     assert [r.v for r in out_eq.collect()] == [500]
+
+
+def _live_docs(spark, tmp_path, name):
+    """A 20-row delta table of ``doc_id``/``text`` registered with a
+    ``doc_id`` param and BM25 search."""
+    from lakeapi_spark.config import SearchConfig
+    from lakeapi_spark.sources.delta import write_delta
+
+    words = ["spark", "window", "delta", "lake", "table", "index"]
+    path = str(tmp_path / name)
+    write_delta(spark.createDataFrame(
+        [(i, " ".join(words[(i + j) % 6] for j in range(1 + i % 4))) for i in range(20)],
+        "doc_id long, text string",
+    ).repartition(4), path)
+    reg = TableRegistry(spark)
+    reg.register(TableConfig(
+        name=name,
+        datasource=DatasourceConfig(uri=path, file_type="delta"),
+        params=[ParamConfig(name="doc_id")],
+        search=[SearchConfig("text", ["text"], "bm25", "doc_id")],
+    ))
+    return reg, path
+
+
+def _drop_indexes(name):
+    from lakeapi_spark.operators.search import _BM25_CACHE
+
+    for k in [k for k in _BM25_CACHE if k[0].startswith(f"search:{name}:")]:
+        _BM25_CACHE.pop(k).unpersist()
+
+
+def test_request_probes_its_delta_table_once(spark, tmp_path, monkeypatch):
+    """On a warm delta table, an unpredicated, a predicated (log-stats
+    pruned) and a predicated BM25 request each compile with one
+    data-version probe and no log listing: everything comes from one
+    read of the scan memo."""
+    from lakeapi_spark.sources import fs
+
+    reg, _path = _live_docs(spark, tmp_path, "probed")
+    shapes = {
+        "unpredicated": ({}, {}),
+        "predicated": ({"doc_id": 3}, {}),
+        "predicated bm25": ({"doc_id": 3}, {"search_text": "spark window"}),
+    }
+    try:
+        for params, kwargs in shapes.values():  # warm the memo and the index
+            compile_request(reg, "probed", params, **kwargs).collect()
+        calls = []
+        for fn in ("data_version", "list_children"):
+            real = getattr(fs, fn)
+            monkeypatch.setattr(fs, fn, lambda *a, _fn=fn, _real=real: calls.append(_fn) or _real(*a))
+        counts = {}
+        for shape, (params, kwargs) in shapes.items():
+            calls.clear()
+            compile_request(reg, "probed", params, **kwargs)
+            counts[shape] = (calls.count("data_version"), calls.count("list_children"))
+        assert counts == dict.fromkeys(shapes, (1, 0))
+    finally:
+        _drop_indexes("probed")
+
+
+def test_commit_during_compile_does_not_split_a_request(spark, tmp_path, monkeypatch):
+    """A commit that lands while a predicated BM25 request compiles
+    changes neither its rows nor its scores: both come from the version
+    read at the start, as ``bm25_search`` over that version scores them."""
+    from lakeapi_spark import registry
+    from lakeapi_spark.operators.search import bm25_search
+    from lakeapi_spark.sources.delta import delta_snapshot, read_delta, update_delta
+
+    reg, path = _live_docs(spark, tmp_path, "split")
+    before = delta_snapshot(spark, path).version
+    apply_query = registry.apply_query
+    commits = []
+
+    def committing(df, req):
+        if not commits:
+            commits.append(update_delta(spark, path, {"text": "'spark spark spark spark'"}, "doc_id = 3"))
+        return apply_query(df, req)
+
+    monkeypatch.setattr(registry, "apply_query", committing)
+    try:
+        got = [(r.doc_id, r.text, r.search_score) for r in compile_request(
+            reg, "split", {"doc_id": 3}, search_text="spark").collect()]
+        assert commits and delta_snapshot(spark, path).version > before
+        old = read_delta(spark, path, {"versionAsOf": str(before)})
+        want = [(r.doc_id, r.text, r.bm25_score) for r in bm25_search(
+            old, "doc_id", "text", "spark").where("doc_id = 3").collect()]
+        assert got == want and got
+    finally:
+        _drop_indexes("split")
 
 
 def test_predicates_from_filters_folding():
