@@ -136,6 +136,8 @@ def _apply_action(snap: DeltaSnapshot, action: dict) -> None:
             "delta.columnMapping.mode", "none"
         )
         snap.metadata_raw = {k: v for k, v in md.items() if v is not None}
+        # a map, also where a checkpoint's empty map came back as []
+        snap.metadata_raw["configuration"] = dict(md.get("configuration") or {})
     if "add" in action:
         a = action["add"]
         snap.files[a["path"]] = dict(a.get("partitionValues") or {})
@@ -381,16 +383,22 @@ def _file_path_raw_col():
     return F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
 
 
-def _uri_to_raw_path(abs_uri: str) -> str:
-    """Absolute ``_metadata.file_path`` URI -> raw local path (scheme
-    stripped, percent-encoding decoded) for driver-side rel-path
-    lookups."""
+def _log_paths(base: str, snap: DeltaSnapshot, abs_uris: list[str]) -> list[str]:
+    """The log path of each scanned file: ``_metadata.file_path`` is an
+    absolute URI, matched as a raw local path (scheme stripped,
+    percent-encoding decoded) against the snapshot's files (the lookup
+    is bounded by the file count)."""
     import os
     import urllib.parse
 
-    return os.path.abspath(
-        urllib.parse.unquote(urllib.parse.urlparse(abs_uri).path)
-    )
+    abs_to_rel = {os.path.abspath(_add_abs(base, rel)): rel for rel in snap.files}
+    rels = []
+    for uri in abs_uris:
+        rel = abs_to_rel.get(os.path.abspath(urllib.parse.unquote(urllib.parse.urlparse(uri).path)))
+        if rel is None:  # pragma: no cover - provenance must resolve
+            raise RuntimeError(f"scanned file not in snapshot {base}")
+        rels.append(rel)
+    return rels
 
 
 def _read_file_bytes(spark: SparkSession, full_path: str) -> bytes:
@@ -1602,12 +1610,7 @@ def add_constraint_delta(
         proto["minWriterVersion"] = 3
         actions.append({"protocol": proto})
     actions.append({"metaData": md})
-    log = f"{base}/_delta_log"
-    if not _try_commit(log, snap.version + 1, actions, operation="ADD CONSTRAINT"):
-        raise ConcurrentDeltaModificationError(
-            f"concurrent commit to {base} during ADD CONSTRAINT; re-run"
-        )
-    return snap.version + 1
+    return _commit(spark, base, snap, actions, "ADD CONSTRAINT", read=None)
 
 
 def drop_constraint_delta(spark: SparkSession, path: str, name: str) -> int:
@@ -1624,14 +1627,7 @@ def drop_constraint_delta(spark: SparkSession, path: str, name: str) -> int:
     md = dict(snap.metadata_raw)
     md["configuration"] = cfg
     md.setdefault("format", {"provider": "parquet"})
-    log = f"{base}/_delta_log"
-    if not _try_commit(
-        log, snap.version + 1, [{"metaData": md}], operation="DROP CONSTRAINT"
-    ):
-        raise ConcurrentDeltaModificationError(
-            f"concurrent commit to {base} during DROP CONSTRAINT; re-run"
-        )
-    return snap.version + 1
+    return _commit(spark, base, snap, [{"metaData": md}], "DROP CONSTRAINT")
 
 
 def _rules_mentioning(spark: SparkSession, snap: DeltaSnapshot, col: str) -> list[str]:
@@ -1709,14 +1705,7 @@ def rename_column_delta(
         new if c == old else c for c in (md.get("partitionColumns") or [])
     ]
     md.setdefault("format", {"provider": "parquet"})
-    log = f"{base}/_delta_log"
-    if not _try_commit(
-        log, snap.version + 1, [{"metaData": md}], operation="RENAME COLUMN"
-    ):
-        raise ConcurrentDeltaModificationError(
-            f"concurrent commit to {base} during RENAME COLUMN; re-run"
-        )
-    return snap.version + 1
+    return _commit(spark, base, snap, [{"metaData": md}], "RENAME COLUMN")
 
 
 def drop_column_delta(spark: SparkSession, path: str, col: str) -> int:
@@ -1756,14 +1745,7 @@ def drop_column_delta(spark: SparkSession, path: str, col: str) -> int:
         [f for f in snap.schema.fields if f.name != col]
     ).json()
     md.setdefault("format", {"provider": "parquet"})
-    log = f"{base}/_delta_log"
-    if not _try_commit(
-        log, snap.version + 1, [{"metaData": md}], operation="DROP COLUMN"
-    ):
-        raise ConcurrentDeltaModificationError(
-            f"concurrent commit to {base} during DROP COLUMN; re-run"
-        )
-    return snap.version + 1
+    return _commit(spark, base, snap, [{"metaData": md}], "DROP COLUMN")
 
 
 def sync_identity_delta(spark: SparkSession, path: str, col: str) -> int:
@@ -1798,14 +1780,7 @@ def sync_identity_delta(spark: SparkSession, path: str, col: str) -> int:
         snap.schema, {col: aligned}
     ).json()
     md.setdefault("format", {"provider": "parquet"})
-    log = f"{base}/_delta_log"
-    if not _try_commit(
-        log, snap.version + 1, [{"metaData": md}], operation="SYNC IDENTITY"
-    ):
-        raise ConcurrentDeltaModificationError(
-            f"concurrent commit to {base} during SYNC IDENTITY; re-run"
-        )
-    return snap.version + 1
+    return _commit(spark, base, snap, [{"metaData": md}], "SYNC IDENTITY", read=None)
 
 
 def write_delta_column_mapped(
@@ -1899,16 +1874,9 @@ def write_delta(
     add (and, for overwrite, remove) actions. Returns the committed
     version.
 
-    Commit atomicity uses the protocol's put-if-absent contract:
-    ``O_CREAT|O_EXCL`` on the versioned filename for POSIX-visible
-    paths (local disk, NFS, fuse mounts), and the Hadoop FileSystem
-    temp-write + rename-if-absent port (:func:`_try_commit_fs` —
-    delta's HDFSLogStore algorithm) for scheme-carrying URIs (hdfs:,
-    abfss:, explicit file:) — a concurrent writer losing the race
-    re-reads the snapshot and retries at the next version (bounded by
-    ``max_commit_retries``). Stores without atomic rename-if-absent
-    (plain S3) need a coordinating LogStore / commit service, exactly
-    as delta-spark does.
+    The commit goes through :func:`_commit` (put-if-absent, at most
+    ``max_commit_retries`` attempts) as a write that read no file; an
+    overwrite removes the files live at the version it lands on.
 
     ``txn_app_id``/``txn_version`` add the protocol's ``txn`` action:
     the idempotence marker a streaming sink uses to make at-least-once
@@ -2033,139 +2001,78 @@ def write_delta(
                 "(the table's metaData keeps its layout)"
             )
         pcols = list(pre.partition_columns)
+    # the commit's metaData action, when it changes the table's: built
+    # from the pre-snapshot, which the commit requires to be current
     mapped = pre is not None and pre.column_mapping_mode != "none"
-    pinned_md: dict | None = None  # metaData action for mapped commits
+    table_schema = df.schema if pre is None else pre.schema
+    md: dict | None = None
+    if pre is None or (mode == "overwrite" and not mapped):
+        # tblproperties: set explicitly at create/overwrite, else an
+        # overwrite PRESERVES the table's existing properties (a
+        # data overwrite must not silently switch off CDF etc.)
+        cfg = configuration
+        if cfg is None and pre is not None:
+            cfg = pre.metadata_raw.get("configuration")
+        md = {
+            "id": str(uuid.uuid5(uuid.NAMESPACE_URL, base)),
+            "schemaString": df.schema.json(),
+            "partitionColumns": pcols,
+            "format": {"provider": "parquet"},
+            "configuration": dict(cfg or {}),
+        }
+    elif mode == "overwrite":
+        if pre.schema.simpleString() != df.schema.simpleString():
+            raise NotImplementedError(
+                "schema-changing overwrite of a column-mapped table is "
+                "not supported (the mapping for the new schema would be "
+                "ambiguous); overwrite with the table schema, or use "
+                "merge_schema appends for new columns"
+            )
+        md = dict(pre.metadata_raw)  # PRESERVE the mapping
+    elif pre.schema.simpleString() != df.schema.simpleString():
+        merged = _merged_append_schema(pre, df.schema, merge_schema, base)
+        if merged is not None:
+            table_schema = merged
+            md = dict(pre.metadata_raw)
+            md["schemaString"] = merged.json()
+            if mapped:
+                md["configuration"] = {
+                    **(md.get("configuration") or {}),
+                    "delta.columnMapping.maxColumnId": str(_max_mapping_id(merged)),
+                }
+    if identity_md_updates:  # the new high water marks ride along
+        md = md or dict(pre.metadata_raw)
+        md["schemaString"] = _schema_with_identity_high(
+            T.StructType.fromJson(json.loads(md["schemaString"])), identity_md_updates
+        ).json()
     stage_df, stage_pcols = df, pcols
     if mapped:
-        fields = list(pre.schema.fields)
-        if mode == "overwrite":
-            if pre.schema.simpleString() != df.schema.simpleString():
-                raise NotImplementedError(
-                    "schema-changing overwrite of a column-mapped table is "
-                    "not supported (the mapping for the new schema would be "
-                    "ambiguous); overwrite with the table schema, or use "
-                    "merge_schema appends for new columns"
-                )
-            pinned_md = dict(pre.metadata_raw)  # PRESERVE the mapping
-            pinned_md.setdefault("format", {"provider": "parquet"})
-        elif pre.schema.simpleString() != df.schema.simpleString():
-            merged = _merged_append_schema(pre, df.schema, merge_schema, base)
-            if merged is not None:
-                fields = list(merged.fields)
-                pinned_md = dict(pre.metadata_raw)
-                pinned_md["schemaString"] = merged.json()
-                pinned_md.setdefault("format", {"provider": "parquet"})
-                cfg = dict(pinned_md.get("configuration") or {})
-                cfg["delta.columnMapping.maxColumnId"] = str(
-                    _max_mapping_id(merged)
-                )
-                pinned_md["configuration"] = cfg
-        phys = {f.name: _physical_name(f) for f in fields}
-        stage_df = _physical_projection(df, fields)
+        phys = {f.name: _physical_name(f) for f in table_schema.fields}
+        stage_df = _physical_projection(df, list(table_schema.fields))
         stage_pcols = [phys.get(c, c) for c in pcols]
     adds = _stage_data_files(stage_df, base, stage_pcols, collect_stats)
     for h in id_cache_handles:
         h.unpersist()
 
-    # 2. commit loop: snapshot -> build actions -> put-if-absent
-    log = f"{base}/_delta_log"
-    os.makedirs(log, exist_ok=True)
-    table_id = str(uuid.uuid5(uuid.NAMESPACE_URL, base))
-    for _attempt in range(max_commit_retries):
-        try:
-            snap = delta_snapshot(spark, base)
-        except FileNotFoundError:
-            snap = None
-        version = (snap.version if snap else -1) + 1
-        actions: list[dict] = []
-        if snap is None:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-        if mapped:
-            # staged files are physical per the PRE-snapshot's mapping:
-            # any concurrent schema/mapping change invalidates them
-            if snap is None or snap.metadata_raw.get("schemaString") != (
-                pre.metadata_raw.get("schemaString")
-            ):
-                raise ConcurrentDeltaModificationError(
-                    f"concurrent commit changed the schema of {base} during "
-                    "a column-mapped write; re-run"
-                )
-            if pinned_md is not None:
-                actions.append({"metaData": pinned_md})
-        elif snap is None or mode == "overwrite":
-            # tblproperties: set explicitly at create/overwrite, else an
-            # overwrite PRESERVES the table's existing properties (a
-            # data overwrite must not silently switch off CDF etc.)
-            if configuration is not None:
-                cfg = dict(configuration)
-            elif snap is not None:
-                cfg = dict(snap.metadata_raw.get("configuration") or {})
-            else:
-                cfg = {}
-            actions.append(
-                {
-                    "metaData": {
-                        "id": table_id,
-                        "schemaString": df.schema.json(),
-                        "partitionColumns": pcols,
-                        "format": {"provider": "parquet"},
-                        "configuration": cfg,
-                    }
-                }
-            )
-        elif snap.schema.simpleString() != df.schema.simpleString():
-            merged = _merged_append_schema(snap, df.schema, merge_schema, base)
-            if merged is not None:
-                md = dict(snap.metadata_raw)
-                md["schemaString"] = merged.json()
-                md.setdefault("format", {"provider": "parquet"})
-                actions.append({"metaData": md})
-        if identity_md_updates and snap is not None:
-            # our staged values assumed the PRE watermark: if another
-            # writer allocated meanwhile, they would collide — conflict
-            cur_ids = _identity_fields(snap.schema)
-            for iname in identity_md_updates:
-                if cur_ids.get(iname, {}).get("high") != id_specs[iname]["high"]:
-                    raise ConcurrentDeltaModificationError(
-                        f"concurrent identity allocation on {base} (column "
-                        f"{iname!r}); re-run the append"
-                    )
-            patched = None
-            for a in actions:
-                if "metaData" in a:  # fold into the pending metaData
-                    sch = T.StructType.fromJson(
-                        json.loads(a["metaData"]["schemaString"])
-                    )
-                    a["metaData"]["schemaString"] = _schema_with_identity_high(
-                        sch, identity_md_updates
-                    ).json()
-                    patched = a
-                    break
-            if patched is None:
-                md = dict(snap.metadata_raw)
-                md["schemaString"] = _schema_with_identity_high(
-                    snap.schema, identity_md_updates
-                ).json()
-                md.setdefault("format", {"provider": "parquet"})
-                actions.append({"metaData": md})
-        if txn_app_id is not None:
-            actions.append(
-                {"txn": {"appId": txn_app_id, "version": int(txn_version or 0)}}
-            )
-        if mode == "overwrite" and snap is not None:
-            for old in snap.files:
-                actions.append(
-                    {"remove": {"path": old, "deletionTimestamp": 0, "dataChange": True}}
-                )
-        actions.extend(adds)
-        if _try_commit(log, version, actions, operation="WRITE"):
-            return version
-        # lost the race: re-snapshot, retry at next version
-    raise RuntimeError(
-        f"could not commit to {base} after {max_commit_retries} attempts "
-        "(concurrent writers)"
+    head: list[dict] = []
+    if pre is None:
+        head.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
+    if md is not None:
+        md.setdefault("format", {"provider": "parquet"})
+        head.append({"metaData": md})
+    if txn_app_id is not None:
+        head.append({"txn": {"appId": txn_app_id, "version": int(txn_version or 0)}})
+
+    def actions(current: DeltaSnapshot | None) -> list[dict]:
+        removes = [
+            {"remove": {"path": old, "deletionTimestamp": 0, "dataChange": True}}
+            for old in (current.files if current is not None and mode == "overwrite" else ())
+        ]
+        return head + removes + adds
+
+    os.makedirs(f"{base}/_delta_log", exist_ok=True)
+    return _commit(
+        spark, base, pre, actions, "WRITE", max_commit_retries=max_commit_retries
     )
 
 
@@ -2284,12 +2191,9 @@ def _try_commit_fs(log_uri: str, version: int, payload: str) -> bool:
 
     from lakeapi_spark.sources.fs import _fs_and_path
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError(
-            f"_try_commit_fs({log_uri}): no active SparkSession for the "
-            f"Hadoop FileSystem gateway"
-        )
+    # active(), not getActiveSession(): the latter is None in a thread
+    # that did not create the session (a serving thread)
+    spark = SparkSession.active()
     base = log_uri.rstrip("/")
     fs, dest = _fs_and_path(spark, f"{base}/{version:020d}.json")
     if fs.exists(dest):  # cheap fast-path; rename below is the real gate
@@ -2316,10 +2220,83 @@ def _try_commit_fs(log_uri: str, version: int, payload: str) -> bool:
 
 
 class ConcurrentDeltaModificationError(RuntimeError):
-    """A concurrent commit changed files this operation had already
-    analyzed — the caller must re-run the whole operation on the new
+    """A concurrent commit changed what this operation read (the
+    staleness rule of :func:`_commit`), or it lost the commit race
+    every time — the caller must re-run the whole operation on the new
     snapshot (delta-spark surfaces the same condition as
     ConcurrentDeleteReadException / ConcurrentAppendException)."""
+
+
+def _table_terms(snap: DeltaSnapshot | None) -> tuple | None:
+    """The metaData and protocol terms a writer's analysis rests on,
+    in a form a JSON commit and a checkpoint of the same actions replay
+    to alike (a checkpoint keeps only the metaData fields of its schema
+    and drops absent feature lists)."""
+    if snap is None:
+        return None
+    p, md = snap.protocol, snap.metadata_raw
+    return (
+        md.get("schemaString"),
+        snap.partition_columns,
+        md["configuration"],
+        int(p.get("minReaderVersion", 1)),
+        int(p.get("minWriterVersion", 2)),
+        sorted(p.get("readerFeatures") or []),
+        sorted(p.get("writerFeatures") or []),
+    )
+
+
+def _commit(
+    spark: SparkSession,
+    base: str,
+    snap: DeltaSnapshot | None,
+    actions,
+    operation: str | None,
+    read=(),
+    max_commit_retries: int = 10,
+) -> int:
+    """Commit a writer's ``actions`` at the version after the table's
+    latest and return that version: the one commit path of every delta
+    writer (the three version-0 creates put their commit once).
+
+    ``snap`` is the snapshot the writer analyzed (None when it found no
+    table); ``actions`` is the action list, or a callable that builds it
+    from the table's current snapshot; ``read`` names the log paths of
+    the files the writer read, or is None when it scanned the whole
+    table, whose file list it then read too.
+
+    Staleness rule (Delta's optimistic concurrency: a commit lands only
+    if nothing it read has changed since). A lost put-if-absent race
+    re-snapshots, and the analysis is stale when
+    - the table's metaData (schema, partition columns, properties) or
+      protocol differs from ``snap``'s, or
+    - a file in ``read`` is gone or carries another deletion vector
+      (for ``read=None``: any live file does, or a file was added).
+    A stale analysis raises :class:`ConcurrentDeltaModificationError`;
+    otherwise the writer retries at the next version, up to
+    ``max_commit_retries`` attempts in all."""
+    log = f"{base}/_delta_log"
+    current = snap
+    for _attempt in range(max_commit_retries):
+        version = (-1 if current is None else current.version) + 1
+        todo = actions(current) if callable(actions) else actions
+        if _try_commit(log, version, todo, operation=operation):
+            return version
+        current = delta_snapshot(spark, base)
+        stale = _table_terms(current) != _table_terms(snap)
+        if not stale:
+            was, now = _file_identities(snap), _file_identities(current)
+            stale = was != now if read is None else any(now.get(p) != was[p] for p in read)
+        if stale:
+            raise ConcurrentDeltaModificationError(
+                f"concurrent commit changed {base} during {operation or 'commit'} "
+                f"(analyzed v{-1 if snap is None else snap.version}, "
+                f"now v{current.version}); re-run"
+            )
+    raise ConcurrentDeltaModificationError(
+        f"could not commit {operation or 'commit'} to {base} after "
+        f"{max_commit_retries} attempts (concurrent writers)"
+    )
 
 
 def merge_delta(
@@ -2361,17 +2338,12 @@ def merge_delta(
        both the matched rewrite AND the not-matched insert anti-join run
        against touched rows only; untouched files carry over by log
        reference, zero IO;
-    3. the commit is remove(touched) + add(rewritten) under the same
-       put-if-absent contract as write_delta; a concurrent commit that
-       touched the analyzed files raises
-       :class:`ConcurrentDeltaModificationError` instead of silently
-       resurrecting overwritten rows.
+    3. the commit is remove(touched) + add(rewritten), through
+       :func:`_commit` as a whole-table read.
 
     Column-mapped tables merge like any other: rewritten files are
     staged in the table's PHYSICAL layout (_stage_snapshot_files).
     """
-    import os
-
     if when_matched not in ("update", "delete", "ignore"):
         raise ValueError(f"when_matched must be update|delete|ignore, got {when_matched!r}")
     if when_not_matched not in ("insert", "ignore"):
@@ -2422,17 +2394,7 @@ def merge_delta(
     matched_files_rows = (
         target.join(source.select(on), on, "leftsemi").select("_file").distinct().collect()
     )
-    # _metadata.file_path is an absolute file: URI; map back to the
-    # log's relative paths (the dict is bounded by the file count)
-    abs_to_rel = {
-        os.path.abspath(_add_abs(base, rel)): rel for rel in snap.files
-    }
-    touched: list[str] = []
-    for row in matched_files_rows:
-        rel = abs_to_rel.get(_uri_to_raw_path(row["_file"]))
-        if rel is None:  # pragma: no cover - provenance must resolve
-            raise RuntimeError(f"scanned file not in snapshot {base}")
-        touched.append(rel)
+    touched = _log_paths(base, snap, [r["_file"] for r in matched_files_rows])
 
     touched_rows = _files_to_df(
         spark, base, snap, {p: snap.files[p] for p in touched}
@@ -2468,7 +2430,6 @@ def merge_delta(
         new_data, snap.schema, snap.metadata_raw.get("configuration"), "merge"
     )
     adds = _stage_snapshot_files(new_data, base, snap, collect_stats)
-    log = f"{base}/_delta_log"
     removes = [
         {"remove": {"path": p, "deletionTimestamp": 0, "dataChange": True}}
         for p in touched
@@ -2515,26 +2476,9 @@ def merge_delta(
         txn_actions.append(
             {"txn": {"appId": txn_app_id, "version": int(txn_version or 0)}}
         )
-    for _attempt in range(max_commit_retries):
-        version = snap.version + 1
-        if _try_commit(
-            log, version, removes + adds + cdc_actions + txn_actions, operation="MERGE"
-        ):
-            return version
-        snap2 = delta_snapshot(spark, base)
-        # conflict check: the analysis is invalid if ANY file changed
-        # (an added file may contain matching keys; a removed touched
-        # file means our removes would resurrect/duplicate data; a new
-        # DV on an analyzed file means our rewrite would resurrect
-        # concurrently deleted rows)
-        if _file_identities(snap2) != _file_identities(snap):
-            raise ConcurrentDeltaModificationError(
-                f"concurrent commit changed {base} during merge "
-                f"(analyzed v{snap.version}, now v{snap2.version}); re-run merge"
-            )
-        snap = snap2
-    raise RuntimeError(
-        f"could not commit merge to {base} after {max_commit_retries} attempts"
+    return _commit(
+        spark, base, snap, removes + adds + cdc_actions + txn_actions, "MERGE",
+        read=None, max_commit_retries=max_commit_retries,
     )
 
 
@@ -2577,19 +2521,15 @@ def update_delta(
     (``sql/dml.py`` passes the ones it parsed). Returns the committed
     version (the current one when nothing matched).
 
-    Same touched-data cost model and concurrency rules as merge_delta:
-    one provenance scan finds the files containing a matching LIVE row
-    (existing deletion vectors are applied by the scan, and the rewrite
-    folds them in — a touched file comes back DV-free), only those
-    files rewrite, untouched files carry over by log reference, and a
-    conflicting concurrent commit raises
-    :class:`ConcurrentDeltaModificationError`. Updating a PARTITION
+    Same touched-data cost model as merge_delta: one provenance scan
+    finds the files containing a matching LIVE row (existing deletion
+    vectors are applied by the scan, and the rewrite folds them in — a
+    touched file comes back DV-free), only those files rewrite, and
+    untouched files carry over by log reference. Updating a PARTITION
     column is allowed — rewritten rows land in their new partition
     directories because the rewrite re-partitions by the table's
     partition columns. Expression type mismatches are rejected up
     front (the updated relation must keep the table schema)."""
-    import os
-
     base = _local_path(path).rstrip("/")
     snap = delta_snapshot(spark, base)
     _gate_write(snap, "update")
@@ -2623,13 +2563,7 @@ def update_delta(
     )
     if not matched_files_rows:
         return snap.version  # no-op
-    abs_to_rel = {os.path.abspath(_add_abs(base, rel)): rel for rel in snap.files}
-    touched: list[str] = []
-    for row in matched_files_rows:
-        rel = abs_to_rel.get(_uri_to_raw_path(row["_file"]))
-        if rel is None:  # pragma: no cover - provenance must resolve
-            raise RuntimeError(f"scanned file not in snapshot {base}")
-        touched.append(rel)
+    touched = _log_paths(base, snap, [r["_file"] for r in matched_files_rows])
 
     touched_rows = _files_to_df(
         spark, base, snap, {p: snap.files[p] for p in touched}
@@ -2708,22 +2642,9 @@ def update_delta(
     finally:
         if cdf:
             flagged.unpersist()
-    log = f"{base}/_delta_log"
-    for _attempt in range(max_commit_retries):
-        version = snap.version + 1
-        if _try_commit(
-            log, version, removes + adds + cdc_actions, operation="UPDATE"
-        ):
-            return version
-        snap2 = delta_snapshot(spark, base)
-        if _file_identities(snap2) != _file_identities(snap):
-            raise ConcurrentDeltaModificationError(
-                f"concurrent commit changed {base} during update "
-                f"(analyzed v{snap.version}, now v{snap2.version}); re-run update"
-            )
-        snap = snap2
-    raise RuntimeError(
-        f"could not commit update to {base} after {max_commit_retries} attempts"
+    return _commit(
+        spark, base, snap, removes + adds + cdc_actions, "UPDATE",
+        read=None, max_commit_retries=max_commit_retries,
     )
 
 
@@ -2747,16 +2668,13 @@ def replace_where_delta(
     applied; the rewrite folds them in), only those files rewrite —
     keeping their non-matching rows — untouched files carry over by
     log reference, and the new data stages alongside, all landing in
-    one atomic version (same put-if-absent + conflict rules as
-    merge/update). On a partition-aligned predicate the scan prunes to
+    one atomic version. On a partition-aligned predicate the scan prunes to
     the affected partitions, so cost ∝ replaced partitions — the
     backfill sweet spot. CDF tables record delete pre-images for
     replaced rows and insert rows for the incoming data. Generated
     columns compute-if-absent; identity columns must be supplied
     explicitly (use write_delta's append path for allocation).
     Returns the committed version."""
-    import os
-
     spark = df.sparkSession
     base = _local_path(path).rstrip("/")
     snap = delta_snapshot(spark, base)
@@ -2799,13 +2717,7 @@ def replace_where_delta(
 
     target = _files_to_df(spark, base, snap, snap.files, file_col="_file")
     matched_files_rows = target.filter(cond).select("_file").distinct().collect()
-    abs_to_rel = {os.path.abspath(_add_abs(base, rel)): rel for rel in snap.files}
-    touched: list[str] = []
-    for row in matched_files_rows:
-        rel = abs_to_rel.get(_uri_to_raw_path(row["_file"]))
-        if rel is None:  # pragma: no cover - provenance must resolve
-            raise RuntimeError(f"scanned file not in snapshot {base}")
-        touched.append(rel)
+    touched = _log_paths(base, snap, [r["_file"] for r in matched_files_rows])
 
     cdf = _cdf_enabled(snap)
     adds: list[dict] = []
@@ -2851,22 +2763,9 @@ def replace_where_delta(
         if flagged is not None and cdf:
             flagged.unpersist()
 
-    log = f"{base}/_delta_log"
-    for _attempt in range(max_commit_retries):
-        version = snap.version + 1
-        if _try_commit(
-            log, version, removes + adds + cdc_actions, operation="REPLACE WHERE"
-        ):
-            return version
-        snap2 = delta_snapshot(spark, base)
-        if _file_identities(snap2) != _file_identities(snap):
-            raise ConcurrentDeltaModificationError(
-                f"concurrent commit changed {base} during replaceWhere "
-                f"(analyzed v{snap.version}, now v{snap2.version}); re-run"
-            )
-        snap = snap2
-    raise RuntimeError(
-        f"could not commit replaceWhere to {base} after {max_commit_retries} attempts"
+    return _commit(
+        spark, base, snap, removes + adds + cdc_actions, "REPLACE WHERE",
+        read=None, max_commit_retries=max_commit_retries,
     )
 
 
@@ -2993,17 +2892,13 @@ def delete_delta(
     4. the commit re-adds each touched file with the same
        size/stats/partitionValues and the new DV descriptor, upgrading
        the protocol to readerVersion 3 / writerVersion 7 with the
-       ``deletionVectors`` feature on first use;
-    5. same put-if-absent commit + conflict rules as merge_delta
-       (a concurrent change to any analyzed file or ITS DV raises
-       :class:`ConcurrentDeltaModificationError`).
+       ``deletionVectors`` feature on first use.
 
     The matched positions are collected to the driver (bounded by
     ``max_deleted_rows``, default 50M ≈ a few hundred MB): a DELETE
     matching more rows than that should be a copy-on-write rewrite
     (``merge_delta`` with when_matched='delete' or an overwrite), which
     this function enforces by raising."""
-    import os
     import uuid
 
     from lakeapi_spark.sources.dv import (
@@ -3036,13 +2931,13 @@ def delete_delta(
             "instead of building giant deletion vectors"
         )
 
-    abs_to_rel = {os.path.abspath(_add_abs(base, rel)): rel for rel in snap.files}
-    new_positions: dict[str, set[int]] = {}
-    for abs_uri, group in pdf.groupby("_file"):
-        rel = abs_to_rel.get(_uri_to_raw_path(abs_uri))
-        if rel is None:  # pragma: no cover - provenance must resolve
-            raise RuntimeError(f"scanned file not in snapshot {base}")
-        new_positions[rel] = set(group["_pos"].tolist())
+    groups = list(pdf.groupby("_file"))
+    new_positions = dict(
+        zip(
+            _log_paths(base, snap, [uri for uri, _ in groups]),
+            (set(g["_pos"].tolist()) for _, g in groups),
+        )
+    )
 
     def _read_rel(rel_or_abs: str) -> bytes:
         full = rel_or_abs if rel_or_abs.startswith("/") else f"{base}/{rel_or_abs}"
@@ -3100,25 +2995,12 @@ def delete_delta(
             deleted_rows.withColumn("_change_type", F.lit("delete")), base, snap
         )
 
-    log = f"{base}/_delta_log"
-    for _attempt in range(max_commit_retries):
-        actions: list[dict] = []
-        proto = snap.protocol
-        if "deletionVectors" not in (proto.get("readerFeatures") or []):
-            actions.append({"protocol": _protocol_with_dv(snap)})
-        actions.extend(removes + adds + cdc_actions)
-        version = snap.version + 1
-        if _try_commit(log, version, actions, operation="DELETE"):
-            return version
-        snap2 = delta_snapshot(spark, base)
-        if _file_identities(snap2) != _file_identities(snap):
-            raise ConcurrentDeltaModificationError(
-                f"concurrent commit changed {base} during delete "
-                f"(analyzed v{snap.version}, now v{snap2.version}); re-run delete"
-            )
-        snap = snap2
-    raise RuntimeError(
-        f"could not commit delete to {base} after {max_commit_retries} attempts"
+    protocol = []
+    if "deletionVectors" not in (snap.protocol.get("readerFeatures") or []):
+        protocol.append({"protocol": _protocol_with_dv(snap)})
+    return _commit(
+        spark, base, snap, protocol + removes + adds + cdc_actions, "DELETE",
+        read=None, max_commit_retries=max_commit_retries,
     )
 
 
@@ -3333,14 +3215,10 @@ def _commit_txn_marker(
     """Data-free commit carrying only a ``txn`` action — the streaming-
     idempotence marker without an (empty) data write."""
     base = _local_path(path).rstrip("/")
-    log = f"{base}/_delta_log"
-    for _attempt in range(10):
-        v = delta_snapshot(spark, base).version + 1
-        if _try_commit(
-            log, v, [{"txn": {"appId": app_id, "version": int(version)}}]
-        ):
-            return v
-    raise RuntimeError(f"could not commit txn marker to {base}")
+    return _commit(
+        spark, base, delta_snapshot(spark, base),
+        [{"txn": {"appId": app_id, "version": int(version)}}], None,
+    )
 
 
 def zorder_write(
@@ -3619,12 +3497,10 @@ def optimize_delta(
         )
     if not adds:
         return snap.version  # nothing to compact
-    log = f"{base}/_delta_log"
-    for _attempt in range(10):
-        version = delta_snapshot(spark, base).version + 1
-        if _try_commit(log, version, removes + adds, operation="OPTIMIZE"):
-            return version
-    raise RuntimeError(f"could not commit OPTIMIZE to {base} (concurrent writers)")
+    return _commit(
+        spark, base, snap, removes + adds, "OPTIMIZE",
+        read=[a["remove"]["path"] for a in removes],
+    )
 
 
 def vacuum_delta(
@@ -3748,9 +3624,8 @@ def restore_delta(
     undo at 100 TB (pure log metadata, zero data IO).
 
     Raises if a file the target version needs has been VACUUMed away
-    (delta errors the same way), or
-    :class:`ConcurrentDeltaModificationError` on a conflicting
-    concurrent commit."""
+    (delta errors the same way). The restore reads no file: a lost
+    commit race rebuilds the actions from the new latest version."""
     import os
 
     base = _local_path(path).rstrip("/")
@@ -3774,23 +3649,24 @@ def restore_delta(
             f"file(s) were vacuumed (e.g. {missing[0]}); that version is "
             "no longer reconstructable"
         )
-    log = f"{base}/_delta_log"
     snap = delta_snapshot(spark, base)
     _gate_write(snap, "restore")
-    for _attempt in range(max_commit_retries):
-        cur_ids = _file_identities(snap)
-        tgt_ids = _file_identities(target)
+    head: list[dict] = []
+    if snap.schema.simpleString() != target.schema.simpleString() or (
+        snap.partition_columns != target.partition_columns
+    ):
+        md = dict(target.metadata_raw)
+        md.setdefault("format", {"provider": "parquet"})
+        head.append({"metaData": md})
+    tgt_ids = _file_identities(target)
+
+    def actions(current: DeltaSnapshot) -> list[dict]:
+        cur_ids = _file_identities(current)
         seen_cur, seen_tgt = set(cur_ids.values()), set(tgt_ids.values())
-        actions: list[dict] = []
-        if snap.schema.simpleString() != target.schema.simpleString() or (
-            snap.partition_columns != target.partition_columns
-        ):
-            md = dict(target.metadata_raw)
-            md.setdefault("format", {"provider": "parquet"})
-            actions.append({"metaData": md})
-        for rel in snap.files:
+        out = list(head)
+        for rel in current.files:
             if cur_ids[rel] not in seen_tgt:
-                actions.append(
+                out.append(
                     {"remove": {"path": rel, "deletionTimestamp": 0, "dataChange": True}}
                 )
         for rel in target.files:
@@ -3799,15 +3675,13 @@ def restore_delta(
                 add.setdefault("partitionValues", target.files[rel])
                 if add.get("stats") is not None and not isinstance(add["stats"], str):
                     add["stats"] = json.dumps(add["stats"])
-                actions.append({"add": add})
-        if not actions:
-            return snap.version  # already at the target state
-        new_version = snap.version + 1
-        if _try_commit(log, new_version, actions, operation="RESTORE"):
-            return new_version
-        snap = delta_snapshot(spark, base)
-    raise ConcurrentDeltaModificationError(
-        f"could not commit RESTORE to {base} after {max_commit_retries} attempts"
+                out.append({"add": add})
+        return out
+
+    if not actions(snap):
+        return snap.version  # already at the target state
+    return _commit(
+        spark, base, snap, actions, "RESTORE", max_commit_retries=max_commit_retries
     )
 
 

@@ -461,6 +461,23 @@ def test_fs_routed_commit_file_uri_roundtrip(spark, tmp_path):
     assert not [n for n in log_names if n.endswith(".tmp")]  # no temp litter
 
 
+def test_fs_routed_commit_from_a_worker_thread(spark, tmp_path):
+    """A serving thread did not create the session, and
+    ``getActiveSession()`` is None there: the Hadoop-FS commit must still
+    find the session and land."""
+    import concurrent.futures
+
+    from lakeapi_spark.sources.delta import _try_commit, delta_snapshot, write_delta
+
+    path = str(tmp_path / "tbl")
+    write_delta(_mk_df(spark, [(1, 10, _p(1))]), path)  # v0
+    txn = [{"txn": {"appId": "worker", "version": 7}}]
+    with concurrent.futures.ThreadPoolExecutor(1) as pool:
+        landed = pool.submit(_try_commit, f"file://{path}/_delta_log", 1, txn).result()
+    assert landed is True
+    assert delta_snapshot(spark, path).app_versions == {"worker": 7}
+
+
 def test_hadoop_fs_rename_refuses_existing_destination(spark, tmp_path):
     """Pin the platform assumption _try_commit_fs's atomicity rests on:
     ``FileSystem.rename`` onto an EXISTING destination must return

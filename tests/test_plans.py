@@ -587,9 +587,43 @@ def test_request_validation_uses_no_assert():
         f"{rel}:{node.lineno}"
         for rel in (
             "registry.py", "sources/readers.py", "operators/search.py", "sql/endpoint.py",
-            "sql/dml.py", "operators/windows.py", "queries.py",
+            "sql/dml.py", "operators/windows.py", "queries.py", "sources/delta.py",
         )
         for node in ast.walk(ast.parse((root / rel).read_text()))
         if isinstance(node, ast.Assert)
     ]
     assert not offenders, f"assert statements validate input: {offenders}"
+
+
+def test_delta_writers_commit_through_one_path():
+    """Every delta commit goes through ``sources/delta.py:_commit``, the
+    one retry loop and staleness rule: only it and the three version-0
+    creates (which put their commit once) call ``_try_commit``, and no
+    other function calls a commit inside a loop."""
+    import ast
+    import pathlib
+
+    import lakeapi_spark
+
+    source = pathlib.Path(lakeapi_spark.__file__).parent / "sources" / "delta.py"
+    funcs = [
+        n for n in ast.walk(ast.parse(source.read_text())) if isinstance(n, ast.FunctionDef)
+    ]
+
+    def calls(node, *names):
+        return any(
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id in names
+            for n in ast.walk(node)
+        )
+
+    callers = {f.name for f in funcs if calls(f, "_try_commit")}
+    assert callers == {
+        "_commit", "write_delta_column_mapped", "clone_delta", "convert_to_delta"
+    }, callers
+    retrying = {
+        f.name
+        for f in funcs
+        for loop in ast.walk(f)
+        if isinstance(loop, (ast.For, ast.While)) and calls(loop, "_try_commit", "_commit")
+    }
+    assert retrying == {"_commit"}, retrying
