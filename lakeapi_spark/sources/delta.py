@@ -178,10 +178,10 @@ def _normalize_ckpt_value(v):
     return v
 
 
-#: replayed snapshots keyed by the exact log listing (names + mtimes)
-#: — any commit, checkpoint, or in-place rewrite changes the key, so a
-#: hit is provably current. Bounded FIFO; snapshots are treated as
-#: read-only by every consumer (writers copy before mutating).
+#: replayed snapshots keyed by the names + mtimes of the log files
+#: replay reads — any commit, checkpoint, or in-place rewrite changes
+#: the key, so a hit is provably current. Bounded FIFO; snapshots are
+#: treated as read-only by every consumer (writers copy before mutating).
 _SNAPSHOT_CACHE: dict[tuple, DeltaSnapshot] = {}
 _SNAPSHOT_CACHE_MAX = 64
 _SNAPSHOT_CACHE_LOCK = threading.Lock()
@@ -201,19 +201,11 @@ def delta_snapshot(
     from lakeapi_spark.sources.fs import list_children
 
     log_dir = f"{uri.rstrip('/')}/_delta_log"
-    entries = list_children(spark, log_dir)
-    cache_key = (
-        log_dir,
-        version_as_of,
-        tuple((p, m) for p, d, m in entries if not d),
-    )
-    cached = _SNAPSHOT_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
     commits: dict[int, str] = {}
     checkpoints: dict[int, str] = {}
     last_checkpoint = None
-    for path, is_dir, _ in entries:
+    replayed = []  # the key: files replay reads, not a writer's temp files
+    for path, is_dir, mtime in list_children(spark, log_dir):
         if is_dir:
             continue
         name = path.rsplit("/", 1)[-1]
@@ -221,10 +213,15 @@ def delta_snapshot(
             last_checkpoint = path
         elif name.endswith(".checkpoint.parquet"):
             checkpoints[int(name.split(".")[0])] = path
-        elif name.endswith(".json"):
-            stem = name[:-5]
-            if stem.isdigit():
-                commits[int(stem)] = path
+        elif name.endswith(".json") and name[:-5].isdigit():
+            commits[int(name[:-5])] = path
+        else:
+            continue
+        replayed.append((path, mtime))
+    cache_key = (log_dir, version_as_of, tuple(replayed))
+    cached = _SNAPSHOT_CACHE.get(cache_key)
+    if cached is not None:
+        return cached
     if not commits and not checkpoints:
         raise FileNotFoundError(f"no delta commits under {log_dir}")
 
@@ -1216,17 +1213,15 @@ def _stage_data_files(
     import uuid
 
     if _URI_SCHEME.match(base):
-        # uphold-or-refuse: the COMMIT primitive is Hadoop-FS-ready
-        # (_try_commit_fs), but staging walks/moves/stats data files
-        # with POSIX primitives — refusing beats littering a literal
+        # uphold-or-refuse: staging walks/moves/stats data files with
+        # POSIX primitives — refusing beats littering a literal
         # "s3a:..." directory on the driver's local disk and failing
         # somewhere obscure. Object-store writes go through delta-spark
         # (the gated integration path).
         raise NotImplementedError(
             f"fallback delta writer stages data files with POSIX "
             f"primitives; {base!r} carries a URI scheme — use delta-spark "
-            f"for object-store tables (commit atomicity itself is "
-            f"FS-ported, see _try_commit_fs)"
+            f"for object-store tables"
         )
     staging = f"{base}/.staging-{uuid.uuid4().hex}"
     writer = df.write.mode("overwrite")
@@ -1849,11 +1844,8 @@ def write_delta_column_mapped(
             }
         },
     ] + adds
-    log = f"{base}/_delta_log"
-    os.makedirs(log, exist_ok=True)
-    if not _try_commit(log, 0, actions, operation="CREATE TABLE"):
-        raise RuntimeError(f"concurrent writer created {base} first")
-    return 0
+    os.makedirs(f"{base}/_delta_log", exist_ok=True)
+    return _commit(df.sparkSession, base, None, actions, "CREATE TABLE")
 
 
 def write_delta(
@@ -1912,8 +1904,7 @@ def write_delta(
         raise NotImplementedError(
             f"fallback delta writer stages data files with POSIX "
             f"primitives; {base!r} carries a URI scheme — use delta-spark "
-            f"for object-store tables (commit atomicity itself is "
-            f"FS-ported, see _try_commit_fs)"
+            f"for object-store tables"
         )
     pcols = list(partition_by or [])
     os.makedirs(base, exist_ok=True)
@@ -2124,31 +2115,66 @@ def _merged_append_schema(
 
 import re as _re_mod
 
-#: a log_dir that still carries a URI scheme after _local_path (which
+#: a path that still carries a URI scheme after _local_path (which
 #: strips only ``file:``) belongs to a Hadoop filesystem, not POSIX
 _URI_SCHEME = _re_mod.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+
+def _publish(dest: str, data: bytes, replace: bool) -> bool:
+    """Make ``data`` visible at ``dest`` in full or not at all — the one
+    way a file lands in ``_delta_log`` (Delta's log-store contract).
+
+    The bytes go to a uniquely named dotted temp file in ``dest``'s
+    directory (``.<name>.<hex>.tmp``: never a ``.json`` or
+    ``.checkpoint.parquet`` name, so log replay skips it), which is then
+    published with ``os.link`` — put-if-absent: False when ``dest``
+    exists, so exactly one writer wins a version — or, with
+    ``replace=True``, ``os.replace``. The temp file is unlinked on
+    every path. ``os.link`` needs hard links: on file systems without
+    them (FAT/exFAT, some FUSE and SMB mounts) its ``OSError``
+    propagates; there is no fallback."""
+    import os
+    import uuid
+
+    head, name = os.path.split(dest)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "xb") as f:
+            f.write(data)
+        if replace:
+            os.replace(tmp, dest)
+            return True
+        try:
+            os.link(tmp, dest)
+        except FileExistsError:
+            return False
+        return True
+    finally:
+        if os.path.lexists(tmp):
+            os.unlink(tmp)
 
 
 def _try_commit(
     log_dir: str, version: int, actions: list[dict], operation: str | None = None
 ) -> bool:
-    """Put-if-absent commit — delta's LogStore atomicity contract.
-
-    POSIX-visible paths (local disk, NFS, fuse mounts) use
-    ``O_CREAT|O_EXCL`` on the versioned filename directly. URIs that
-    still carry a scheme (``hdfs:``, ``abfss:``, ``s3a:``, or an
-    explicit ``file:`` — anything _local_path did not strip) route
-    through :func:`_try_commit_fs`, the Hadoop FileSystem port of the
-    same primitive. Returns False when another writer took this
-    version first.
+    """Put-if-absent commit of ``<version>.json`` through :func:`_publish`.
+    Returns False when another writer took this version first. The log
+    must be POSIX-visible (a ``file:`` URI is stripped); any other URI
+    scheme raises NotImplementedError — object-store tables go through
+    delta-spark.
 
     ``operation`` prepends a ``commitInfo`` action (operation name +
     wall-clock timestamp + add/remove counts) — pure audit metadata
     (readers skip it; checkpoints drop it per protocol) surfaced by
     :func:`delta_history`."""
-    import os
     import time
 
+    log_dir = _local_path(log_dir)
+    if _URI_SCHEME.match(log_dir):
+        raise NotImplementedError(
+            f"fallback delta writer commits with POSIX primitives; "
+            f"{log_dir!r} carries a URI scheme — use delta-spark"
+        )
     if operation is not None:
         info = {
             "timestamp": int(time.time() * 1000),
@@ -2159,64 +2185,8 @@ def _try_commit(
             },
         }
         actions = [{"commitInfo": info}] + actions
-    payload = "".join(json.dumps(a) + "\n" for a in actions)
-    if _URI_SCHEME.match(log_dir):
-        return _try_commit_fs(log_dir, version, payload)
-    try:
-        fd = os.open(
-            f"{log_dir}/{version:020d}.json", os.O_CREAT | os.O_EXCL | os.O_WRONLY
-        )
-    except FileExistsError:
-        return False
-    with os.fdopen(fd, "w") as f:
-        f.write(payload)
-    return True
-
-
-def _try_commit_fs(log_uri: str, version: int, payload: str) -> bool:
-    """Hadoop-FS put-if-absent: write the payload to a dotted temp file
-    in the log dir (invisible to the snapshot lister, which requires a
-    bare ``<digits>.json`` name), then ``rename`` onto the versioned
-    name. ``FileSystem.rename`` fails — returns False — when the
-    destination exists, which IS the put-if-absent contract on HDFS /
-    ABFS / local (delta's own HDFSLogStore algorithm). Stores without
-    atomic rename-if-absent (plain S3) need a coordinating LogStore /
-    commit service, exactly as delta-spark does.
-
-    Driver-side metadata call through the JVM gateway like the rest of
-    sources/fs.py — one temp write + one rename per commit."""
-    import uuid
-
-    from pyspark.sql import SparkSession
-
-    from lakeapi_spark.sources.fs import _fs_and_path
-
-    # active(), not getActiveSession(): the latter is None in a thread
-    # that did not create the session (a serving thread)
-    spark = SparkSession.active()
-    base = log_uri.rstrip("/")
-    fs, dest = _fs_and_path(spark, f"{base}/{version:020d}.json")
-    if fs.exists(dest):  # cheap fast-path; rename below is the real gate
-        return False
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{base}/.{version:020d}.json.{uuid.uuid4().hex}.tmp"
-    )
-    out = fs.create(tmp, False)
-    try:
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
-        ok = bool(fs.rename(tmp, dest))
-    except BaseException:
-        # a failed write/rename must not leak temp litter into
-        # _delta_log (invisible to the lister, but it accumulates)
-        fs.delete(tmp, False)
-        raise
-    if not ok:
-        fs.delete(tmp, False)
-    return ok
+    data = "".join(json.dumps(a) + "\n" for a in actions).encode("utf-8")
+    return _publish(f"{log_dir}/{version:020d}.json", data, replace=False)
 
 
 class ConcurrentDeltaModificationError(RuntimeError):
@@ -2257,7 +2227,7 @@ def _commit(
 ) -> int:
     """Commit a writer's ``actions`` at the version after the table's
     latest and return that version: the one commit path of every delta
-    writer (the three version-0 creates put their commit once).
+    writer, version-0 creates included.
 
     ``snap`` is the snapshot the writer analyzed (None when it found no
     table); ``actions`` is the action list, or a callable that builds it
@@ -3737,9 +3707,7 @@ def clone_delta(
                 "pathOrInlineDv": f"{sbase}/{dv_relative_path(dv['pathOrInlineDv'])}",
             }
         actions.append({"add": add})
-    if not _try_commit(log, 0, actions, operation="CLONE"):
-        raise ValueError(f"clone destination {dbase} is already a delta table")
-    return 0
+    return _commit(spark, dbase, None, actions, "CLONE")
 
 
 #: checkpoint parquet layout: one action per row, exactly one non-null
@@ -3846,8 +3814,8 @@ def checkpoint_delta(spark: SparkSession, path: str) -> int:
     Time travel to PRE-checkpoint versions keeps working because JSON
     commits are left in place (``delta_snapshot`` falls back to pure
     JSON replay when ``versionAsOf`` predates the checkpoint). The
-    parquet is staged and ``os.replace``d, and ``_last_checkpoint`` is
-    rewritten last — a reader never observes a half-written
+    parquet and then ``_last_checkpoint`` are published through
+    :func:`_publish` — a reader never observes a half-written
     checkpoint.
 
     Foreign-reader interop: remove TOMBSTONES for non-live paths are
@@ -3866,7 +3834,6 @@ def checkpoint_delta(spark: SparkSession, path: str) -> int:
     away, and only classic single-file checkpoints are emitted (no
     v2/sidecar)."""
     import os
-    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as papq
@@ -3949,15 +3916,12 @@ def checkpoint_delta(spark: SparkSession, path: str) -> int:
             add["stats"] = json.dumps(stats)
         rows.append({"add": _known(add, "add")})
 
-    log = f"{base}/_delta_log"
-    tab = pa.Table.from_pylist(rows, schema=schema)
-    tmp = f"{log}/.ckpt-{uuid.uuid4().hex}.parquet"
-    papq.write_table(tab, tmp)
-    os.replace(tmp, f"{log}/{snap.version:020d}.checkpoint.parquet")
-    last = f"{log}/_last_checkpoint"
-    with open(f"{last}.tmp", "w") as f:
-        json.dump({"version": snap.version, "size": len(rows)}, f)
-    os.replace(f"{last}.tmp", last)
+    buf = pa.BufferOutputStream()
+    papq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+    ckpt = f"{log_dir}/{snap.version:020d}.checkpoint.parquet"
+    _publish(ckpt, buf.getvalue().to_pybytes(), replace=True)
+    last = json.dumps({"version": snap.version, "size": len(rows)})
+    _publish(f"{log_dir}/_last_checkpoint", last.encode("utf-8"), replace=True)
     return snap.version
 
 
@@ -4114,8 +4078,4 @@ def convert_to_delta(
             }
         },
     ] + adds
-    if not _try_commit(log, 0, actions, operation="CONVERT"):
-        raise ConcurrentDeltaModificationError(
-            f"another writer created {path!r} during convert"
-        )
-    return 0
+    return _commit(spark, base, None, actions, "CONVERT")

@@ -6,7 +6,11 @@ A writer whose analysis the racer left intact retries and ends where
 serial application (racer, then writer) ends; a writer whose analysis
 went stale raises ``ConcurrentDeltaModificationError`` and leaves the
 racer's result as it is: no deleted row comes back, no constraint is
-violated."""
+violated.
+
+Below them, the log-store contract every commit rests on: a file in
+``_delta_log`` is visible in full or not at all, and exactly one writer
+wins each version."""
 
 from __future__ import annotations
 
@@ -154,3 +158,191 @@ def test_checkpoint_replays_an_empty_configuration_as_a_map(spark, tmp_path):
     with open(f"{path}/_delta_log/{1:020d}.json") as f:
         actions = [json.loads(line) for line in f]
     assert [a["metaData"]["configuration"] for a in actions if "metaData" in a] == [{}]
+
+
+def _adds(tag):
+    return [
+        {"add": {"path": f"{tag}-{i}.parquet", "partitionValues": {}, "size": 1,
+                 "modificationTime": 0, "dataChange": True}}
+        for i in range(50)
+    ]
+
+
+def _run_threads(*targets, timeout=300):
+    """Start one thread per target with a short switch interval (more
+    interleavings per run), join each with a timeout, and require that
+    all finished."""
+    import sys
+    import threading
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=t, daemon=True) for t in targets]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+
+
+def test_a_reader_never_replays_a_commit_in_part(tmp_path):
+    """A commit is visible in full or not at all: a thread replaying the
+    newest ``<v>.json`` while another commits 1,000 versions never reads
+    an empty or partial commit."""
+    import json
+    import os
+    import threading
+
+    log = str(tmp_path / "_delta_log")
+    os.makedirs(log)
+    done = threading.Event()
+    committed, replayed, torn = [], [], []
+
+    def writer():
+        try:
+            committed.extend(delta_mod._try_commit(log, v, _adds(v)) for v in range(1000))
+        finally:
+            done.set()
+
+    def reader():  # reads each version the moment its name appears
+        v = 0
+        while not done.is_set():
+            try:
+                with open(f"{log}/{v:020d}.json", "rb") as f:
+                    data = f.read()
+            except FileNotFoundError:
+                continue
+            try:
+                actions = [json.loads(line) for line in data.splitlines() if line.strip()]
+            except ValueError:
+                actions = []
+            replayed.append(v)
+            if len(actions) != 50:
+                torn.append(v)
+            v += 1
+
+    _run_threads(writer, reader)
+    assert committed == [True] * 1000
+    assert replayed
+    assert not torn, f"{len(torn)} of {len(replayed)} replayed commits torn"
+
+
+def test_exactly_one_writer_wins_each_version(spark, tmp_path):
+    """Two writers race ``_try_commit`` on a ``file:`` log for the same
+    versions: exactly one gets True per version, and the commit file
+    holds the winner's payload."""
+    import json
+    import os
+    import threading
+
+    log = tmp_path / "_delta_log"
+    os.makedirs(log)
+    versions = range(300)
+    barrier = threading.Barrier(2, timeout=60)
+    won: dict[str, list[bool]] = {"a": [], "b": []}
+
+    def writer(name):
+        for v in versions:
+            barrier.wait()
+            txn = [{"txn": {"appId": name, "version": v}}]
+            won[name].append(delta_mod._try_commit(f"file://{log}", v, txn))
+
+    _run_threads(lambda: writer("a"), lambda: writer("b"))
+    double, lost, wrong = [], [], []
+    for v in versions:
+        winners = [n for n in won if won[n][v]]
+        if len(winners) != 1:
+            (double if winners else lost).append(v)
+            continue
+        with open(log / f"{v:020d}.json") as f:
+            if [json.loads(line) for line in f] != [
+                {"txn": {"appId": winners[0], "version": v}}
+            ]:
+                wrong.append(v)
+    assert (double, lost, wrong) == ([], [], [])
+    assert not [n for n in os.listdir(log) if n.endswith(".tmp")]
+
+
+def test_concurrent_checkpoints_and_a_reader_do_not_fail(spark, tmp_path):
+    """Two threads checkpoint one table over and over while a third
+    replays it: every checkpoint and every ``_last_checkpoint`` rewrite
+    is published whole, so no call raises."""
+    import threading
+
+    path = str(tmp_path / "tbl")
+    delta_mod.write_delta(_rows(spark, [(0, 0)]), path)
+    delta_mod.write_delta(_rows(spark, [(1, 1)]), path)
+    done = threading.Event()
+    finished, errors = [], []
+
+    def checkpointer():
+        try:
+            for _ in range(40):
+                delta_mod.checkpoint_delta(spark, path)
+        except Exception as e:
+            errors.append(repr(e))
+        finally:
+            finished.append(True)
+            if len(finished) == 2:
+                done.set()
+
+    def reader():
+        while not done.is_set():
+            try:
+                if delta_mod.delta_snapshot(spark, path).version != 1:
+                    errors.append("wrong version")
+            except Exception as e:
+                errors.append(repr(e))
+
+    _run_threads(checkpointer, checkpointer, reader)
+    assert not errors, errors[:5]
+
+
+def test_a_temp_file_in_the_log_keeps_the_cached_snapshot(spark, tmp_path):
+    """The snapshot cache key holds only the files replay reads: a
+    writer's temp file in ``_delta_log`` returns the cached snapshot."""
+    path = str(tmp_path / "tbl")
+    delta_mod.write_delta(_rows(spark, [(0, 0)]), path)
+    snap = delta_mod.delta_snapshot(spark, path)
+    open(f"{path}/_delta_log/.{1:020d}.json.0123abcd.tmp", "w").close()
+    assert delta_mod.delta_snapshot(spark, path) is snap
+
+
+CREATES = {
+    "create_column_mapped": lambda spark, src, dst: delta_mod.write_delta_column_mapped(
+        _rows(spark, [(0, 0)]), dst
+    ),
+    "clone": lambda spark, src, dst: delta_mod.clone_delta(spark, src, dst),
+    "convert": lambda spark, src, dst: (
+        _rows(spark, [(0, 0)]).write.parquet(dst),
+        delta_mod.convert_to_delta(spark, dst),
+    ),
+}
+
+
+@pytest.mark.parametrize("create", list(CREATES))
+def test_a_create_that_loses_its_race_raises(spark, tmp_path, monkeypatch, create):
+    """The version-0 creates commit through ``_commit``: when another
+    writer creates the table first, each raises
+    ``ConcurrentDeltaModificationError`` and leaves the winner's commit."""
+    import json
+
+    src = str(tmp_path / "src")
+    delta_mod.write_delta(_rows(spark, [(0, 0)]), src)
+    dst = str(tmp_path / "dst")
+    real_try = delta_mod._try_commit
+    with open(f"{src}/_delta_log/{0:020d}.json") as f:
+        table = [a for a in map(json.loads, f) if "protocol" in a or "metaData" in a]
+    winner = [{"txn": {"appId": "winner", "version": 0}}] + table
+
+    def racing_try(log_dir, version, actions, operation=None):
+        assert real_try(log_dir, version, winner)
+        return real_try(log_dir, version, actions, operation)
+
+    monkeypatch.setattr(delta_mod, "_try_commit", racing_try)
+    with pytest.raises(delta_mod.ConcurrentDeltaModificationError):
+        CREATES[create](spark, src, dst)
+    assert delta_mod.delta_snapshot(spark, dst).app_versions == {"winner": 0}

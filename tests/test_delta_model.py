@@ -425,11 +425,10 @@ def test_restore_to_random_historic_version(spark, tmp_path, seed):
 
 
 def test_fs_routed_commit_file_uri_roundtrip(spark, tmp_path):
-    """The Hadoop-FS put-if-absent commit (temp write + rename-if-
-    absent — delta's HDFSLogStore algorithm): committing through an
-    explicit ``file:`` URI must land a commit the normal read path
-    replays, losing the version race must return False, and no temp
-    litter may remain in _delta_log."""
+    """Committing through an explicit ``file:`` URI strips it to the
+    POSIX path (temp write, then put-if-absent link): the commit must
+    land where the normal read path replays it, losing the version race
+    must return False, and no temp litter may remain in _delta_log."""
     import json
     import os
 
@@ -463,8 +462,8 @@ def test_fs_routed_commit_file_uri_roundtrip(spark, tmp_path):
 
 def test_fs_routed_commit_from_a_worker_thread(spark, tmp_path):
     """A serving thread did not create the session, and
-    ``getActiveSession()`` is None there: the Hadoop-FS commit must still
-    find the session and land."""
+    ``getActiveSession()`` is None there: a ``file:`` commit from such a
+    thread needs no session and must land."""
     import concurrent.futures
 
     from lakeapi_spark.sources.delta import _try_commit, delta_snapshot, write_delta
@@ -478,33 +477,26 @@ def test_fs_routed_commit_from_a_worker_thread(spark, tmp_path):
     assert delta_snapshot(spark, path).app_versions == {"worker": 7}
 
 
-def test_hadoop_fs_rename_refuses_existing_destination(spark, tmp_path):
-    """Pin the platform assumption _try_commit_fs's atomicity rests on:
-    ``FileSystem.rename`` onto an EXISTING destination must return
-    False and leave the destination byte-identical (Hadoop routes the
-    local scheme through nio ``Files.move`` without REPLACE_EXISTING).
-    The roundtrip test above never reaches this gate — its race-lost
-    call returns via the ``fs.exists`` fast-path — so two writers that
-    both pass the exists check are only kept from clobbering each
-    other by the semantics asserted here."""
-    from lakeapi_spark.sources.fs import _fs_and_path
+def test_try_commit_refuses_a_uri_scheme(monkeypatch):
+    """The fallback writer commits with POSIX primitives only: a log URI
+    that keeps a scheme after ``file:`` stripping is refused up front,
+    before any file system is touched — neither the local publish nor
+    the Hadoop FileSystem gateway, the way to a remote store."""
+    from lakeapi_spark.sources import delta as delta_mod
+    from lakeapi_spark.sources import fs as fs_mod
 
-    fs, dst = _fs_and_path(spark, f"file://{tmp_path}/dst.json")
-    out = fs.create(dst, False)
-    out.write(bytearray(b"winner"))
-    out.close()
-    _, src = _fs_and_path(spark, f"file://{tmp_path}/src.tmp")
-    out = fs.create(src, False)
-    out.write(bytearray(b"loser"))
-    out.close()
+    def touched(*args, **kwargs):
+        raise AssertionError("file system touched")
 
-    assert bool(fs.rename(src, dst)) is False  # put-if-absent holds
-    assert (tmp_path / "dst.json").read_bytes() == b"winner"
-    assert (tmp_path / "src.tmp").exists()  # loser's temp is intact for cleanup
+    monkeypatch.setattr(delta_mod, "_publish", touched)
+    monkeypatch.setattr(fs_mod, "_fs_and_path", touched)
+    txn = [{"txn": {"appId": "a", "version": 1}}]
+    with pytest.raises(NotImplementedError, match="URI scheme"):
+        delta_mod._try_commit("s3a://b/t/_delta_log", 1, txn)
 
 
 def test_write_delta_refuses_object_store_staging(spark, tmp_path):
-    """Data staging is POSIX-only (commit atomicity is FS-ported):
+    """Data staging is POSIX-only:
     a scheme-carrying table URI must refuse up front instead of
     littering a literal 's3a:...' directory on local disk; explicit
     file: URIs strip to POSIX and keep working."""

@@ -597,9 +597,11 @@ def test_request_validation_uses_no_assert():
 
 def test_delta_writers_commit_through_one_path():
     """Every delta commit goes through ``sources/delta.py:_commit``, the
-    one retry loop and staleness rule: only it and the three version-0
-    creates (which put their commit once) call ``_try_commit``, and no
-    other function calls a commit inside a loop."""
+    one retry loop and staleness rule: only it calls ``_try_commit``, and
+    no other function calls a commit inside a loop. Every commit,
+    checkpoint and ``_last_checkpoint`` lands through ``_publish``, the
+    only caller of ``os.link``; every other function that writes a file
+    writes data, deletion-vector or manifest files."""
     import ast
     import pathlib
 
@@ -617,9 +619,7 @@ def test_delta_writers_commit_through_one_path():
         )
 
     callers = {f.name for f in funcs if calls(f, "_try_commit")}
-    assert callers == {
-        "_commit", "write_delta_column_mapped", "clone_delta", "convert_to_delta"
-    }, callers
+    assert callers == {"_commit"}, callers
     retrying = {
         f.name
         for f in funcs
@@ -627,3 +627,30 @@ def test_delta_writers_commit_through_one_path():
         if isinstance(loop, (ast.For, ast.While)) and calls(loop, "_try_commit", "_commit")
     }
     assert retrying == {"_commit"}, retrying
+
+    def os_calls(node, *attrs):
+        return {
+            n.func.attr
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "os"
+            and n.func.attr in attrs
+        }
+
+    def writes(node):
+        opens = any(
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "open"
+            and len(n.args) > 1 and isinstance(n.args[1], ast.Constant)
+            and set(n.args[1].value) & set("wxa")
+            for n in ast.walk(node)
+        )
+        return opens or bool(os_calls(node, "link", "rename", "replace", "open"))
+
+    assert {f.name for f in funcs if os_calls(f, "link")} == {"_publish"}
+    assert {f.name for f in funcs if calls(f, "_publish")} == {"_try_commit", "checkpoint_delta"}
+    assert {f.name for f in funcs if writes(f)} == {
+        "_publish", "_stage_data_files", "delete_delta", "optimize_delta",
+        "generate_symlink_manifest",
+    }
