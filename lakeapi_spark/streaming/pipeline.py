@@ -444,6 +444,32 @@ def delta_merge_stream_sink(
     return write
 
 
+def _index_sink(
+    delta_path: str, index_path: str, app_id: str, checkpoint_every: int, build, refresh
+):
+    """The maintained-index stream loop: append the micro-batch through the
+    txn-marked :func:`lakeapi_spark.sources.delta.delta_stream_sink`, then
+    ``build(spark)`` the index if it has no ``meta`` yet, else
+    ``refresh(spark)`` it from the change feed. A redelivered batch is a
+    no-op end to end: the sink skips the append, the table version
+    doesn't move, and the refresh returns without touching the index."""
+    from lakeapi_spark.operators.incremental import _meta_path
+    from lakeapi_spark.sources.delta import delta_stream_sink
+    from lakeapi_spark.sources.fs import path_exists
+
+    sink = delta_stream_sink(delta_path, app_id, checkpoint_every=checkpoint_every)
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        sink(batch_df, batch_id)
+        spark = batch_df.sparkSession
+        # bootstrap probe goes through the Hadoop FileSystem, not
+        # os.path — a local-fs check is always False for s3a/abfss/hdfs
+        # index paths and would silently full-rebuild every micro-batch
+        (refresh if path_exists(spark, _meta_path(index_path)) else build)(spark)
+
+    return write
+
+
 def lsh_maintained_delta_sink(
     delta_path: str,
     index_path: str,
@@ -452,40 +478,62 @@ def lsh_maintained_delta_sink(
     app_id: str = "lsh-stream",
     checkpoint_every: int = 10,
 ):
-    """Near-dup index kept WARM under a live document stream: each
-    micro-batch appends to the delta table through
-    :func:`lakeapi_spark.sources.delta.delta_stream_sink` (txn-marked —
-    foreachBatch redelivery is skipped, so the table stays
-    exactly-once), then the MinHash-LSH index advances to the new table
+    """Near-dup index kept WARM under a live document stream
+    (:func:`_index_sink`): each micro-batch appends to the delta table
+    exactly-once, then the MinHash-LSH index advances to the new table
     version purely from the change feed
     (operators/incremental.lsh_index_refresh) — shingle + signature
     cost per micro-batch is BATCH-sized, and near-dup queries
     (lsh_index_pairs) stay served with zero text work between batches.
     The first batch bootstraps the index with a full build (also
-    batch-sized: the table is empty before it). A redelivered batch is
-    a no-op end to end: the sink skips the append, the table version
-    doesn't move, and refresh returns without touching the index."""
-    from lakeapi_spark.operators.incremental import (
-        lsh_index_build,
-        lsh_index_refresh,
+    batch-sized: the table is empty before it)."""
+    from lakeapi_spark.operators.incremental import lsh_index_build, lsh_index_refresh
+
+    return _index_sink(
+        delta_path, index_path, app_id, checkpoint_every,
+        lambda spark: lsh_index_build(spark, delta_path, index_path, id_col, text_col),
+        lambda spark: lsh_index_refresh(spark, delta_path, index_path, id_col, text_col),
     )
-    from lakeapi_spark.sources.delta import delta_stream_sink
+
+
+def _catch_up_sink(
+    delta_path: str, state_path: str, app_id: str, state_app: str, checkpoint_every: int,
+    bootstrap, step,
+):
+    """The maintained-state stream loop: append the micro-batch to the fact
+    table through the txn-marked sink, then bring the delta table at
+    ``state_path`` up to the fact table's latest version. Its commits
+    carry a txn marker (``state_app``) with the fact version they
+    reflect, so a redelivered batch returns early, and a crash between
+    the two writes leaves a version gap the next batch closes: the state
+    is ``bootstrap(fact pinned at latest)`` the first time, else
+    ``step(changes since the recorded version, previous state)``."""
+    from lakeapi_spark.sources.delta import (
+        delta_changes,
+        delta_snapshot,
+        delta_stream_sink,
+        last_txn_version,
+        read_delta,
+        write_delta,
+    )
 
     sink = delta_stream_sink(delta_path, app_id, checkpoint_every=checkpoint_every)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        from lakeapi_spark.operators.incremental import _lsh_meta_path
-        from lakeapi_spark.sources.fs import path_exists
-
-        sink(batch_df, batch_id)
         spark = batch_df.sparkSession
-        # bootstrap probe goes through the Hadoop FileSystem, not
-        # os.path — a local-fs check is always False for s3a/abfss/hdfs
-        # index paths and would silently full-rebuild every micro-batch
-        if not path_exists(spark, _lsh_meta_path(index_path)):
-            lsh_index_build(spark, delta_path, index_path, id_col, text_col)
+        sink(batch_df, batch_id)
+        latest = delta_snapshot(spark, delta_path).version
+        done_through = last_txn_version(spark, state_path, state_app)
+        if latest <= done_through:
+            return  # redelivery (or no fact movement): state current
+        if done_through < 0:
+            state = bootstrap(read_delta(spark, delta_path, {"versionAsOf": str(latest)}))
         else:
-            lsh_index_refresh(spark, delta_path, index_path, id_col, text_col)
+            ch = delta_changes(spark, delta_path, v_from=done_through, v_to=latest)
+            state = step(ch, read_delta(spark, state_path))
+        # overwrite + txn marker in ONE commit: idempotent under
+        # redelivery and crash-between-writes
+        write_delta(state, state_path, mode="overwrite", txn_app_id=state_app, txn_version=latest)
 
     return write
 
@@ -498,71 +546,32 @@ def agg_maintained_delta_sink(
     app_id: str = "agg-stream",
     checkpoint_every: int = 10,
 ):
-    """Materialized-aggregate-under-a-stream: each micro-batch appends
-    to the fact delta table through the txn-marked sink (exactly-once
-    under foreachBatch redelivery), then the materialized GROUP BY
-    table at ``agg_path`` advances by the INCREMENTAL refresh
-    (operators/incremental.cdf_agg_delta + refresh_agg) — signed
-    per-group deltas from the change feed since the last refreshed
-    version, applied to the previous aggregate state; refresh cost is
-    CHURN-sized, never fact-table-sized, and the result stays
-    bit-identical to a from-scratch recompute (DECIMAL sums). The
-    aggregate table is itself delta, its commits carrying a txn
-    marker with the refreshed-through fact version so a redelivered
-    batch (or a crash between the two writes) is detected and the
-    refresh re-runs idempotently from the recorded version. Aggregate
-    columns: ``n`` (row count) and ``sum_<col>`` per ``sum_cols``."""
+    """Materialized-aggregate-under-a-stream (:func:`_catch_up_sink`):
+    each micro-batch appends to the fact delta table exactly-once, then
+    the materialized GROUP BY table at ``agg_path`` advances by the
+    INCREMENTAL refresh (operators/incremental.cdf_agg_delta +
+    refresh_agg) — signed per-group deltas from the change feed since
+    the last refreshed version, applied to the previous aggregate state;
+    refresh cost is CHURN-sized, never fact-table-sized, and the result
+    stays bit-identical to a from-scratch recompute (DECIMAL sums). The
+    aggregate table's txn marker (app ``<app_id>-agg``) records the
+    refreshed-through fact version. Aggregate columns: ``n`` (row count)
+    and ``sum_<col>`` per ``sum_cols``."""
     from lakeapi_spark.operators.incremental import cdf_agg_delta, refresh_agg
-    from lakeapi_spark.sources.delta import (
-        delta_changes,
-        delta_snapshot,
-        delta_stream_sink,
-        last_txn_version,
-        read_delta,
-        write_delta,
-    )
 
-    sink = delta_stream_sink(delta_path, app_id, checkpoint_every=checkpoint_every)
-    agg_app = f"{app_id}-agg"
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sink(batch_df, batch_id)
-        latest = delta_snapshot(spark, delta_path).version
-        done_through = last_txn_version(spark, agg_path, agg_app)
-        if latest <= done_through:
-            return  # redelivery (or no fact movement): aggregate current
-        if done_through < 0:
-            # bootstrap: full aggregate of the fact table as of `latest`
-            base = read_delta(spark, delta_path, {"versionAsOf": str(latest)})
-            agg = base.groupBy(*keys).agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(
-                        F.col(c).cast("double").cast("decimal(28,10)")
-                    ).alias(f"sum_{c}")
-                    for c in sum_cols
-                ],
-            )
-        else:
-            ch = delta_changes(
-                spark, delta_path, v_from=done_through, v_to=latest
-            )
-            delta = cdf_agg_delta(ch, keys, sum_cols)
-            prev = read_delta(spark, agg_path)
-            agg = refresh_agg(prev, delta, keys, "n", sum_cols)
-        # overwrite + txn marker in ONE commit: the marker records the
-        # fact version this state reflects, making the refresh
-        # idempotent under redelivery and crash-between-writes
-        write_delta(
-            agg,
-            agg_path,
-            mode="overwrite",
-            txn_app_id=agg_app,
-            txn_version=latest,
+    def bootstrap(base: DataFrame) -> DataFrame:
+        return base.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.sum(F.col(c).cast("double").cast("decimal(28,10)")).alias(f"sum_{c}")
+                for c in sum_cols
+            ],
         )
 
-    return write
+    return _catch_up_sink(
+        delta_path, agg_path, app_id, f"{app_id}-agg", checkpoint_every, bootstrap,
+        lambda ch, prev: refresh_agg(prev, cdf_agg_delta(ch, keys, sum_cols), keys, "n", sum_cols),
+    )
 
 
 def ivf_maintained_delta_sink(
@@ -575,11 +584,9 @@ def ivf_maintained_delta_sink(
     checkpoint_every: int = 10,
 ):
     """ANN serving index kept WARM under a live embedding stream — the
-    IVF twin of :func:`lsh_maintained_delta_sink`: each micro-batch
-    appends through the txn-marked delta sink (exactly-once under
-    foreachBatch redelivery), then the IVF index advances from the
-    change feed (operators/incremental.ivf_index_refresh_delta) —
-    centroid assignment per micro-batch is BATCH-sized against the
+    IVF twin of :func:`lsh_maintained_delta_sink`: the IVF index advances
+    from the change feed (operators/incremental.ivf_index_refresh_delta)
+    — centroid assignment per micro-batch is BATCH-sized against the
     FROZEN first-batch quantizer, and top-k queries
     (ivf_index_topk_delta) stay served with zero corpus work between
     batches. ``centroid_ids`` seed the quantizer from the FIRST
@@ -589,24 +596,14 @@ def ivf_maintained_delta_sink(
         ivf_index_build_delta,
         ivf_index_refresh_delta,
     )
-    from lakeapi_spark.sources.delta import delta_stream_sink
 
-    sink = delta_stream_sink(delta_path, app_id, checkpoint_every=checkpoint_every)
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        from lakeapi_spark.operators.incremental import _lsh_meta_path
-        from lakeapi_spark.sources.fs import path_exists
-
-        sink(batch_df, batch_id)
-        spark = batch_df.sparkSession
-        if not path_exists(spark, _lsh_meta_path(index_path)):
-            ivf_index_build_delta(
-                spark, delta_path, index_path, id_col, vec_col, centroid_ids
-            )
-        else:
-            ivf_index_refresh_delta(spark, delta_path, index_path, id_col, vec_col)
-
-    return write
+    return _index_sink(
+        delta_path, index_path, app_id, checkpoint_every,
+        lambda spark: ivf_index_build_delta(
+            spark, delta_path, index_path, id_col, vec_col, centroid_ids
+        ),
+        lambda spark: ivf_index_refresh_delta(spark, delta_path, index_path, id_col, vec_col),
+    )
 
 
 def hll_maintained_delta_sink(
@@ -619,71 +616,40 @@ def hll_maintained_delta_sink(
     checkpoint_every: int = 10,
 ):
     """Windowed / grouped DISTINCT-COUNT under a live stream, kept as a
-    persisted HLL register table: each micro-batch appends to the fact
-    delta table through the txn-marked sink, then the batch's own
-    registers (sketches.hll_build over JUST the batch — churn-sized)
-    merge into the register table by groupBy(group, reg).max(mx). The
-    merge is idempotent (max is), and the register table's commit
-    carries a txn marker with the merged-through fact version, so a
-    redelivered batch is detected and skipped outright — the same
-    exactly-once discipline as agg_maintained_delta_sink, but the
-    state is a SKETCH: groups * 2^b rows forever, regardless of
-    distinct-key cardinality, and estimates from the maintained table
-    are BIT-EQUAL to a from-scratch batch sketch (tested property).
-    Append-only contract: deletes in the fact stream cannot shrink a
-    max-merged register (the standard HLL limitation — rebuild for
-    retention cuts). Estimate with sketches.hll_estimate over
-    ``read_delta(hll_path)``, grouping windows from the fact ts before
-    the stream (e.g. a tumbling-day column) like any other group."""
+    persisted HLL register table (:func:`_catch_up_sink`): each
+    micro-batch appends to the fact delta table exactly-once, then the
+    registers of the fact rows inserted since the merged-through version
+    (sketches.hll_build — churn-sized) merge into the register table by
+    groupBy(group, reg).max(mx). The merge is idempotent (max is), and
+    the register table's txn marker (app ``<app_id>-hll``) records the
+    merged-through fact version — the same exactly-once discipline as
+    agg_maintained_delta_sink, but the state is a SKETCH: groups * 2^b
+    rows forever, regardless of distinct-key cardinality, and estimates
+    from the maintained table are BIT-EQUAL to a from-scratch batch
+    sketch (tested property). Append-only contract: deletes in the fact
+    stream cannot shrink a max-merged register (the standard HLL
+    limitation — rebuild for retention cuts). Estimate with
+    sketches.hll_estimate over ``read_delta(hll_path)``, grouping
+    windows from the fact ts before the stream (e.g. a tumbling-day
+    column) like any other group."""
     from lakeapi_spark.operators.sketches import hll_build
-    from lakeapi_spark.sources.delta import (
-        delta_changes,
-        delta_snapshot,
-        delta_stream_sink,
-        last_txn_version,
-        read_delta,
-        write_delta,
-    )
 
-    sink = delta_stream_sink(delta_path, app_id, checkpoint_every=checkpoint_every)
-    hll_app = f"{app_id}-hll"
+    def regs(rows: DataFrame) -> DataFrame:
+        return hll_build(rows, key_col, tuple(group_cols), b=b)
 
-    def write(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sink(batch_df, batch_id)
-        latest = delta_snapshot(spark, delta_path).version
-        done_through = last_txn_version(spark, hll_path, hll_app)
-        if latest <= done_through:
-            return  # redelivery: registers already reflect this batch
-        if done_through >= 0:
-            # catch-up from the change feed, not the in-hand batch: a
-            # crash between the fact append and the register commit
-            # leaves a version gap the next trigger must close (the
-            # agg_maintained_delta_sink contract); inserts only — the
-            # fact stream is append-only here
-            ch = delta_changes(spark, delta_path, v_from=done_through, v_to=latest)
-            new_rows = ch.filter(F.col("_change_type") == "insert")
-        else:
-            new_rows = read_delta(spark, delta_path, {"versionAsOf": str(latest)})
-        batch_regs = hll_build(new_rows, key_col, tuple(group_cols), b=b)
-        if done_through >= 0:
-            prev = read_delta(spark, hll_path).select(*group_cols, "reg", "mx")
-            merged = (
-                prev.unionByName(batch_regs)
-                .groupBy(*group_cols, "reg")
-                .agg(F.max("mx").alias("mx"))
-            )
-        else:
-            merged = batch_regs
-        write_delta(
-            merged,
-            hll_path,
-            mode="overwrite",
-            txn_app_id=hll_app,
-            txn_version=latest,
+    def step(ch: DataFrame, prev: DataFrame) -> DataFrame:
+        # inserts only — the fact stream is append-only here
+        new = regs(ch.filter(F.col("_change_type") == "insert"))
+        return (
+            prev.select(*group_cols, "reg", "mx")
+            .unionByName(new)
+            .groupBy(*group_cols, "reg")
+            .agg(F.max("mx").alias("mx"))
         )
 
-    return write
+    return _catch_up_sink(
+        delta_path, hll_path, app_id, f"{app_id}-hll", checkpoint_every, regs, step
+    )
 
 
 class ProgressCapture:

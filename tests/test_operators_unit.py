@@ -1813,14 +1813,14 @@ def test_canary_hits_whitespace_normalized_copy(spark):
 @pytest.mark.soak
 def test_lsh_index_snapshot_retention(spark, tmp_path):
     """Each refresh writes a full v{N} snapshot; retention after the
-    meta flip keeps only the newest _LSH_RETAIN of them so index
+    meta flip keeps only the newest _RETAIN of them so index
     storage stays bounded under a continuous stream — and the live
     snapshot keeps serving the same pairs as a full rebuild."""
     import os
     import re
 
     from lakeapi_spark.operators.incremental import (
-        _LSH_RETAIN,
+        _RETAIN,
         lsh_index_build,
         lsh_index_pairs,
         lsh_index_refresh,
@@ -1853,7 +1853,7 @@ def test_lsh_index_snapshot_retention(spark, tmp_path):
     )
     live = lsh_index_version(spark, idx)
     assert live == 3
-    assert len(snaps) == _LSH_RETAIN and snaps[-1] == live  # old v* deleted
+    assert len(snaps) == _RETAIN and snaps[-1] == live  # old v* deleted
 
     full = str(tmp_path / "idx_full")
     lsh_index_build(spark, tbl, full, "doc_id", "text")
@@ -1921,7 +1921,7 @@ def test_ivf_index_refresh_equals_full_rebuild(spark, tmp_path):
     import numpy as np
 
     from lakeapi_spark.operators.incremental import (
-        _LSH_RETAIN,
+        _RETAIN,
         ivf_index_build_delta,
         ivf_index_refresh_delta,
         ivf_index_topk_delta,
@@ -1969,7 +1969,7 @@ def test_ivf_index_refresh_equals_full_rebuild(spark, tmp_path):
     assert 23 not in {t[1] for t in inc}  # deleted vector serves no neighbors
 
     snaps = [d for d in os.listdir(idx) if re.fullmatch(r"v\d+", d)]
-    assert len(snaps) <= _LSH_RETAIN  # retention shared with the LSH index
+    assert len(snaps) <= _RETAIN  # retention shared by every index
 
     # idempotent no-op when the table hasn't moved
     assert ivf_index_refresh_delta(spark, tbl, idx, "vec_id", "embedding") == (3, 0)
@@ -3235,37 +3235,99 @@ def test_weighted_k_core_strength_peel(spark):
         weighted_k_core(chain, s_min=2, max_iter=1)
 
 
+def _maintained_index(spark, kind):
+    """One maintained index behind a common face: ``row(i)`` makes a table
+    row (ids >= 100 near-duplicate doc ``i - 100``), ``build`` /
+    ``refresh`` / ``version`` call the index's public functions over
+    (doc_id, body), ``serve`` returns what it serves as a set, and
+    ``ids`` the doc ids in it."""
+    from functools import partial
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from lakeapi_spark.operators import incremental as inc
+
+    if kind == "ivf":
+        def row(i):
+            return (i, [float(x) for x in np.random.RandomState(i % 100).randn(8)])
+
+        schema = "doc_id long, body array<double>"
+        build = partial(
+            inc.ivf_index_build_delta, spark,
+            id_col="doc_id", vec_col="body", centroid_ids=[0, 1, 2, 3],
+        )
+        refresh, version = inc.ivf_index_refresh_delta, inc.ivf_index_version
+        queries = spark.createDataFrame([row(0), row(1), row(2)], schema)
+
+        def serve(idx):
+            out = inc.ivf_index_topk_delta(spark, idx, queries, "doc_id", "body", k=5)
+            return {tuple(r) for r in out.collect()}
+
+        def ids(served):
+            return {t[1] for t in served}
+    else:
+        base = " ".join(f"tok{i}" for i in range(30))
+
+        def row(i):
+            return (i, f"spark window {base} extra{i % 100}")
+
+        schema = "doc_id long, body string"
+        if kind == "lsh":
+            build = partial(inc.lsh_index_build, spark, id_col="doc_id", text_col="body")
+            refresh, version = inc.lsh_index_refresh, inc.lsh_index_version
+
+            def serve(idx):
+                return {tuple(r) for r in inc.lsh_index_pairs(spark, idx).collect()}
+
+            def ids(served):
+                return {i for p in served for i in p[:2]}
+        else:
+            build = partial(
+                inc.bm25_index_build_delta, spark, id_col="doc_id", text_col="body"
+            )
+            refresh, version = inc.bm25_index_refresh_delta, inc.bm25_index_version
+
+            def serve(idx):
+                out = inc.bm25_index_scores_delta(spark, idx, "spark window")
+                return {tuple(r) for r in out.collect()}
+
+            def ids(served):
+                return {t[0] for t in served}
+
+    return SimpleNamespace(
+        rows=lambda ids_: spark.createDataFrame([row(i) for i in ids_], schema),
+        build=build,
+        refresh=lambda tbl, idx: refresh(spark, tbl, idx, "doc_id", "body"),
+        version=lambda idx: version(spark, idx),
+        serve=serve,
+        ids=ids,
+    )
+
+
 @pytest.mark.soak
-def test_bm25_refresh_pins_read_to_recorded_version(spark, tmp_path, monkeypatch):
-    """Race guard: if a commit lands between the refresh's
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "bm25"])
+def test_index_refresh_pins_read_to_recorded_version(spark, tmp_path, monkeypatch, kind):
+    """Race guard: if commits land between the refresh's
     delta_snapshot() probe and its table read, the index must still
     contain exactly the rows of the version it RECORDS. Simulated by
-    capping the latest-version probe at v2 while the table is at v3:
-    the refreshed index must equal a full build at v2 — the v3 row
-    must NOT leak in."""
+    capping the latest-version probe at v2 while the table is at v4
+    (v3 deletes a doc v2 added, v4 appends another): the refreshed
+    index must equal a full build at v2 — the deleted doc stays, and
+    the v4 row must NOT leak in."""
     import lakeapi_spark.sources.delta as dsrc
-    from lakeapi_spark.operators.incremental import (
-        bm25_index_build_delta,
-        bm25_index_refresh_delta,
-        bm25_index_scores_delta,
-        bm25_index_version,
-    )
-    from lakeapi_spark.sources.delta import write_delta
+    from lakeapi_spark.sources.delta import delete_delta, write_delta
 
-    rows = [(i, f"spark window doc{i}") for i in range(10)]
-    tbl = str(tmp_path / "docs")
+    ix = _maintained_index(spark, kind)
+    tbl, idx = str(tmp_path / "docs"), str(tmp_path / "idx")
     write_delta(
-        spark.createDataFrame(rows, "doc_id long, text string"),
-        tbl,
-        configuration={"delta.enableChangeDataFeed": "true"},
+        ix.rows(range(10)), tbl, configuration={"delta.enableChangeDataFeed": "true"}
     )
-    idx = str(tmp_path / "idx")
-    bm25_index_build_delta(spark, tbl, idx, "doc_id", "text")  # v0
-
-    schema = "doc_id long, text string"
-    write_delta(spark.createDataFrame([(100, "spark window one")], schema), tbl)  # v1
-    write_delta(spark.createDataFrame([(101, "spark window two")], schema), tbl)  # v2
-    write_delta(spark.createDataFrame([(102, "spark window three")], schema), tbl)  # v3
+    ix.build(tbl, idx)  # v0
+    write_delta(ix.rows([100]), tbl)  # v1: near-duplicate of doc 0
+    write_delta(ix.rows([101]), tbl)  # v2: near-duplicate of doc 1
+    delete_delta(spark, tbl, "doc_id = 101")  # v3
+    write_delta(ix.rows([102]), tbl)  # v4: near-duplicate of doc 2
 
     real = dsrc.delta_snapshot
 
@@ -3275,17 +3337,75 @@ def test_bm25_refresh_pins_read_to_recorded_version(spark, tmp_path, monkeypatch
         return real(spark_, uri_, 2)  # latest-probe sees only v2
 
     monkeypatch.setattr(dsrc, "delta_snapshot", stale_probe)
-    v, n_touched = bm25_index_refresh_delta(spark, tbl, idx, "doc_id", "text")
-    assert (v, bm25_index_version(spark, idx)) == (2, 2)
-    assert n_touched == 2  # docs 100, 101 — NOT 102
+    assert ix.refresh(tbl, idx) == (2, 2)  # docs 100, 101 — NOT 102
+    assert ix.version(idx) == 2
     monkeypatch.undo()
 
     full = str(tmp_path / "idx_full")
-    bm25_index_build_delta(spark, tbl, full, "doc_id", "text", version=2)
-    inc = {tuple(r) for r in bm25_index_scores_delta(spark, idx, "spark window").collect()}
-    ful = {tuple(r) for r in bm25_index_scores_delta(spark, full, "spark window").collect()}
-    assert inc == ful and len(inc) > 0
-    assert 102 not in {t[0] for t in inc}  # the raced commit stayed out
+    ix.build(tbl, full, version=2)
+    inc, ful = ix.serve(idx), ix.serve(full)
+    assert inc == ful and {100, 101} <= ix.ids(inc)
+    assert 102 not in ix.ids(inc)  # the raced commits stayed out
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "bm25"])
+def test_index_refresh_crash_leaves_old_version_live(spark, tmp_path, monkeypatch, kind):
+    """A refresh that fails while a relation of the new v{N} is being
+    written leaves ``meta`` at the old version: the index keeps serving
+    the old result, the refresh's persisted frames are released, and
+    the next refresh completes over the partial v{N} it left behind."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from lakeapi_spark.sources.delta import write_delta
+
+    ix = _maintained_index(spark, kind)
+    tbl, idx = str(tmp_path / "docs"), str(tmp_path / "idx")
+    write_delta(
+        ix.rows(range(10)), tbl, configuration={"delta.enableChangeDataFeed": "true"}
+    )
+    ix.build(tbl, idx)
+    before = ix.serve(idx)
+    write_delta(ix.rows([100]), tbl)  # v1
+
+    real = DataFrameWriter.parquet
+    new_snapshot = os.path.join(idx, "v1")
+    written = []
+
+    def crash_on_second_relation(self, path, *args, **kwargs):
+        if path.startswith(new_snapshot):
+            written.append(path)
+            if len(written) == 2:  # a relation half-written, then the crash
+                os.makedirs(path, exist_ok=True)
+                with open(os.path.join(path, "part-00000-partial.parquet"), "wb") as f:
+                    f.write(b"PAR1")
+                raise RuntimeError("injected write failure")
+        return real(self, path, *args, **kwargs)
+
+    persisted = []
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    real_persist = frame_cls.persist
+
+    def spy_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_second_relation)
+    monkeypatch.setattr(frame_cls, "persist", spy_persist)
+    with pytest.raises(RuntimeError, match="injected"):
+        ix.refresh(tbl, idx)
+    monkeypatch.undo()
+
+    assert len(written) == 2 and ix.version(idx) == 0
+    assert ix.serve(idx) == before
+    levels = [df.storageLevel for df in persisted]
+    assert levels and not any(lv.useMemory or lv.useDisk for lv in levels)
+
+    assert ix.refresh(tbl, idx) == (1, 1)
+    full = str(tmp_path / "idx_full")
+    ix.build(tbl, full)
+    assert ix.serve(idx) == ix.serve(full) and 100 in ix.ids(ix.serve(idx))
 
 
 def test_lsh_quality_report_sampled_equals_prefiltered(spark):

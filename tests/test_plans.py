@@ -654,3 +654,51 @@ def test_delta_writers_commit_through_one_path():
         "_publish", "_stage_data_files", "delete_delta", "optimize_delta",
         "generate_symlink_manifest",
     }
+
+
+def test_maintained_indexes_share_one_store_and_one_refresh():
+    """The three maintained indexes of ``operators/incremental.py`` (LSH,
+    IVF, BM25) share one store and one change-feed refresh: only
+    ``_meta_path`` names the ``meta`` relation, exactly one function
+    writes that path and calls the retention (``_write``, the store's
+    writer), and exactly one function calls ``delta_changes``
+    (``_refresh``)."""
+    import ast
+    import pathlib
+
+    import lakeapi_spark
+
+    source = pathlib.Path(lakeapi_spark.__file__).parent / "operators" / "incremental.py"
+    funcs = [
+        n for n in ast.walk(ast.parse(source.read_text())) if isinstance(n, ast.FunctionDef)
+    ]
+
+    def calls(node, name):
+        return any(
+            isinstance(n, ast.Call)
+            and (
+                (isinstance(n.func, ast.Name) and n.func.id == name)
+                or (isinstance(n.func, ast.Attribute) and n.func.attr == name)
+            )
+            for n in ast.walk(node)
+        )
+
+    def writes_meta(node):  # `<...>.write<...>.parquet(_meta_path(...))`
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "parquet"
+            and any(calls(a, "_meta_path") for a in n.args)
+            and any(isinstance(m, ast.Attribute) and m.attr == "write" for m in ast.walk(n.func))
+            for n in ast.walk(node)
+        )
+
+    names_meta = {
+        f.name
+        for f in funcs
+        if any(isinstance(n, ast.Constant) and n.value == "meta" for n in ast.walk(f))
+    }
+    assert names_meta == {"_meta_path"}, names_meta
+    assert {f.name for f in funcs if writes_meta(f)} == {"_write"}
+    assert {f.name for f in funcs if calls(f, "_retain_snapshots")} == {"_write"}
+    assert {f.name for f in funcs if calls(f, "delta_changes")} == {"_refresh"}
